@@ -1,57 +1,53 @@
-"""Banded fuzzy argmax join — exact Levenshtein-ratio best match,
-faster than the naive all-pairs scoring.
+"""Fuzzy argmax join — per left value, the right value with the highest
+Levenshtein ratio, exact, from one bit-parallel Arrow kernel.
 
 The reference's conflict resolution (update_reads.py:166-181) and any
-X12-class "best fuzzy match" picks, per left row, the right row
-maximizing ``ratio = 100·(|a|+|b|-lev)/(|a|+|b|)``. Scoring every
-pair with full Levenshtein is O(|a|·|b|) per pair; Spark's
-``levenshtein(a, b, threshold)`` runs a banded DP that early-exits
-once distance exceeds the threshold (O(threshold·n) per pair — 4×
-faster at small bands).
+X12-class "best fuzzy match" pick, per left row, the right row
+maximizing ``ratio = 100·(|a|+|b|-lev)/(|a|+|b|)``.
 
-Two-pass exactness: pass 1 scores only pairs with ``lev <= band``.
-Any pruned pair satisfies ``ratio < 100·(|a|+R-band-1)/(|a|+R)``
-where R is the max right-side length (ratio is increasing in |b| for
-fixed lev floor). A left row whose banded best strictly beats that
-bound cannot be improved by any pruned pair — proven exact. The rest
-(usually none, worst-case all) fall back to full scoring, so results
-are ALWAYS exact; the band only controls how much work pass 1 saves.
+The right side is dimension-sized: collected once, deduplicated on the
+driver and shipped inside the kernel's closure as an alphabet-index
+matrix plus a length vector. The left side streams through ONE
+``mapInPandas`` kernel, which runs Myers' bit-vector edit distance
+(J. ACM 1999, in Hyyrö's formulation) from each distinct left value
+(the pattern) to every right value at once: one word of vertical
+deltas per pair and one vectorized step per right-side character. The
+distance is exact, so there is no band, blocking or fallback pass to
+prove safe. Patterns past 64 code points run the same recurrence on
+``object`` arrays of Python ints.
 
-Blocking (``length_window=L``): pass 1 considers only pairs with
-``abs(len(a) - len(b)) <= L``, generated as an EQUI-join (left rows
-explode to the 2L+1 length keys they accept; right rows carry their
-length as the key) instead of a cross join. The proof extends: an
-out-of-window pair has ``lev >= |Δlen| > L``, an in-window pruned
-pair has ``lev > band``, so every pruned pair has
-``lev > min(band, L)`` and the same bound applies with
-``min(band, L)``. At scale this turns the candidate stage into a
-shuffle equi-join whose size tracks the length histogram overlap —
-superlinear shrinkage on realistic name corpora. On fixed-width
-corpora (all lengths equal, e.g. zero-padded ids) the window keeps
-every pair and only adds overhead: leave it off there (measured on
-x12: see queries/relational.py).
+The kernel emits only the pairs within one rounding step (0.001) of
+the pattern's best exact ratio: every pair that may tie the best after
+the 3-decimal rounding. The final pick is the oracle's own Spark
+expressions: ``_score`` rounds, ``_argmax`` keeps the highest ratio,
+ties going to the smallest right value.
+
+Nulls: null right values are dropped. A null left value yields one row
+with the smallest right value and a null ratio, as the all-pairs form
+ordered ``ratio DESC NULLS LAST, right`` gives.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["fuzzy_argmax_join", "resolve_length_window"]
+__all__ = ["fuzzy_argmax_join"]
 
-
-def resolve_length_window(
-    l_min: int, l_max: int, r_min: int, r_max: int, band: int
-) -> int | None:
-    """The "auto" blocking decision, as a pure function of the length
-    ranges. Blocking prunes exactly the pairs whose length gap exceeds
-    the window; with window = band the pass-1 safety bound is
-    unchanged (eff = min(band, window) = band). So: block iff some
-    pair's length gap CAN exceed band, else the window would prune
-    nothing and the banded broadcast cross join is strictly cheaper.
-    """
-    some_pair_prunable = (r_max - l_min > band) or (l_max - r_min > band)
-    return band if some_pair_prunable else None
+#: pairs per vectorized step: (patterns in a block) × (right values)
+_BLOCK_PAIRS = 1 << 15
+#: ratios are rounded to 3 decimals; a pair whose exact ratio is this
+#: close to the best may tie it after rounding, so the kernel keeps it
+_TIE_SLACK = 1e-3 + 1e-9
+_M1, _M2, _M4, _H01 = map(
+    np.uint64,
+    (0x5555555555555555, 0x3333333333333333, 0x0F0F0F0F0F0F0F0F, 0x0101010101010101),
+)
 
 
 def _score(left_col: str, right_col: str, lev):
@@ -69,140 +65,143 @@ def _argmax(scored: DataFrame, left_col: str, right_col: str) -> DataFrame:
             F.struct(right_col, "ratio"),
             F.struct((-F.col("ratio")).alias("o1"), F.col(right_col).alias("o2")),
         ).alias("__best"),
-        F.max("ratio").alias("__best_ratio"),
     )
 
 
+def _myers_block(
+    patterns: list[str],
+    alphabet: dict[str, int],
+    codes: np.ndarray,
+    lens: np.ndarray,
+    active: np.ndarray,
+    dtype,
+) -> np.ndarray:
+    """Levenshtein distance of every pattern to every right value:
+    a ``(len(patterns), n_right)`` int array.
+
+    ``codes[j, i]`` is the alphabet index of right value i's j-th
+    character; right values are sorted longest first, so at step j
+    only the first ``active[j]`` of them still have characters.
+    ``dtype`` is ``np.uint64`` when every pattern fits in one word,
+    else ``object`` (Python ints)."""
+    b, n_right = len(patterns), codes.shape[1]
+    m = [len(p) for p in patterns]
+    peq = [[0] * len(alphabet) for _ in patterns]
+    for r, p in enumerate(patterns):
+        for i, ch in enumerate(p):
+            a = alphabet.get(ch)
+            if a is not None:
+                peq[r][a] |= 1 << i
+    peq = np.array(peq, dtype=dtype).reshape(b, len(alphabet))
+    full = np.array([(1 << k) - 1 for k in m], dtype=dtype)[:, None]
+    pv = np.repeat(full, n_right, 1)
+    mv = np.zeros((b, n_right), dtype=dtype)
+    for j, k in enumerate(active):
+        eq = np.take(peq, codes[j, :k], axis=1, mode="clip")
+        p, n = pv[:, :k], mv[:, :k]
+        xv = eq | n
+        xh = eq & p
+        xh += p
+        xh ^= p
+        xh |= eq
+        ph = xh | p
+        np.invert(ph, out=ph)
+        ph |= n
+        mh = p & xh
+        ph <<= 1
+        ph |= 1
+        mh <<= 1
+        np.bitwise_or(xv, ph, out=p)
+        np.invert(p, out=p)
+        p |= mh
+        np.bitwise_and(ph, xv, out=n)
+    # D[m][n] = D[0][n] + the last column's vertical deltas: +1 per
+    # pv bit, -1 per mv bit, within the pattern's m bits
+    pv &= full
+    mv &= full
+    return lens + _popcount(pv) - _popcount(mv)
+
+
+def _popcount(words: np.ndarray) -> np.ndarray:
+    if words.dtype == object:
+        return np.frompyfunc(int.bit_count, 1, 1)(words).astype(np.int64)
+    # SWAR bit count of each uint64 word
+    x = words - ((words >> 1) & _M1)
+    x = (x & _M2) + ((x >> 2) & _M2)
+    x = (x + (x >> 4)) & _M4
+    return ((x * _H01) >> 56).astype(np.int64)
+
+
+def _best_pairs_kernel(rvals: set[str], left_col: str, right_col: str):
+    """The ``mapInPandas`` function: (left) batches in, the
+    (left, right, lev) pairs that may win each left value's argmax out."""
+    order = sorted(rvals, key=lambda s: (-len(s), s))
+    right = np.array(order, dtype=object)
+    lens = np.array([len(s) for s in order], dtype=np.int64)
+    alphabet = {ch: i for i, ch in enumerate(sorted({c for s in order for c in s}))}
+    width = int(lens[0])
+    codes = np.zeros((width, len(order)), dtype=np.min_scalar_type(len(alphabet)))
+    for i, s in enumerate(order):
+        codes[: len(s), i] = [alphabet[c] for c in s]
+    active = (lens[None, :] > np.arange(width)[:, None]).sum(axis=1)
+    smallest = min(order)
+    block = max(1, _BLOCK_PAIRS // len(order))
+
+    def pairs(patterns: list[str], dtype) -> pd.DataFrame:
+        lev = _myers_block(patterns, alphabet, codes, lens, active, dtype)
+        tot = np.array([len(p) for p in patterns], dtype=np.int64)[:, None] + lens
+        with np.errstate(invalid="ignore", divide="ignore"):
+            ratio = np.where(tot == 0, 100.0, 100.0 * (tot - lev) / tot)
+        r, c = np.nonzero(ratio >= ratio.max(axis=1, keepdims=True) - _TIE_SLACK)
+        return pd.DataFrame(
+            {
+                left_col: np.array(patterns, dtype=object)[r],
+                right_col: right[c],
+                "__lev": lev[r, c],
+            }
+        )
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            vals = pdf[left_col].drop_duplicates()
+            if vals.isna().any():
+                yield pd.DataFrame(
+                    {left_col: [None], right_col: [smallest], "__lev": [None]}
+                )
+            vals = vals.dropna().tolist()
+            for dtype, group in (
+                (np.uint64, [v for v in vals if len(v) <= 64]),
+                (object, [v for v in vals if len(v) > 64]),
+            ):
+                for s in range(0, len(group), block):
+                    yield pairs(group[s : s + block], dtype)
+
+    return op
+
+
 def fuzzy_argmax_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    *,
-    band: int = 6,
-    length_window: int | None | str = "auto",
+    left: DataFrame, right: DataFrame, left_col: str, right_col: str
 ) -> DataFrame:
     """For each distinct ``left_col`` value, the ``right_col`` value
     with the highest Levenshtein ratio (ties → lexicographically
     smallest right value). Output: (left_col, right_col, ratio).
 
-    ``right`` is broadcast — it must be dimension-sized. Exact for any
-    ``band``; tune ``band`` near the expected best-match distance.
-    ``length_window=L`` additionally blocks pass-1 candidates to pairs
-    within L of each other in length via an equi-join on length keys
-    (see module docstring for the proof); exact for any L.
-
-    ``length_window="auto"`` (the default) picks the blocking strategy
-    from a cheap length sniff — min/max of ``length(col)`` on each
-    side (the right agg is needed for the exactness bound anyway; the
-    left adds one column-pruned scan). Blocking can only prune a pair
-    whose length gap exceeds the window, so if the joint length-gap
-    range never exceeds ``band`` (e.g. both sides fixed-width — the
-    uniform zero-padded-id corpus where every generic blocking scheme
-    degenerates), blocking is pure overhead and the banded broadcast
-    cross join is kept; otherwise the window is set to ``band``
-    itself, which maximizes pruning WITHOUT weakening the pass-1
-    safety bound (eff = min(band, L) stays = band). One code path
-    serves both corpus shapes.
-    """
-    lf = left.select(left_col)
-    rf = right.select(right_col)
-
-    if length_window == "auto":
-        # ONE sniff job for both sides (union + conditional min/max),
-        # not one agg job per side: at report scale the second job's
-        # fixed scheduling cost dominated (x12b 0.88→1.53 s in r3's
-        # two-job version); at 100 TB both scans stay column-pruned.
-        l_min, l_max, r_min, r_max = (
-            lf.select(F.length(left_col).alias("n"), F.lit(True).alias("l"))
-            .unionByName(
-                rf.select(F.length(right_col).alias("n"), F.lit(False).alias("l"))
-            )
-            .agg(
-                F.min(F.when(F.col("l"), F.col("n"))),
-                F.max(F.when(F.col("l"), F.col("n"))),
-                F.min(F.when(~F.col("l"), F.col("n"))),
-                F.max(F.when(~F.col("l"), F.col("n"))),
-            )
-            .head()
-        )
-        if r_max is None:
-            raise ValueError("right side is empty")
-        if l_max is None:
-            raise ValueError("left side is empty")
-        length_window = resolve_length_window(l_min, l_max, r_min, r_max, band)
-    else:
-        r_min, r_max = rf.agg(
-            F.min(F.length(right_col)), F.max(F.length(right_col))
-        ).head()
-        if r_max is None:
-            raise ValueError("right side is empty")
-
-    if length_window is None:
-        cand = lf.crossJoin(F.broadcast(rf))
-        eff = band
-    else:
-        # equi-join blocking: each left row accepts 2L+1 length keys,
-        # each right row carries one — candidate volume tracks the
-        # length-histogram overlap instead of |L|×|R|
-        lw = int(length_window)
-        lkeys = lf.select(
-            left_col,
-            F.explode(
-                F.sequence(
-                    F.greatest(F.length(left_col) - lw, F.lit(0)),
-                    F.length(left_col) + lw,
-                )
-            ).alias("__blk"),
-        )
-        rkeys = rf.select(right_col, F.length(right_col).alias("__blk"))
-        cand = lkeys.join(F.broadcast(rkeys), "__blk").drop("__blk")
-        eff = min(band, lw)
-
-    lev_b = F.levenshtein(left_col, right_col, band)
-    # pruned pairs map to a -1 sentinel instead of being filtered out:
-    # a filter on lev would re-evaluate the levenshtein (predicate and
-    # projection are separate codegen operators — no CSE across them),
-    # doubling the dominant cost; inside ONE projection the when()
-    # shares a single evaluation. Sentinel rows can only win the argmax
-    # when every pair is pruned, which fails the safety bound anyway.
-    banded = cand.select(
-        left_col,
-        right_col,
-        F.when(lev_b >= 0, _score(left_col, right_col, lev_b))
-        .otherwise(F.lit(-1.0))
-        .alias("ratio"),
+    ``right`` must be dimension-sized: its distinct non-null values
+    are collected to the driver (the build's one Spark job) and ride
+    to the executors inside the kernel. Exact for every input; see the
+    module docstring."""
+    rvals = {r[0] for r in right.select(right_col).collect()} - {None}
+    if not rvals:
+        raise ValueError("right side is empty")
+    cand = left.select(left_col).mapInPandas(
+        _best_pairs_kernel(rvals, left_col, right_col),
+        schema=f"`{left_col}` string, `{right_col}` string, __lev int",
     )
-    # checkpoint: p1 (one row per left value) feeds BOTH the safe
-    # output and the unsafe anti-join — without it the banded cross
-    # join re-executes once per branch. localCheckpoint (not persist):
-    # persist registers in the CacheManager keyed on plan equality, so
-    # a later identical call would silently serve the stale cache.
-    p1 = _argmax(banded, left_col, right_col).localCheckpoint(eager=False)
-
-    # pruned pairs (lev > eff, whether banded-out or out-of-window)
-    # have exact ratio < this bound; their 3-decimal rounding adds at
-    # most 0.0005 — strict margin covers it
-    ll = F.length(left_col)
-    bound = 100.0 * (ll + r_max - (eff + 1)) / (ll + r_max)
-    safe = p1.where(F.col("__best_ratio") > bound + 0.001)
-
-    unsafe = lf.distinct().join(safe.select(left_col), left_col, "left_anti")
-    full = unsafe.crossJoin(F.broadcast(rf))
-    lev = F.levenshtein(left_col, right_col)
-    p2 = _argmax(
-        full.select(
-            left_col, right_col, _score(left_col, right_col, lev).alias("ratio")
-        ),
-        left_col,
-        right_col,
+    scored = cand.select(
+        left_col, right_col, _score(left_col, right_col, F.col("__lev")).alias("ratio")
     )
-
-    return (
-        safe.unionByName(p2)
-        .select(
-            left_col,
-            F.col("__best").getField(right_col).alias(right_col),
-            F.col("__best").getField("ratio").alias("ratio"),
-        )
+    return _argmax(scored, left_col, right_col).select(
+        left_col,
+        F.col("__best").getField(right_col).alias(right_col),
+        F.col("__best").getField("ratio").alias("ratio"),
     )

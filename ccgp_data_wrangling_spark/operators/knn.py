@@ -185,17 +185,23 @@ def _srp_hit_kernel(
     )  # (n_tables*n_bits, dim)
     weights = (2 ** np.arange(n_bits - 1, -1, -1)).astype(np.int64)
     qb = np.asarray(q_buckets, dtype=np.int64)
+    dim = P.shape[-1]
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
-                yield pdf
-                continue
-            V = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col].to_numpy()]
+            vecs = pdf[vec_col].to_numpy()
+            # the Column carriers read a null or wrong-length vector's
+            # dot products as null, hence every bit 0: bucket 0 in
+            # every table. Mask those rows out of the matmul to match.
+            ok = np.fromiter(
+                (v is not None and len(v) == dim for v in vecs), bool, len(vecs)
             )
-            bits = (V @ P.T >= 0).reshape(len(pdf), n_tables, n_bits)
-            bkts = bits @ weights  # (n, n_tables) int64
+            bkts = np.zeros((len(pdf), n_tables), dtype=np.int64)
+            if ok.any():
+                V = np.stack([np.asarray(x, dtype=np.float64) for x in vecs[ok]])
+                # ~(dot < 0), not dot >= 0: Spark orders NaN above 0
+                bits = ~(V @ P.T < 0)
+                bkts[ok] = bits.reshape(-1, n_tables, n_bits) @ weights
             yield pdf[(bkts == qb).any(axis=1)]
 
     return src.mapInPandas(op, schema=src.schema)

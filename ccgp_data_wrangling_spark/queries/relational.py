@@ -487,31 +487,20 @@ FROM (
 
 @register("x12_fuzzy_best_match", _X12_SQL)
 def x12_fuzzy_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Routed through the banded two-pass argmax (operators/fuzzy.py):
-    # at band=6 the exactness bound (80.5 for 18-char names) sits below
-    # the typical best ratio (86.1 — the same-number customer), so pass
-    # 1's banded Levenshtein (O(band·n) per pair) certifies nearly every
-    # supplier and the full-DP fallback is ~empty. Measured at sf0.1 on
-    # local[32], warm: banded 2.5 s vs plain cross join 3.2 s.
-    # length_window="auto" (the operator default) sniffs the length
-    # histograms and keeps blocking OFF here: these names are all
-    # fixed-width 18 chars, so every row would share one length key
-    # and the candidate equi-join degenerates into a single-task hot
-    # bucket (measured 61 s explicit-window vs 2.5 s banded). The pair
-    # space itself is irreducible on this corpus — uniform zero-padded
-    # ids defeat every generic exact blocking scheme (q-grams collapse
-    # on '000…', PassJoin segments ditto) — so the broadcast
-    # nested-loop stays, with the banded early-exit cutting per-pair
-    # cost. The SAME call on a variable-length corpus auto-selects the
-    # equi-join (x12b_blocked_fuzzy_match below).
-    # repartition the streamed side: the cross join otherwise inherits
-    # the small side's single input partition.
+    # One bit-parallel Levenshtein kernel (operators/fuzzy.py): the
+    # customer names ride into it, the supplier names stream through
+    # it, and every pair's exact distance is computed there, so the
+    # plan has no pair join. These names are fixed-width 18-char
+    # zero-padded ids, on which no generic exact blocking prunes a pair
+    # (q-grams and PassJoin segments collapse on '000…'); the kernel
+    # does not need any. Repartition the streamed side: the kernel
+    # otherwise inherits the small table's single input partition.
     from ccgp_data_wrangling_spark.operators.fuzzy import fuzzy_argmax_join
 
     par = spark.sparkContext.defaultParallelism
     supp = load_table(spark, sf_dir, "supplier").select("s_name").repartition(par)
     cust = load_table(spark, sf_dir, "customer").select("c_name")
-    return fuzzy_argmax_join(supp, cust, "s_name", "c_name", band=6).select(
+    return fuzzy_argmax_join(supp, cust, "s_name", "c_name").select(
         "s_name",
         F.col("c_name").alias("best_customer"),
         "ratio",
@@ -519,16 +508,12 @@ def x12_fuzzy_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X12 scale path: the same best-fuzzy-match semantics through the
-# BLOCKED banded argmax operator (operators/fuzzy.py length_window) on
-# a variable-length corpus, where length blocking actually
-# discriminates. Left = "name type" part labels, right = the
-# word-swapped "type name" forms (the classic field-order-variant
-# matching case) — disjoint by construction at every SF (types are
-# uppercase, names lowercase), so every best match is a true fuzzy
-# neighbor. The pass-1 candidate stage is an equi-join on length keys —
-# no CartesianProduct — and the fallback proof keeps the result exact
-# (verified against the all-pairs oracle).
+# X12 on a variable-length corpus: the same best-fuzzy-match operator
+# on part labels. Left = "name type" labels, right = the word-swapped
+# "type name" forms (the classic field-order-variant matching case) —
+# disjoint by construction at every SF (types are uppercase, names
+# lowercase), so every best match is a true fuzzy neighbor. Verified
+# against the all-pairs oracle.
 # ---------------------------------------------------------------------------
 
 _X12B_SQL = """
@@ -562,13 +547,8 @@ def x12b_blocked_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     left = part.select(
         F.concat_ws(" ", "p_name", "p_type").alias("left_label")
     ).distinct()
-    right = part.select(
-        F.concat_ws(" ", "p_type", "p_name").alias("best_label")
-    ).distinct()
-    # length_window="auto" sniffs the variable length histogram here
-    # and selects the equi-join blocking path (window = band) — the
-    # same one-code-path call as x12, opposite physical plan
-    return fuzzy_argmax_join(left, right, "left_label", "best_label", band=8)
+    right = part.select(F.concat_ws(" ", "p_type", "p_name").alias("best_label"))
+    return fuzzy_argmax_join(left, right, "left_label", "best_label")
 
 
 # ---------------------------------------------------------------------------

@@ -31,6 +31,7 @@ def get_spark(
       * AQE on: coalesce post-shuffle partitions, split skewed joins
       * UTC timezone (oracle comparison + determinism)
       * Arrow enabled for the pandas-UDF slow path
+      * no console progress bars: stage bars would fill stdout
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -53,6 +54,7 @@ def get_spark(
         # vectorized reader rejects; read as long and convert in catalog
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     if extra_conf:

@@ -1,10 +1,12 @@
-"""Tests for the banded fuzzy argmax join (operators/fuzzy.py)."""
+"""Tests for the bit-parallel fuzzy argmax join (operators/fuzzy.py)."""
 
 from __future__ import annotations
 
 import random
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -13,13 +15,15 @@ from ccgp_data_wrangling_spark.operators.fuzzy import fuzzy_argmax_join
 
 
 def _brute(spark, left, right):
+    """All-pairs Spark SQL reference: exact ratio, best first, ties to
+    the smallest right value, null ratios and null right values last."""
     cross = left.crossJoin(right)
     tot = F.length("l") + F.length("r")
     ratio = F.when(tot == 0, F.lit(100.0)).otherwise(
         F.round(100.0 * (tot - F.levenshtein("l", "r")) / tot, 3)
     )
     scored = cross.select("l", "r", ratio.alias("ratio"))
-    w = W.partitionBy("l").orderBy(F.desc("ratio"), F.asc("r"))
+    w = W.partitionBy("l").orderBy(F.desc_nulls_last("ratio"), F.asc_nulls_last("r"))
     return {
         (row.l): (row.r, row.ratio)
         for row in scored.withColumn("rn", F.row_number().over(w))
@@ -28,115 +32,150 @@ def _brute(spark, left, right):
     }
 
 
-@pytest.mark.parametrize("band", [1, 4, 20])
-def test_matches_brute_force_any_band(spark, band):
-    """Exact for every band: tiny bands force the fallback path, large
-    bands stay entirely in pass 1."""
-    rng = random.Random(11)
+def _frames(spark, lvals, rvals):
+    left = spark.createDataFrame([(v,) for v in lvals], "l string")
+    right = spark.createDataFrame([(v,) for v in rvals], "r string")
+    return left, right
+
+
+def _got(left, right):
+    out = fuzzy_argmax_join(left, right, "l", "r").collect()
+    got = {row.l: (row.r, row.ratio) for row in out}
+    assert len(got) == len(out)  # one row per distinct left value
+    return got
+
+
+# ASCII, 2-, 3- and 4-byte UTF-8 code points
+_chars = st.sampled_from("abcxyz_-0 éß€漢𝄞😀")
+_short = st.text(_chars, max_size=12)
+# past one 64-bit word: the Python-int path
+_long = st.text(_chars, min_size=65, max_size=300)
+_value = st.one_of(_short, _short, _short, _long, st.none())
+
+
+@given(
+    lvals=st.lists(_value, min_size=1, max_size=20),
+    rvals=st.lists(_value, min_size=1, max_size=20),
+    dup=st.integers(0, 3),
+)
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_matches_brute_force(spark, lvals, rvals, dup):
+    """Exact against all pairs on empty, non-ASCII, long, null and
+    duplicated values; every right side keeps one non-null value."""
+    lvals = lvals + lvals[:dup]
+    rvals = rvals + rvals[:dup] + ["abc"]
+    left, right = _frames(spark, lvals, rvals)
+    assert _got(left, right) == _brute(spark, left, right)
+
+
+def _corpus(seed, lo, hi, edits=1, gap=0, planted=16):
+    """Random names of `lo`..`hi` characters; the right side adds
+    near-duplicates of the first `planted` left values, `edits`
+    trailing characters replaced and `gap` characters appended."""
+    rng = random.Random(seed)
     alphabet = "abcxyz_-019"
 
     def name(n):
         return "".join(rng.choice(alphabet) for _ in range(n))
 
-    lvals = [name(rng.randint(3, 14)) for _ in range(40)]
-    rvals = list({name(rng.randint(3, 14)) for _ in range(25)})
-    # plant near-duplicates so some best matches are close
-    rvals += [v[:-1] + "Q" for v in lvals[:10]]
-    left = spark.createDataFrame([(v,) for v in lvals], "l string")
-    right = spark.createDataFrame([(v,) for v in rvals], "r string")
+    lvals = [name(rng.randint(lo, hi)) for _ in range(40)]
+    rvals = list({name(rng.randint(lo, hi)) for _ in range(25)})
+    rvals += [v[:-edits] + "Q" * edits + "x" * gap for v in lvals[:planted]]
+    return lvals, rvals
 
-    got = {
-        row.l: (row.r, row.ratio)
-        for row in fuzzy_argmax_join(left, right, "l", "r", band=band).collect()
-    }
+
+@pytest.mark.parametrize("edits", [1, 4, 20])
+def test_matches_brute_force_any_band(spark, edits):
+    """Exact however far the planted best matches are: 1 edit away,
+    4, or 20 (as far as any random candidate)."""
+    left, right = _frames(spark, *_corpus(11, 3, 14, edits))
+    assert _got(left, right) == _brute(spark, left, right)
+
+
+@pytest.mark.parametrize("edits,gap", [(1, 1), (4, 2), (4, 30), (20, 0)])
+def test_blocked_matches_brute_force(spark, edits, gap):
+    """Exact when the best match differs in length: planted matches
+    `gap` characters longer, from equal length to 30 longer."""
+    left, right = _frames(spark, *_corpus(23, 3, 18, edits, gap))
+    assert _got(left, right) == _brute(spark, left, right)
+
+
+def test_auto_selects_blocking_on_variable_corpora(spark):
+    """Exact on a corpus of widely varying lengths (3 to 20 characters)
+    with no planted matches."""
+    left, right = _frames(spark, *_corpus(7, 3, 20, planted=0))
+    assert _got(left, right) == _brute(spark, left, right)
+
+
+def test_planted_ratio_ties(spark):
+    """Exact ties go to the smallest right value, and so do ratios that
+    differ exactly but tie after the 3-decimal rounding: here 69.10828
+    and 69.10755 both read 69.108, so the lower exact ratio wins on
+    its smaller right value."""
+    near_hi = "a" * 80 + "z" * 57
+    near_lo = "a" * 125 + "b" * 135
+    lvals = ["ab", "a" * 177]
+    rvals = ["ad", "ac", near_hi, near_lo]
+    left, right = _frames(spark, lvals, rvals)
+    got = _got(left, right)
     assert got == _brute(spark, left, right)
+    assert got["ab"] == ("ac", 75.0)
+    assert got["a" * 177] == (near_lo, 69.108)
 
 
-@pytest.mark.parametrize("band,window", [(1, 1), (4, 2), (4, 30), (20, 0)])
-def test_blocked_matches_brute_force(spark, band, window):
-    """length_window blocking stays exact for any (band, window) combo:
-    window 0 blocks everything but equal lengths (max fallback), 30
-    blocks nothing, and mid values exercise the mixed path."""
-    rng = random.Random(23)
-    alphabet = "abcxyz_-019"
-
-    def name(n):
-        return "".join(rng.choice(alphabet) for _ in range(n))
-
-    lvals = [name(rng.randint(3, 18)) for _ in range(40)]
-    rvals = list({name(rng.randint(3, 18)) for _ in range(25)})
-    rvals += [v[:-1] + "Q" for v in lvals[:10]]
-    rvals += [v + "xy" for v in lvals[10:16]]  # best match at Δlen 2
-    left = spark.createDataFrame([(v,) for v in lvals], "l string")
-    right = spark.createDataFrame([(v,) for v in rvals], "r string")
-
-    got = {
-        row.l: (row.r, row.ratio)
-        for row in fuzzy_argmax_join(
-            left, right, "l", "r", band=band, length_window=window
-        ).collect()
-    }
+def test_null_right_never_wins(spark):
+    left, right = _frames(spark, ["", None], ["abd", None, "abc"])
+    got = _got(left, right)
     assert got == _brute(spark, left, right)
+    assert got[""] == ("abc", 0.0)
+    # a null left value matches nothing: the smallest right, null ratio
+    assert got[None] == ("abc", None)
 
 
 def test_duplicate_left_values_collapse(spark):
-    left = spark.createDataFrame([("aa",), ("aa",), ("bb",)], "l string")
-    right = spark.createDataFrame([("ab",), ("bb",)], "r string")
-    out = fuzzy_argmax_join(left, right, "l", "r", band=3).collect()
-    assert len(out) == 2
-    got = {r.l: r.r for r in out}
-    assert got == {"aa": "ab", "bb": "bb"}
+    left, right = _frames(spark, ["aa", "aa", "bb"], ["ab", "bb"])
+    assert {k: v[0] for k, v in _got(left, right).items()} == {"aa": "ab", "bb": "bb"}
 
 
 def test_empty_right_raises(spark):
-    left = spark.createDataFrame([("x",)], "l string")
-    right = spark.createDataFrame([], "r string")
+    left, right = _frames(spark, ["x"], [None])
     with pytest.raises(ValueError, match="empty"):
         fuzzy_argmax_join(left, right, "l", "r")
 
 
-def _physical_plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
+def _jobs(sc, group, build):
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_auto_keeps_banded_cross_on_fixed_width_corpora(spark):
-    # both sides fixed-width: blocking can't prune a single pair, so
-    # "auto" must keep the broadcast cross (no length-key equi-join)
-    left = spark.createDataFrame([(f"id{i:05d}",) for i in range(30)], "l string")
-    right = spark.createDataFrame([(f"id{i:05d}",) for i in range(0, 60, 2)], "r string")
-    df = fuzzy_argmax_join(left, right, "l", "r", band=4, length_window="auto")
-    plan = _physical_plan(df)
-    assert "__blk" not in plan
-    got = {row.l: (row.r, row.ratio) for row in df.collect()}
-    assert got == _brute(spark, left, right)
+def test_x12_plan_has_no_pair_join_and_builds_in_one_job(spark):
+    """x12's build runs one Spark job besides reading its two tables'
+    parquet footers: the right-side collect. Its plan has no all-pairs
+    join; the pairs live inside the kernel."""
+    from ccgp_data_wrangling_spark.catalog import load_table
+    from ccgp_data_wrangling_spark.queries.relational import x12_fuzzy_best_match
+    from tests.conftest import SF_CORRECT
 
-
-def test_auto_selects_blocking_on_variable_corpora(spark):
-    rng = random.Random(7)
-    alphabet = "abcxyz_-019"
-
-    def name(n):
-        return "".join(rng.choice(alphabet) for _ in range(n))
-
-    left = spark.createDataFrame(
-        [(name(rng.randint(3, 20)),) for _ in range(40)], "l string"
+    sc = spark.sparkContext
+    _, reads = _jobs(
+        sc,
+        "test-fuzzy-x12-reads",
+        lambda: [load_table(spark, SF_CORRECT, t) for t in ("supplier", "customer")],
     )
-    right = spark.createDataFrame(
-        [(name(rng.randint(3, 20)),) for _ in range(25)], "r string"
+    df, jobs = _jobs(
+        sc, "test-fuzzy-x12-build", lambda: x12_fuzzy_best_match(spark, SF_CORRECT)
     )
-    df = fuzzy_argmax_join(left, right, "l", "r", band=4, length_window="auto")
-    got = {row.l: (row.r, row.ratio) for row in df.collect()}
-    assert got == _brute(spark, left, right)
-
-
-def test_resolve_length_window_decision_table():
-    from ccgp_data_wrangling_spark.operators.fuzzy import resolve_length_window
-
-    # fixed-width both sides → no gap can exceed the band → no blocking
-    assert resolve_length_window(18, 18, 18, 18, band=6) is None
-    # narrow joint spread (max gap 4 ≤ band) → still no blocking
-    assert resolve_length_window(8, 10, 6, 10, band=6) is None
-    # variable corpus: some gap exceeds the band → block with window=band
-    assert resolve_length_window(3, 20, 3, 20, band=4) == 4
-    # one-sided spread is enough (left fixed, right wide)
-    assert resolve_length_window(10, 10, 3, 30, band=6) == 6
+    assert jobs == reads + 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "MapInPandas" in plan

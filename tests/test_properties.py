@@ -205,6 +205,47 @@ def test_ann_topk_carriers_agree(spark):
     assert rows("auto") == ref  # 6144 doubles -> kernel
 
 
+def test_ann_topk_carriers_agree_on_null_and_ragged_vectors(spark):
+    """Null, empty, short and long vectors: the Column carriers read
+    their dot products as null, so every bit is 0 and each lands in
+    bucket 0 of every table, kept only when the query hits a bucket 0.
+    The kernel must keep and drop the same rows, not fail the task."""
+    import random
+
+    from ccgp_data_wrangling_spark.operators.knn import (
+        _py_bucket,
+        _seeded_planes,
+        ann_topk,
+    )
+
+    dim, n_tables, n_bits = 6, 4, 2
+    rng = random.Random(5)
+    rows = [(i, [rng.gauss(0.0, 1.0) for _ in range(dim)]) for i in range(30)]
+    rows += [(90, None), (91, []), (92, [1.0] * (dim - 1)), (93, [1.0] * (dim + 2))]
+    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+
+    tables = _seeded_planes(n_tables, n_bits, dim, 42)
+    queries = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(40)]
+    hits_zero = [0 in [_py_bucket(q, t) for t in tables] for q in queries]
+    # one query that keeps the bad rows, one that drops them
+    picks = [queries[hits_zero.index(True)], queries[hits_zero.index(False)]]
+
+    for qv, keeps_bad in zip(picks, (True, False)):
+        outs = {
+            c: sorted(
+                map(
+                    tuple,
+                    ann_topk(
+                        emb, qv, 40, n_tables=n_tables, n_bits=n_bits, carrier=c
+                    ).collect(),
+                )
+            )
+            for c in ("literal", "table", "kernel")
+        }
+        assert outs["kernel"] == outs["literal"] == outs["table"]
+        assert any(r[0] >= 90 for r in outs["literal"]) == keeps_bad
+
+
 # ---------------------------------------------------------------------------
 # Sketch merge laws over arbitrary inputs
 # ---------------------------------------------------------------------------
