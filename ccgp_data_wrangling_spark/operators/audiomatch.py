@@ -26,14 +26,14 @@ from __future__ import annotations
 
 import io
 import wave
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs
 
 __all__ = [
     "frame_peak_bins",
@@ -80,31 +80,17 @@ def audio_constellation(
     payload_col: str = "payload",
     frame: int = 256,
     pre=None,
-    pre_cols=None,
 ) -> DataFrame:
     """Explode WAV payloads into ``(id, frame_idx, h)`` constellation
-    pair hashes — one Arrow pass, payloads never leave executors.
-
-    ``pre`` fuses an upstream batch synthesizer into the same Arrow
-    stage (payloads then never cross the JVM boundary at all)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, hs = [], [], []
-            for rid, blob in zip(pdf[id_col], pdf[payload_col]):
-                for i, h in constellation_hashes(bytes(blob), frame=frame):
-                    ids.append(rid)
-                    fidx.append(i)
-                    hs.append(h)
-            yield pd.DataFrame({"id": ids, "frame_idx": fidx, "h": hs})
-
-    if pre is not None:
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema="id long, frame_idx int, h long"
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema="id long, frame_idx int, h long"
+    pair hashes — one :func:`explode_blobs` pass, payloads never leave
+    executors."""
+    return explode_blobs(
+        df,
+        lambda b: constellation_hashes(b, frame=frame),
+        "id long, frame_idx int, h long",
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 
@@ -116,8 +102,6 @@ def audio_clip_match(
     broadcast_tracks: bool = True,
     tracks_pre=None,
     clips_pre=None,
-    tracks_pre_cols=None,
-    clips_pre_cols=None,
 ) -> DataFrame:
     """Best ``(track_id, offset)`` per clip by constellation voting:
     hash equi-join (candidates only — never clip × track), vote count
@@ -132,18 +116,14 @@ def audio_clip_match(
     Output: ``(clip_id, track_id, offset, votes)``, one row per clip
     that matched at least one hash.
     """
-    th = audio_constellation(
-        tracks, frame=frame, pre=tracks_pre, pre_cols=tracks_pre_cols,
-    ).select(
+    th = audio_constellation(tracks, frame=frame, pre=tracks_pre).select(
         F.col("id").alias("track_id"),
         F.col("frame_idx").alias("ti"),
         "h",
     )
     if broadcast_tracks:
         th = F.broadcast(th)
-    ch = audio_constellation(
-        clips, frame=frame, pre=clips_pre, pre_cols=clips_pre_cols,
-    ).select(
+    ch = audio_constellation(clips, frame=frame, pre=clips_pre).select(
         F.col("id").alias("clip_id"),
         F.col("frame_idx").alias("ci"),
         "h",

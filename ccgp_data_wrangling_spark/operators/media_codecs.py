@@ -5586,30 +5586,23 @@ def _prefix_free(table: dict) -> None:
                 raise AssertionError("Huffman table is not prefix-free")
 
 
-for _t in _L3_PAIR_TABLES.values():
-    _prefix_free(_t)
-_prefix_free(_L3_COUNT1_A)
-_prefix_free(_L3_COUNT1_B)
+def _by_code(table: dict) -> dict:
+    """``(length, code) -> symbol`` inversion of a prefix-free
+    ``symbol -> (length, code)`` table, for decoding."""
+    _prefix_free(table)
+    return {lc: sym for sym, lc in table.items()}
 
 
-# (length, code) -> symbol inversions of the module-constant Layer III
-# tables, built once per table instead of once per decoded symbol.
-# Each entry retains the table itself alongside its inversion: keyed
-# on id() alone, a dynamically built table could be collected and its
-# id reused, silently returning the WRONG inverse.
-_L3_BYCODE: dict[int, tuple[dict, dict]] = {}
+_L3_PAIR_BYCODE = {t: _by_code(tab) for t, tab in _L3_PAIR_TABLES.items()}
+_L3_COUNT1_A_BYCODE = _by_code(_L3_COUNT1_A)
+_L3_COUNT1_B_BYCODE = _by_code(_L3_COUNT1_B)
 
 
-def _l3_huff_decode(reader: "_BitReader", table: dict) -> tuple:
-    """Walk bits MSB-first until a code in ``table`` matches; the
-    tables are prefix-free (validated at import), so first match is
-    THE match. Returns the symbol key."""
-    entry = _L3_BYCODE.get(id(table))
-    if entry is None or entry[0] is not table:
-        by_code = {(ln, c): sym for sym, (ln, c) in table.items()}
-        _L3_BYCODE[id(table)] = (table, by_code)
-    else:
-        by_code = entry[1]
+def _l3_huff_decode(reader: "_BitReader", by_code: dict) -> Any:
+    """Walk bits MSB-first until a code in ``by_code`` (a
+    :func:`_by_code` inversion) matches; the tables are prefix-free
+    (validated at import), so first match is THE match. Returns the
+    symbol key."""
     read_bit = reader.read_bit
     get = by_code.get
     code, ln = 0, 0
@@ -6072,9 +6065,9 @@ def decode_mp3_layer3_spectrum(payload: bytes) -> list[dict[str, Any]]:
                     tsel = g["table_select"][region]
                     if tsel == 0:
                         x = y = 0
-                    elif tsel in _L3_PAIR_TABLES:
+                    elif tsel in _L3_PAIR_BYCODE:
                         x, y = _l3_huff_decode(
-                            main, _L3_PAIR_TABLES[tsel]
+                            main, _L3_PAIR_BYCODE[tsel]
                         )
                     else:
                         raise NotImplementedError(
@@ -6088,9 +6081,9 @@ def decode_mp3_layer3_spectrum(payload: bytes) -> list[dict[str, Any]]:
                 # count1 region: quads until the channel's bit budget
                 # is spent (fixtures are exact — overshoot raises)
                 c1tab = (
-                    _L3_COUNT1_B
+                    _L3_COUNT1_B_BYCODE
                     if g["count1table_select"]
-                    else _L3_COUNT1_A
+                    else _L3_COUNT1_A_BYCODE
                 )
                 budget = g["part2_3_length"]
                 while main.bits_read() - bits_before < budget:

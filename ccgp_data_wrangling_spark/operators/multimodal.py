@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, map_batches
+
 FEATURE_SCHEMA = (
     "id long, media_type string, n_bytes long, content_md5 string, "
     "fake_width int, fake_height int, byte_mean double"
@@ -61,7 +63,6 @@ def extract_real_features(
     payload_col: str = "payload",
     media_type_col: str = "media_type",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
     """Decode-and-featurize with the REAL stdlib kernels (WAV / netpbm).
 
@@ -96,13 +97,9 @@ def extract_real_features(
             out.insert(0, "id", pdf[id_col].values)
             yield out
 
-    if pre is not None:
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=REAL_FEATURE_SCHEMA
-        )
-    narrow = df.select(id_col, payload_col, media_type_col)
-    return narrow.mapInPandas(op, schema=REAL_FEATURE_SCHEMA)
+    return map_batches(
+        df, op, REAL_FEATURE_SCHEMA, (id_col, payload_col, media_type_col), pre
+    )
 
 
 def fake_decode(payload: bytes) -> dict[str, Any]:
@@ -294,7 +291,6 @@ def audio_spectral_features(
     id_col: str = "id",
     payload_col: str = "payload",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
     """Real DSP features per audio payload — zero-crossing count and
     FFT dominant frequency (media_codecs.wav_spectral_features) — in
@@ -317,13 +313,7 @@ def audio_spectral_features(
             out.insert(0, "id", pdf[id_col].values)
             yield out
 
-    if pre is not None:
-        # fused upstream synthesizer (see extract_real_features)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=SPECTRAL_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(op, schema=SPECTRAL_SCHEMA)
+    return map_batches(df, op, SPECTRAL_SCHEMA, (id_col, payload_col), pre)
 
 
 GIF_FRAME_SCHEMA = (
@@ -339,7 +329,6 @@ def sample_frames_gif(
     id_col: str = "id",
     payload_col: str = "payload",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
     """REAL frame sampling from animated-GIF payloads — the concrete
     instance of the video frame-sample shape (sample_frames) with an
@@ -351,9 +340,9 @@ def sample_frames_gif(
     features (native luma mean) rather than raw pixels, the usual
     shape when frames feed a filter or an embedding stage.
 
-    1→N expansion inside one Arrow pass; payloads never leave the
-    executors, and output size is bounded by duration/every_sec
-    regardless of frame rate.
+    1→N expansion inside one :func:`explode_blobs` pass; payloads
+    never leave the executors, and output size is bounded by
+    duration/every_sec regardless of frame rate.
     """
     if every_sec <= 0:
         raise ValueError("every_sec must be positive")
@@ -362,46 +351,28 @@ def sample_frames_gif(
         decode_gif_frames,
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                frames, delays = decode_gif_frames(bytes(payload))
-                t = 0.0
-                next_emit = 0.0
-                for k, (px, d_cs) in enumerate(zip(frames, delays)):
-                    if t >= next_emit:
-                        m = px.astype(np.float64).mean(axis=(0, 1))
-                        rows.append(
-                            {
-                                "id": rid,
-                                "frame_idx": k,
-                                "frame_ts_sec": round(t, 6),
-                                "width": px.shape[1],
-                                "height": px.shape[0],
-                                "luma_mean": round(
-                                    float(
-                                        m @ np.array([0.299, 0.587, 0.114])
-                                    ),
-                                    4,
-                                ),
-                            }
-                        )
-                        next_emit += every_sec
-                    t += d_cs / 100.0
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "frame_idx", "frame_ts_sec",
-                    "width", "height", "luma_mean",
-                ],
-            )
+    def rows_of(blob: bytes) -> Iterator[tuple]:
+        frames, delays = decode_gif_frames(blob)
+        t = 0.0
+        next_emit = 0.0
+        for k, (px, d_cs) in enumerate(zip(frames, delays)):
+            if t >= next_emit:
+                m = px.astype(np.float64).mean(axis=(0, 1))
+                yield (
+                    k,
+                    round(t, 6),
+                    px.shape[1],
+                    px.shape[0],
+                    round(float(m @ np.array([0.299, 0.587, 0.114])), 4),
+                )
+                next_emit += every_sec
+            t += d_cs / 100.0
 
-    if pre is not None:
-        # fused upstream synthesizer (see extract_real_features)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=GIF_FRAME_SCHEMA
-        )
-    narrow = df.select(id_col, payload_col)
-    return narrow.mapInPandas(op, schema=GIF_FRAME_SCHEMA)
+    return explode_blobs(
+        df,
+        rows_of,
+        GIF_FRAME_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
+    )

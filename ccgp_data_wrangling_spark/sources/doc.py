@@ -42,11 +42,11 @@ sources/docx.py does for OOXML.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
 
 from ccgp_data_wrangling_spark.sources.xls import (
     _CFB_MAGIC,
@@ -198,40 +198,16 @@ def doc_documents(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
     """Explode legacy .doc blobs into one row per paragraph — one
-    Arrow mapInPandas pass, the docx_documents shape."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for did, blob in zip(pdf[id_col], pdf[payload_col]):
-                for k, text in enumerate(
-                    extract_doc_paragraphs(bytes(blob))
-                ):
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "para": k,
-                            "text": text,
-                            "n_chars": len(text),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "para", "text", "n_chars"]
-            )
-
-    if pre is not None:
-        # fuse an upstream batch synthesizer into the same Arrow
-        # stage: blobs never transit the JVM between synthesis
-        # and extraction (optimization guide §4.1)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=DOC_PARA_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=DOC_PARA_SCHEMA
+    :func:`explode_blobs` pass."""
+    return explode_blobs(
+        df,
+        lambda b: text_rows(extract_doc_paragraphs(b)),
+        DOC_PARA_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 

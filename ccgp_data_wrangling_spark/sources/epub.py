@@ -37,8 +37,9 @@ from collections.abc import Iterator
 from typing import Any
 from xml.etree import ElementTree as ET
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
 
 _CONTAINER_NS = "urn:oasis:names:tc:opendocument:xmlns:container"
 _OPF_NS = "http://www.idpf.org/2007/opf"
@@ -193,46 +194,22 @@ def epub_documents(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
     """Explode EPUB blobs into one row per (chapter, paragraph) —
-    one Arrow mapInPandas pass, the docx_documents shape plus the
-    spine position."""
+    one :func:`explode_blobs` pass."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for did, blob in zip(pdf[id_col], pdf[payload_col]):
-                for ch, paras in enumerate(
-                    extract_epub_chapters(bytes(blob))
-                ):
-                    for k, text in enumerate(paras):
-                        rows.append(
-                            {
-                                "doc_id": did,
-                                "chapter": ch,
-                                "para": k,
-                                "text": text,
-                                "n_chars": len(text),
-                            }
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "chapter", "para", "text", "n_chars",
-                ],
-            )
+    def rows_of(blob: bytes) -> Iterator[tuple]:
+        for ch, paras in enumerate(extract_epub_chapters(blob)):
+            for row in text_rows(paras):
+                yield (ch, *row)
 
-    if pre is not None:
-        # fuse an upstream batch synthesizer into the same Arrow
-        # stage: blobs never transit the JVM between synthesis
-        # and extraction (optimization guide §4.1)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=EPUB_PARA_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=EPUB_PARA_SCHEMA
+    return explode_blobs(
+        df,
+        rows_of,
+        EPUB_PARA_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 

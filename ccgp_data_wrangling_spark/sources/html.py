@@ -24,8 +24,9 @@ from collections.abc import Iterator
 from html import unescape
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
 
 HTML_PARA_SCHEMA = (
     "doc_id long, para int, title string, text string, n_chars int"
@@ -74,42 +75,22 @@ def html_documents(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
-    """Explode loose HTML blobs into one row per paragraph — one
-    Arrow mapInPandas pass, the docx_documents shape plus the page
-    title carried on every row."""
+    """Explode loose HTML blobs into one row per paragraph, the page
+    title carried on every row — one :func:`explode_blobs` pass."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for did, blob in zip(pdf[id_col], pdf[payload_col]):
-                title, paras = extract_html(bytes(blob))
-                for k, text in enumerate(paras):
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "para": k,
-                            "title": title,
-                            "text": text,
-                            "n_chars": len(text),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "para", "title", "text", "n_chars"],
-            )
+    def rows_of(blob: bytes) -> Iterator[tuple]:
+        title, paras = extract_html(blob)
+        for k, text, n_chars in text_rows(paras):
+            yield (k, title, text, n_chars)
 
-    if pre is not None:
-        # fuse an upstream batch synthesizer into the same Arrow
-        # stage: blobs never transit the JVM between synthesis
-        # and extraction (optimization guide §4.1)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=HTML_PARA_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=HTML_PARA_SCHEMA
+    return explode_blobs(
+        df,
+        rows_of,
+        HTML_PARA_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 

@@ -35,8 +35,9 @@ from collections.abc import Iterator
 from typing import Any
 from xml.etree import ElementTree as ET
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
 
 from ccgp_data_wrangling_spark.sources.odt import _para_text
 
@@ -116,48 +117,23 @@ def odp_documents(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
     """Explode ODP blobs into one row per (slide, frame, paragraph)
-    — one Arrow mapInPandas pass, the pptx_documents shape."""
+    — one :func:`explode_blobs` pass."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for did, blob in zip(pdf[id_col], pdf[payload_col]):
-                for s, frames in enumerate(
-                    extract_odp_slides(bytes(blob))
-                ):
-                    for f, paras in enumerate(frames):
-                        for k, text in enumerate(paras):
-                            rows.append(
-                                {
-                                    "doc_id": did,
-                                    "slide": s,
-                                    "frame": f,
-                                    "para": k,
-                                    "text": text,
-                                    "n_chars": len(text),
-                                }
-                            )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "slide", "frame", "para", "text",
-                    "n_chars",
-                ],
-            )
+    def rows_of(blob: bytes) -> Iterator[tuple]:
+        for s, frames in enumerate(extract_odp_slides(blob)):
+            for f, paras in enumerate(frames):
+                for row in text_rows(paras):
+                    yield (s, f, *row)
 
-    if pre is not None:
-        # fuse an upstream batch synthesizer into the same Arrow
-        # stage: blobs never transit the JVM between synthesis
-        # and extraction (optimization guide §4.1)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=ODP_PARA_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=ODP_PARA_SCHEMA
+    return explode_blobs(
+        df,
+        rows_of,
+        ODP_PARA_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 

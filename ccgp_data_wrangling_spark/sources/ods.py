@@ -31,12 +31,12 @@ from __future__ import annotations
 
 import io
 import zipfile
-from collections.abc import Iterator
 from typing import Any
 from xml.etree import ElementTree as ET
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs
 
 from ccgp_data_wrangling_spark.sources.odt import _para_text
 
@@ -169,35 +169,17 @@ def ods_documents(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
-    """Explode ODS blobs into one row per populated cell — one Arrow
-    mapInPandas pass, the xlsx_documents shape on the ODF side."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for did, blob in zip(pdf[id_col], pdf[payload_col]):
-                for rec in extract_ods_cells(bytes(blob)):
-                    rows.append({"doc_id": did, **rec})
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sheet", "sheet_name", "row", "col",
-                    "value_type", "text", "number", "formula",
-                ],
-            )
-
-    if pre is not None:
-        # fuse an upstream batch synthesizer into the same Arrow
-        # stage: blobs never transit the JVM between synthesis
-        # and extraction (optimization guide §4.1)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=ODS_CELL_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=ODS_CELL_SCHEMA
+    """Explode ODS blobs into one row per populated cell — one
+    :func:`explode_blobs` pass (the key order of each
+    :func:`extract_ods_cells` record is the schema's column order)."""
+    return explode_blobs(
+        df,
+        lambda b: (tuple(rec.values()) for rec in extract_ods_cells(b)),
+        ODS_CELL_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 

@@ -53,12 +53,11 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
 
 __all__ = [
     "extract_pdf_pages",
@@ -1250,63 +1249,19 @@ def pdf_documents(
     payload_col: str = "payload",
     password: bytes = b"",
     pre: Any = None,
-    pre_cols: Any = None,
-    r6_keys: Any = None,
 ) -> DataFrame:
     """Explode PDF blobs into one row per page with extracted text —
-    one Arrow mapInPandas pass, the WARC-ingest shape. ``password``
-    opens standard-security-handler encrypted files (one corpus-wide
+    one :func:`explode_blobs` pass. ``password`` opens
+    standard-security-handler encrypted files (one corpus-wide
     password — per-document passwords would be a join column, which
-    a caller can model by partitioning the corpus).
-
-    ``pre`` optionally fuses an upstream batch transformer (a fixture
-    payload synthesizer) into the same Arrow stage, so blobs never
-    cross the JVM<->Python boundary between synthesis and
-    extraction. The pre path is opaque to Spark's column pruning, so
-    every column of ``df`` ships through Arrow into the Python
-    worker: pass ``pre_cols`` (the exact columns ``pre`` consumes) to
-    narrow the scan, or hand in an already-narrow frame.
-
-    ``r6_keys``: driver-precomputed revision-6 KDF results
-    (``pdf_crypt.r6_seed_entries``) riding the task closure, so COLD
-    executors opening an AES-256/R6 corpus skip the ~2.3 s
-    per-credential-set Algorithm 2.B derivation when the native AES
-    backend is unavailable. Purely a cold-start cut: the derived keys
-    are content-addressed by (password, salt, udata), so results are
-    identical with or without it."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if r6_keys:
-            from ccgp_data_wrangling_spark.sources.pdf_crypt import (
-                seed_r6_cache,
-            )
-
-            seed_r6_cache(r6_keys)
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for did, blob in zip(pdf[id_col], pdf[payload_col]):
-                for k, text in enumerate(
-                    extract_pdf_pages(bytes(blob), password=password)
-                ):
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "page": k,
-                            "text": text,
-                            "n_chars": len(text),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page", "text", "n_chars"]
-            )
-
-    if pre is not None:
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=PDF_PAGE_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=PDF_PAGE_SCHEMA
+    a caller can model by partitioning the corpus)."""
+    return explode_blobs(
+        df,
+        lambda b: text_rows(extract_pdf_pages(b, password=password)),
+        PDF_PAGE_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 

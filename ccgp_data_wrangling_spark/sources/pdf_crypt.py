@@ -741,9 +741,10 @@ def encrypt_bytes(data: bytes, key: bytes, *, aes: bool, iv: bytes = b"") -> byt
 # 100 TB a corpus sharing one credential set is opened by thousands
 # of COLD executors, and without the native AES backend each pays
 # ~2.3 s re-deriving the same revision-6 hash. The driver derives the
-# credential set's entries once (r6_seed_entries) and ships them
-# through the operator config (pdf_documents(r6_keys=...)); workers
-# seed this dict before extraction and skip the KDF entirely.
+# credential set's entries once (r6_seed_entries) and ships them in
+# the closure of the ``pre`` it fuses into pdf_documents' one
+# explode_blobs stage; that ``pre`` calls seed_r6_cache before
+# yielding its first batch, so workers skip the KDF entirely.
 _R6_SEEDED: dict[tuple[bytes, bytes, bytes], bytes] = {}
 
 
@@ -772,7 +773,8 @@ def r6_seed_entries(
     Algorithm 2.B invocations verify_password_v5 can issue against a
     revision-6 document's 48-byte /U and /O entries (user validation
     + key salts, then owner validation + key salts over /U). Ship the
-    result to executors via ``pdf_documents(r6_keys=...)``."""
+    result to executors in a ``pdf_documents(pre=...)`` transformer
+    that calls :func:`seed_r6_cache` (see ``explode_blobs``)."""
     out = []
     for salt, udata in (
         (u[32:40], b""),

@@ -38,8 +38,9 @@ from collections.abc import Iterator
 from typing import Any
 from xml.etree import ElementTree as ET
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
 
 _P_NS = "http://schemas.openxmlformats.org/presentationml/2006/main"
 _A_NS = "http://schemas.openxmlformats.org/drawingml/2006/main"
@@ -128,44 +129,22 @@ def pptx_documents(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
     """Explode PPTX blobs into one row per slide paragraph — one
-    Arrow mapInPandas pass, the docx_documents shape plus the slide
-    ordinal."""
+    :func:`explode_blobs` pass."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for did, blob in zip(pdf[id_col], pdf[payload_col]):
-                for s, paras in enumerate(
-                    extract_pptx_slides(bytes(blob))
-                ):
-                    for k, text in enumerate(paras):
-                        rows.append(
-                            {
-                                "doc_id": did,
-                                "slide": s,
-                                "para": k,
-                                "text": text,
-                                "n_chars": len(text),
-                            }
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "slide", "para", "text", "n_chars"],
-            )
+    def rows_of(blob: bytes) -> Iterator[tuple]:
+        for s, paras in enumerate(extract_pptx_slides(blob)):
+            for row in text_rows(paras):
+                yield (s, *row)
 
-    if pre is not None:
-        # fuse an upstream batch synthesizer into the same Arrow
-        # stage: blobs never transit the JVM between synthesis
-        # and extraction (optimization guide §4.1)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=PPTX_PARA_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=PPTX_PARA_SCHEMA
+    return explode_blobs(
+        df,
+        rows_of,
+        PPTX_PARA_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 

@@ -23,11 +23,11 @@ document-ingest layer; north-star corpus surface as with PDF/DOCX.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
 
 RTF_PARA_SCHEMA = "doc_id long, para int, text string, n_chars int"
 
@@ -167,40 +167,16 @@ def rtf_documents(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
-    """Explode RTF blobs into one row per paragraph — one Arrow
-    mapInPandas pass, the docx_documents shape."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict[str, Any]] = []
-            for did, blob in zip(pdf[id_col], pdf[payload_col]):
-                for k, text in enumerate(
-                    extract_rtf_paragraphs(bytes(blob))
-                ):
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "para": k,
-                            "text": text,
-                            "n_chars": len(text),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "para", "text", "n_chars"]
-            )
-
-    if pre is not None:
-        # fuse an upstream batch synthesizer into the same Arrow
-        # stage: blobs never transit the JVM between synthesis
-        # and extraction (optimization guide §4.1)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=RTF_PARA_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=RTF_PARA_SCHEMA
+    """Explode RTF blobs into one row per paragraph — one
+    :func:`explode_blobs` pass."""
+    return explode_blobs(
+        df,
+        lambda b: text_rows(extract_rtf_paragraphs(b)),
+        RTF_PARA_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 

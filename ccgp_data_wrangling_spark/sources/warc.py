@@ -30,9 +30,9 @@ import re
 from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import explode_blobs
 
 __all__ = [
     "parse_warc",
@@ -127,49 +127,33 @@ def warc_records(
     payload_col: str = "payload",
     response_only: bool = True,
     pre: Any = None,
-    pre_cols: Any = None,
 ) -> DataFrame:
     """Explode WARC archive blobs into one row per record, with the
-    HTTP body run through :func:`html_to_text`. One Arrow mapInPandas
-    pass; archives stream batch-by-batch, never to the driver."""
+    HTTP body run through :func:`html_to_text`. One
+    :func:`explode_blobs` pass; archives stream batch-by-batch, never
+    to the driver."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, blob in zip(pdf[id_col], pdf[payload_col]):
-                for rec in parse_warc(bytes(blob)):
-                    if response_only and rec["warc_type"] != "response":
-                        continue
-                    rows.append(
-                        {
-                            "archive_id": aid,
-                            "warc_type": rec["warc_type"],
-                            "target_uri": rec["target_uri"],
-                            "warc_date": rec["warc_date"],
-                            "http_status": rec["http_status"],
-                            "content_type": rec["content_type"],
-                            "text": html_to_text(rec["body"]),
-                            "n_body_bytes": len(rec["body"]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "archive_id", "warc_type", "target_uri", "warc_date",
-                    "http_status", "content_type", "text", "n_body_bytes",
-                ],
+    def rows_of(blob: bytes) -> Iterator[tuple]:
+        for rec in parse_warc(blob):
+            if response_only and rec["warc_type"] != "response":
+                continue
+            yield (
+                rec["warc_type"],
+                rec["target_uri"],
+                rec["warc_date"],
+                rec["http_status"],
+                rec["content_type"],
+                html_to_text(rec["body"]),
+                len(rec["body"]),
             )
 
-    if pre is not None:
-        # fuse an upstream batch synthesizer into the same Arrow
-        # stage: archive blobs never transit the JVM between
-        # synthesis and record extraction (optimization guide §4.1)
-        src = df.select(*pre_cols) if pre_cols else df
-        return src.mapInPandas(
-            lambda it: op(pre(it)), schema=WARC_RECORD_SCHEMA
-        )
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=WARC_RECORD_SCHEMA
+    return explode_blobs(
+        df,
+        rows_of,
+        WARC_RECORD_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
+        pre=pre,
     )
 
 

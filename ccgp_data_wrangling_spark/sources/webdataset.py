@@ -27,11 +27,12 @@ from __future__ import annotations
 import io
 import tarfile
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ccgp_data_wrangling_spark.sources.blobs import blob_batches, explode_blobs
 
 __all__ = ["iter_wds_samples", "wds_samples", "build_wds_shard", "WDS_SAMPLE_SCHEMA"]
 
@@ -65,6 +66,11 @@ WDS_SAMPLE_SCHEMA = (
 )
 
 
+def _sample_rows(blob: bytes) -> Iterator[tuple]:
+    for key, parts in iter_wds_samples(blob):
+        yield key, len(parts), parts
+
+
 def wds_sample_batches(
     batches: Iterator[pd.DataFrame],
     *,
@@ -75,36 +81,27 @@ def wds_sample_batches(
     can fuse shard synthesis → sample explode → per-sample decode
     into ONE Arrow stage (shard blobs and part maps then never cross
     the JVM boundary between steps)."""
-    for pdf in batches:
-        rows: list[dict[str, Any]] = []
-        for sid, blob in zip(pdf[id_col], pdf[payload_col]):
-            for key, parts in iter_wds_samples(bytes(blob)):
-                rows.append(
-                    {
-                        "shard_id": sid,
-                        "sample_key": key,
-                        "n_parts": len(parts),
-                        "parts": parts,
-                    }
-                )
-        yield pd.DataFrame(
-            rows, columns=["shard_id", "sample_key", "n_parts", "parts"]
-        )
+    return blob_batches(
+        batches,
+        _sample_rows,
+        ["shard_id", "sample_key", "n_parts", "parts"],
+        id_col=id_col,
+        payload_col=payload_col,
+    )
 
 
 def wds_samples(
     df: DataFrame, *, id_col: str = "shard_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Explode tar shards into one row per sample with its modality
-    parts as ``map<extension, binary>`` — one Arrow pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return wds_sample_batches(
-            batches, id_col=id_col, payload_col=payload_col
-        )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, schema=WDS_SAMPLE_SCHEMA
+    parts as ``map<extension, binary>`` — one :func:`explode_blobs`
+    pass."""
+    return explode_blobs(
+        df,
+        _sample_rows,
+        WDS_SAMPLE_SCHEMA,
+        id_col=id_col,
+        payload_col=payload_col,
     )
 
 

@@ -92,3 +92,16 @@ def test_docx_documents_explode(spark):
         (1, 1, "b\tc", 3),
         (2, 0, "only", 4),
     ]
+
+
+def test_docx_documents_bad_blob_names_its_row(spark):
+    """An extractor failure inside the Arrow task names the blob's id,
+    so one bad document in a corpus can be found."""
+    df = spark.createDataFrame(
+        [(1, bytearray(build_docx(["ok"]))), (7, bytearray(b"not a zip"))],
+        "doc_id long, payload binary",
+    )
+    with pytest.raises(Exception) as err:
+        docx_documents(df).collect()
+    assert "doc_id=7" in str(err.value)
+    assert "not a DOCX" in str(err.value)

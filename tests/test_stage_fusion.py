@@ -1,24 +1,46 @@
-"""The r14 stage-fusion optimization changed operator internals:
-extractor operators accept a ``pre=`` batch transformer fused into
-their single mapInPandas stage, and webdataset exposes its explode
-core as ``wds_sample_batches``. These tests pin the contract the
-optimization relies on — the fused form produces row-identical
-output to the two-stage chain it replaced — at the operator level,
+"""Stage fusion: every blob-explode entry point and the real-media
+featurizers accept a ``pre=`` batch transformer fused into their
+single mapInPandas stage (``sources.blobs.map_batches``), and
+webdataset exposes its explode core as ``wds_sample_batches``. These
+tests pin the contract fusion relies on — the fused form produces
+row-identical output to the two-stage chain — at the operator level,
 independent of the registered queries' oracle checks.
 
-(Synthesizers are defined inside each test so cloudpickle ships
-them by value; a module-level def in an unimportable test module
-would be pickled by reference and fail on executors.)"""
+(Synthesizers are closures built inside functions so cloudpickle
+ships them by value; a module-level def in an unimportable test
+module would be pickled by reference and fail on executors.)"""
 
 from __future__ import annotations
 
-import pandas as pd
+import io
+import wave
+from functools import partial
 
+import numpy as np
+import pandas as pd
+import pytest
+
+from ccgp_data_wrangling_spark.operators.audiomatch import audio_constellation
+from ccgp_data_wrangling_spark.operators.media_codecs import (
+    encode_gif_animated,
+)
 from ccgp_data_wrangling_spark.operators.multimodal import (
     extract_real_features,
+    sample_frames_gif,
 )
+from ccgp_data_wrangling_spark.sources.doc import build_doc, doc_documents
+from ccgp_data_wrangling_spark.sources.docx import build_docx, docx_documents
+from ccgp_data_wrangling_spark.sources.epub import build_epub, epub_documents
+from ccgp_data_wrangling_spark.sources.html import build_html, html_documents
+from ccgp_data_wrangling_spark.sources.odp import build_odp, odp_documents
+from ccgp_data_wrangling_spark.sources.ods import build_ods, ods_documents
+from ccgp_data_wrangling_spark.sources.odt import build_odt, odt_documents
 from ccgp_data_wrangling_spark.sources.pdf import build_pdf, pdf_documents
+from ccgp_data_wrangling_spark.sources.pptx import build_pptx, pptx_documents
+from ccgp_data_wrangling_spark.sources.rtf import build_rtf, rtf_documents
+from ccgp_data_wrangling_spark.sources.warc import build_warc, warc_records
 from ccgp_data_wrangling_spark.sources.webdataset import (
+    WDS_SAMPLE_SCHEMA,
     build_wds_shard,
     wds_sample_batches,
     wds_samples,
@@ -29,24 +51,113 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_pdf_documents_pre_matches_chained(spark):
+def _wav(d):
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(2)
+        wf.setframerate(8000)
+        t = np.arange(256 * 4)
+        sig = np.sin(t * (d + 2) / 9) * 8000
+        wf.writeframes(sig.astype("<i2").tobytes())
+    return buf.getvalue()
+
+
+def _wds_samples_fused(df, pre=None):
+    """wds_samples takes no ``pre``: its fused form is the batch core
+    composed behind ``pre`` in one stage, as the llm_scale queries do."""
+    if pre is None:
+        return wds_samples(df)
+    return df.mapInPandas(
+        lambda it: wds_sample_batches(pre(it)), schema=WDS_SAMPLE_SCHEMA
+    )
+
+
+# (entry point, id column, payload for id d) per explode site; the
+# payload builders run on the driver only
+_SITES = {
+    "docx": (docx_documents, "doc_id", lambda d: build_docx([f"p {d}", "t"])),
+    "doc": (doc_documents, "doc_id", lambda d: build_doc([f"p {d}", "t"])),
+    "odt": (odt_documents, "doc_id", lambda d: build_odt([f"p {d}", "t"])),
+    "odp": (
+        odp_documents, "doc_id", lambda d: build_odp([[[f"p {d}"], ["t"]]]),
+    ),
+    "ods": (
+        ods_documents, "doc_id",
+        lambda d: build_ods([("S", [[f"c {d}", float(d)], [None, "x"]])]),
+    ),
+    "epub": (
+        epub_documents, "doc_id", lambda d: build_epub([[f"p {d}"], ["t"]]),
+    ),
+    "html": (
+        html_documents, "doc_id",
+        lambda d: build_html(f"T{d}", [f"p {d}", "t"]),
+    ),
+    "rtf": (rtf_documents, "doc_id", lambda d: build_rtf([f"p {d}", "t"])),
+    "pptx": (
+        pptx_documents, "doc_id", lambda d: build_pptx([[f"p {d}"], ["t"]]),
+    ),
+    "pdf": (
+        pdf_documents, "doc_id",
+        lambda d: build_pdf([[f"page for {d}", f"tail {d % 3}"]]),
+    ),
+    "warc": (
+        warc_records, "archive_id",
+        lambda d: build_warc(
+            [
+                {"warc_type": "request", "payload": b"GET /"},
+                {
+                    "warc_type": "response",
+                    "target_uri": f"http://x/{d}",
+                    "body": f"<p>page {d}</p>".encode(),
+                },
+            ]
+        ),
+    ),
+    "wds": (
+        _wds_samples_fused, "shard_id",
+        lambda d: build_wds_shard(
+            [(f"{d}-{j}", {"cls": str(d + j).encode()}) for j in range(2)]
+        ),
+    ),
+    "gif": (
+        partial(sample_frames_gif, every_sec=0.2), "id",
+        lambda d: encode_gif_animated(
+            [np.full((2, 3, 3), 10 * d + k, np.uint8) for k in range(3)],
+            delays_cs=[10, 10, 10],
+        ),
+    ),
+    "audio": (audio_constellation, "id", _wav),
+}
+
+
+def _synth(blobs, id_col, extra=False):
+    """Batch synthesizer: payloads precomputed on the driver, looked
+    up by id on the executor (a closure, so cloudpickle ships it by
+    value)."""
+
     def synth(batches):
         for pdf in batches:
-            payloads = [
-                build_pdf([[f"page for {int(d)}", f"tail {int(d) % 3}"]])
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads}
-            )
+            ids = pdf[id_col].values
+            out = {id_col: ids, "payload": [blobs[int(d)] for d in ids]}
+            if extra:
+                out["extra"] = ids
+            yield pd.DataFrame(out)
 
-    docs = spark.range(12).selectExpr("id AS doc_id")
-    chained = pdf_documents(
-        docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    return synth
+
+
+@pytest.mark.parametrize("site", list(_SITES))
+def test_explode_pre_matches_chained(spark, site):
+    entry, id_col, make = _SITES[site]
+    synth = _synth({d: make(d) for d in range(4)}, id_col)
+    ev = spark.range(4).selectExpr(f"id AS {id_col}")
+    chained = entry(
+        ev.mapInPandas(synth, schema=f"{id_col} long, payload binary")
     )
-    fused = pdf_documents(docs, pre=synth)
+    fused = entry(ev, pre=synth)
     assert _rows(fused) == _rows(chained)
-    assert len(_rows(fused)) == 12
+    assert _rows(fused)
 
 
 def test_extract_real_features_pre_matches_chained(spark):
@@ -119,25 +230,16 @@ def test_wds_sample_batches_composes_like_wds_samples(spark):
     assert len(_rows(fused)) == 12  # 6 shards x 2 samples
 
 
-def test_pre_is_off_by_default(spark):
+@pytest.mark.parametrize("site", list(_SITES))
+def test_pre_is_off_by_default(spark, site):
     """Without pre=, the operators still select-narrow their input
     (the original contract): extra columns are tolerated."""
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        build_pdf([["x"]]) for _ in pdf["doc_id"]
-                    ],
-                    "extra": pdf["doc_id"].values,
-                }
-            )
-
-    docs = spark.range(3).selectExpr("id AS doc_id", "id * 2 AS extra")
-    media = docs.mapInPandas(
-        synth, schema="doc_id long, payload binary, extra long"
+    entry, id_col, make = _SITES[site]
+    synth = _synth({d: make(d) for d in range(3)}, id_col, extra=True)
+    ev = spark.range(3).selectExpr(f"id AS {id_col}")
+    media = ev.mapInPandas(
+        synth, schema=f"{id_col} long, payload binary, extra long"
     )
-    out = pdf_documents(media)
-    assert len(_rows(out)) == 3
+    out = _rows(entry(media))
+    assert out == _rows(entry(media.drop("extra")))
+    assert out
