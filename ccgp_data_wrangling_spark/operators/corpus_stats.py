@@ -5,6 +5,9 @@ large-scale training-data pipeline would need"), in the spirit of the
 published Gopher/C4 filtering rules and classic TF-IDF / n-gram LM
 scoring:
 
+* :func:`text_grams` — the ONE word n-gram builder over the
+  :func:`corpus_tokens` tokens, shared by n-gram counts, the bigram
+  LM, span dedup, shingles, DSIR features and the KMV gram sketches.
 * :func:`word_ngram_counts` — the shared building block: one row per
   (doc, n-gram) with its in-doc count. Explode + groupBy, shuffled on
   (doc_id, gram): embarrassingly parallel, no driver state.
@@ -27,7 +30,7 @@ corpus, no driver materialization, no Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -35,6 +38,7 @@ from ccgp_data_wrangling_spark.caching import CacheScope, active_scope
 
 __all__ = [
     "corpus_tokens",
+    "text_grams",
     "word_ngram_counts",
     "repetition_stats",
     "bigram_cross_entropy",
@@ -56,23 +60,30 @@ def corpus_tokens(text_col: str):
     return F.split(F.trim(F.col(text_col)), r"\s+")
 
 
-def _grams(tokens, n: int):
-    """Array of space-joined word n-grams of ``tokens`` (Column).
+def text_grams(text_col: str | Column, n: int, *, partial: bool = False) -> Column:
+    """Array of the space-joined word ``n``-grams of ``text_col`` (a
+    column name or Column), in text order, over the tokens of
+    :func:`corpus_tokens` (empty edge tokens included).
 
-    Built as a fold of ``zip_with`` over ``n`` shifted slices: O(total
-    tokens) work per doc. The naive per-gram ``slice`` form is
-    O(tokens × n) array copies and measured 3× slower; per-gram
-    ``element_at`` lookups were 4.5× slower (boxed index per call).
+    Two codegen'd expressions, no lambda: collapse every ``\\s+`` run
+    (Java's ``\\s`` is ``[ \\t\\n\\x0B\\f\\r]``) of the trimmed text to one
+    space, so ``split(norm, ' ')`` gives exactly the corpus tokens; then
+    one zero-width match at each token start captures the next ``n``
+    tokens. A text with fewer than ``n`` tokens yields ``[]``, or with
+    ``partial=True`` its one partial gram (all its tokens, the shingle
+    convention of operators/dedup.py). Null text yields null.
     """
-    if n == 1:
-        return tokens
-    m = F.greatest(F.size(tokens) - (n - 1), F.lit(0))
-    out = F.slice(tokens, 1, m)
-    for k in range(1, n):
-        out = F.zip_with(
-            out, F.slice(tokens, k + 1, m), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return out
+    if n < 1:
+        raise ValueError(f"n-gram width must be >= 1, got {n}")
+    text = F.col(text_col) if isinstance(text_col, str) else text_col
+    norm = F.regexp_replace(F.trim(text), r"[ \t\n\x0B\f\r]+", " ")
+    gram = r"[^ ]*(?: [^ ]*){%d}" % (n - 1)
+    if partial and n > 1:
+        # or, at the text start only, all of a text shorter than n
+        # tokens: one regex pass, where when(size(grams) = 0, ...) would
+        # run the extract twice
+        gram += r"|\A[^ ]*(?: [^ ]*){0,%d}\z" % (n - 2)
+    return F.regexp_extract_all(norm, F.lit(r"(?<![^ ])(?=(%s))" % gram), 1)
 
 
 def word_ngram_counts(
@@ -92,17 +103,17 @@ def word_ngram_counts(
     ``shuffle_input`` repartitions the raw (id, text) rows before the
     tokenize/explode projection, decoupling its parallelism from the
     input layout (same pattern as operators/linkage.py span
-    generation). Off by default: the gram build is an O(tokens)
-    zip_with, cheap enough that for a normally-partitioned corpus the
-    extra exchange only adds latency. Turn it on when the listing is a
-    handful of dense files.
+    generation). Off by default: the gram build (:func:`text_grams`)
+    is one linear regex pass per doc, cheap enough that for a
+    normally-partitioned corpus the extra exchange only adds latency.
+    Turn it on when the listing is a handful of dense files.
     """
-    tokens = corpus_tokens(text_col)
+    grams = text_grams(text_col, n)
     base = docs.select(id_col, text_col)
     if shuffle_input:
         base = base.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     return (
-        base.select(id_col, F.explode(_grams(tokens, n)).alias("gram"))
+        base.select(id_col, F.explode(grams).alias("gram"))
         .groupBy(id_col, "gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -181,7 +192,6 @@ def bigram_cross_entropy(
     vocabulary-sized context table (broadcast). Per-term log terms are
     rounded to 6 dp so the Spark and DuckDB oracles agree bit-for-bit.
     """
-    tokens = corpus_tokens(text_col)
     # persist: the exploded bigram relation feeds three subtrees
     # (doc counts, bigram model, context counts); without the boundary
     # each recomputes the split+explode from the scan. At full scale
@@ -190,7 +200,7 @@ def bigram_cross_entropy(
     if scope is None:
         scope = active_scope("bigram_cross_entropy")
     pairs = scope.persist(
-        docs.select(id_col, F.explode(_grams(tokens, 2)).alias("bg"))
+        docs.select(id_col, F.explode(text_grams(text_col, 2)).alias("bg"))
     )
     # doc-side multiplicities (one row per distinct (doc, bigram))
     doc_bg = pairs.groupBy(id_col, "bg").agg(F.count(F.lit(1)).alias("m"))
@@ -203,7 +213,7 @@ def bigram_cross_entropy(
     # scalar subquery (DataFrame.scalar, Spark 4): the vocabulary size
     # is evaluated once and inlined — no join node in the plan at all
     v = (
-        docs.select(F.explode(tokens).alias("w"))
+        docs.select(F.explode(corpus_tokens(text_col)).alias("w"))
         .agg(F.countDistinct("w").alias("v"))
         .scalar()
     )

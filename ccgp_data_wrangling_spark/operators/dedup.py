@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.caching import CacheScope, active_scope
+from ccgp_data_wrangling_spark.operators.corpus_stats import text_grams
 
 _MERSENNE31 = (1 << 31) - 1
 
@@ -53,47 +54,29 @@ def _affine_params(n_hashes: int, seed: int) -> list[tuple[int, int]]:
     return out
 
 
-def _shingle_strings(text: Column, k: int) -> Column:
-    """All k-word shingle strings via a zip_with fold — O(tokens) work.
-
-    A per-shingle ``slice`` copies O(tokens × k) elements (measured 3×
-    slower end-to-end); folding ``zip_with`` over k shifted slices does
-    one O(tokens) pass per shift. ``concat_ws`` skips the nulls that
-    zip_with pads short slices with, so documents shorter than k
-    tokens still yield their single partial shingle, matching
-    ``concat_ws(slice(...))`` exactly.
-    """
-    tokens = F.split(F.trim(text), r"\s+")
-    m = F.greatest(F.size(tokens) - (k - 1), F.lit(1))
-    out = F.slice(tokens, 1, m)
-    for j in range(1, k):
-        out = F.zip_with(
-            out, F.slice(tokens, j + 1, m), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return out
-
-
 def word_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct k-word shingles of ``text`` (whitespace-tokenized).
+    """Distinct k-word shingles of ``text`` (corpus_stats.text_grams
+    with ``partial=True``: a document shorter than k tokens yields its
+    one partial shingle).
 
-    Tokenization is ``trim`` + split-on-``\\s+`` so runs of whitespace
-    and edge whitespace can never produce empty tokens — the oracle
-    SQL must use REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\\s+') to agree.
+    Tokenization is ``trim`` + split-on-``\\s+``, the oracle SQL's
+    REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\\s+'). ``trim`` strips only
+    spaces, so other edge whitespace still yields an empty token:
+    ``'\\ta  b\\n'`` tokenizes to ``['', 'a', 'b', '']``.
     """
-    return F.array_distinct(_shingle_strings(text, k))
+    return F.array_distinct(text_grams(text, k, partial=True))
 
 
 def shingle_hashes(text: Column, k: int = 5) -> Column:
     """Distinct 64-bit hashes of the k-word shingles (as long).
 
-    One xxhash64 per shingle string from the O(tokens) zip_with build
-    (tokens cannot contain spaces, so the joined string is injective
-    in the token tuple). 64-bit output keeps within-document
-    collisions — which would silently shift a document's Jaccard — at
-    the ~1e-15 level.
+    One xxhash64 per :func:`word_shingles` string (tokens cannot
+    contain spaces, so the joined string is injective in the token
+    tuple). 64-bit output keeps within-document collisions — which
+    would silently shift a document's Jaccard — at the ~1e-15 level.
     """
     return F.array_distinct(
-        F.transform(_shingle_strings(text, k), lambda s: F.xxhash64(s))
+        F.transform(text_grams(text, k, partial=True), lambda s: F.xxhash64(s))
     )
 
 

@@ -14,8 +14,8 @@ Scale shape (the whole point of the hashed feature space):
   both distribution estimates collapse to ≤ num_buckets rows via
   map-side-combining hash aggregates, regardless of corpus size, and
   ride a broadcast join back onto the per-doc bucket counts.
-* Per-doc work is one tokenize + O(tokens) gram fold
-  (corpus_stats._grams zip_with) + one (id, bucket) hash aggregate:
+* Per-doc work is one tokenize + one linear regex bigram pass
+  (corpus_stats.text_grams) + one (id, bucket) hash aggregate:
   explode-shuffle of ~tokens rows per doc, the same budget class as
   TF-IDF.
 * Totals ride as lazy scalar subqueries; the only driver-sized object
@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ccgp_data_wrangling_spark.operators.corpus_stats import _grams, corpus_tokens
+from ccgp_data_wrangling_spark.operators.corpus_stats import corpus_tokens, text_grams
 from ccgp_data_wrangling_spark.operators.sketches import HASH_SPACE, _element_hash
 
 __all__ = ["hashed_gram_buckets", "dsir_log_ratio_dim", "dsir_select"]
@@ -49,10 +49,9 @@ def hashed_gram_buckets(
     num_buckets: int = 256,
 ) -> DataFrame:
     """(id, bucket, m): per-doc multiplicities of hashed uni+bigram
-    features. The gram build is the shared O(tokens) zip_with fold;
-    the aggregate combines map-side."""
-    tokens = corpus_tokens(text_col)
-    feats = F.concat(_grams(tokens, 1), _grams(tokens, 2))
+    features: the corpus tokens plus :func:`text_grams` bigrams; the
+    aggregate combines map-side."""
+    feats = F.concat(corpus_tokens(text_col), text_grams(text_col, 2))
     return (
         docs.select(F.col(id_col).alias("id"), F.explode(feats).alias("gram"))
         .select("id", F.pmod(_element_hash(F.col("gram")), F.lit(num_buckets)).alias("bucket"))

@@ -8,13 +8,15 @@ Language Models Better" (ACL 2022) removes duplicated *spans*; this
 module is the Spark-shaped equivalent: fixed-width token windows,
 inverted on the window key, scored per document.
 
-Scale shape: tokenize → sliding windows (an O(tokens) zip_with fold,
-operators/corpus_stats._grams) → explode → distinct → one
-map-side-combining groupBy on the window key → semi-join back.
-No all-pairs comparison anywhere; the only shuffles are keyed by the
-window, and ``max_window_df`` caps pathological keys (the empty-ish
-boilerplate that would otherwise concentrate a partition) exactly like
-dedup.ngram_jaccard_pairs' ``max_df`` guard.
+Scale shape: one corpus scan → sliding windows (corpus_stats.text_grams,
+two codegen'd regex expressions) → explode → one hash exchange on the
+span key, which serves both the (doc, span) dedup and the per-span
+document-frequency window → one groupBy on the doc → left join back.
+Two exchanges on the main path, no persist (the windows are read
+once), no all-pairs comparison anywhere. ``max_window_df`` caps
+pathological keys (the empty-ish boilerplate that would otherwise
+concentrate a partition) exactly like dedup.ngram_jaccard_pairs'
+``max_df`` guard.
 
 ``hash_spans=True`` shuffles 8-byte ``xxhash64`` keys instead of the
 ~50-char window strings (≈6× fewer shuffle bytes at 100 TB; the
@@ -26,13 +28,9 @@ string key.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
-from ccgp_data_wrangling_spark.caching import CacheScope, active_scope
-from ccgp_data_wrangling_spark.operators.corpus_stats import (
-    _grams,
-    corpus_tokens,
-)
+from ccgp_data_wrangling_spark.operators.corpus_stats import text_grams
 
 __all__ = ["span_duplication_stats"]
 
@@ -45,7 +43,6 @@ def span_duplication_stats(
     text_col: str = "text",
     hash_spans: bool = False,
     max_window_df: int | None = None,
-    scope: CacheScope | None = None,
 ) -> DataFrame:
     """Per-document duplicated-span statistics.
 
@@ -56,31 +53,22 @@ def span_duplication_stats(
     Gopher repetition filter, corpus_stats.repetition_stats, owns
     within-doc repetition). Docs shorter than ``window`` tokens keep a
     row with zero counts so downstream keep/drop joins see every doc.
+    Rows sharing an id count as one document; a null id is its own
+    document for the span frequencies, and its output row reads zero.
 
     ``dup_ratio`` is rounded to 4 dp on both engines so the value hash
     is stable across double formatting.
     """
-    from pyspark.sql import Window
-
-    span = F.explode(_grams(corpus_tokens(text_col), window)).alias("span")
+    span = F.explode(text_grams(text_col, window)).alias("span")
     spans = docs.select(F.col(id_col).alias("id"), span)
     if hash_spans:
         spans = spans.select("id", F.xxhash64("span").alias("span"))
-    # the tokenize→gram-fold→explode→distinct build dominates cost
-    # (~half the cold run); persist it like dedup.py's signature
-    # tables so repeated invocations in a session reuse it
-    if scope is None:
-        scope = active_scope("span_duplication_stats")
-    spans = scope.persist(spans.distinct())
-
-    # Single-pass shape: annotate each distinct (doc, span) row with
-    # the span's document frequency via a count-over-window keyed on
-    # the span, then one groupBy(doc) rolls both counters up. One
-    # window shuffle + one agg shuffle, versus the naive
-    # df-count / semi-join / two-groupBy plan (5 shuffles + a persist,
-    # measured 2.5x slower cold). Window partitions are per-SPAN —
-    # bounded by the span's df, so no skewed partition at scale (and
-    # ``max_window_df`` bounds what "dup" can even mean).
+    # One exchange keyed on the span: the (id, span) dedup and the
+    # span-partitioned window below both reuse its hash partitioning.
+    # Window partitions are per-SPAN — bounded by the span's df, so no
+    # skewed partition at scale (and ``max_window_df`` bounds what
+    # "dup" can even mean); then one groupBy(doc) rolls both counters up.
+    spans = spans.repartition("span").dropDuplicates(["id", "span"])
     span_df = F.count(F.lit(1)).over(Window.partitionBy("span"))
     is_dup = F.col("span_df") >= 2
     if max_window_df is not None:

@@ -436,10 +436,7 @@ def kmv_shard_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "how much does shard X overlap shard Y" dedup-planning question
     answered from kilobyte sketches, no join over the data.
     """
-    from ccgp_data_wrangling_spark.operators.corpus_stats import (
-        _grams,
-        corpus_tokens,
-    )
+    from ccgp_data_wrangling_spark.operators.corpus_stats import text_grams
     from ccgp_data_wrangling_spark.operators.sketches import (
         kmv_partial,
         kmv_set_overlap,
@@ -450,7 +447,7 @@ def kmv_shard_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     def shard(src: str) -> DataFrame:
         grams = docs.where(F.col("source") == src).select(
             F.lit(src).alias("g"),
-            F.explode(_grams(corpus_tokens("text"), 3)).alias("gram"),
+            F.explode(text_grams("text", 3)).alias("gram"),
         )
         return kmv_partial(grams, "g", "gram", k=256)
 

@@ -32,6 +32,11 @@ def get_spark(
       * UTC timezone (oracle comparison + determinism)
       * Arrow enabled for the pandas-UDF slow path
       * no console progress bars: stage bars would fill stdout
+      * local mode: 4 MB Tungsten pages. The default page is sized
+        from the heap (32 MB on a 2 GB heap). Pages are G1 humongous
+        objects that only a young GC frees, so a plan that makes
+        little garbage piles up dead pages between GCs; small pages
+        keep that pile small.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -57,6 +62,8 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
+    if master.startswith("local"):
+        builder = builder.config("spark.buffer.pageSize", "4m")
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -7,12 +7,20 @@ from __future__ import annotations
 
 import math
 
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
 from ccgp_data_wrangling_spark.operators.corpus_stats import (
     bigram_cross_entropy,
+    corpus_tokens,
     repetition_stats,
+    text_grams,
     tfidf_top_terms,
     word_ngram_counts,
 )
+from ccgp_data_wrangling_spark.operators.dedup import word_shingles
 
 
 def _docs(spark, rows):
@@ -113,3 +121,86 @@ def test_whitespace_variants_tokenize_identically(spark):
     # split used to yield zero bigrams and silently drop it)
     rep = {r.doc_id for r in repetition_stats(df, n=2).collect()}
     assert rep == {1, 2}
+
+
+def _fold_grams(text_col: str, n: int, partial: bool):
+    """Reference gram builder: the ``zip_with`` fold over n shifted
+    slices of the corpus tokens that ``text_grams`` replaced.
+    ``concat_ws`` skips the nulls zip_with pads short slices with, so
+    with ``partial`` a text shorter than n tokens yields one partial
+    gram."""
+    tokens = corpus_tokens(text_col)
+    m = F.greatest(F.size(tokens) - (n - 1), F.lit(1 if partial else 0))
+    out = F.slice(tokens, 1, m)
+    for k in range(1, n):
+        out = F.zip_with(
+            out, F.slice(tokens, k + 1, m), lambda a, b: F.concat_ws(" ", a, b)
+        )
+    return out
+
+
+_GRAM_NS = (1, 2, 3, 5, 8)
+# Java's \s (and so corpus_tokens) is [ \t\n\x0B\f\r] and Spark's trim
+# strips only ' '; the other characters here are whitespace to Python
+# but ordinary token characters to both builders.
+_GRAM_TEXT = st.one_of(
+    st.none(),
+    st.just(""),
+    st.text(
+        alphabet=st.sampled_from(
+            list(" \t\n\x0b\x0c\r") + ["\xa0", "\x1c", "\x85", "\u2003", "\u3000"]
+            + list("abc")
+        ),
+        max_size=40,
+    ),
+)
+
+
+@given(st.lists(_GRAM_TEXT, min_size=1, max_size=12))
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_text_grams_matches_zip_with_fold(spark, texts):
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    cols = [
+        c
+        for n in _GRAM_NS
+        for partial in (False, True)
+        for c in (
+            text_grams("text", n, partial=partial).alias(f"new_{n}_{partial}"),
+            _fold_grams("text", n, partial).alias(f"old_{n}_{partial}"),
+        )
+    ]
+    for row in df.select(*cols).collect():
+        for n in _GRAM_NS:
+            for partial in (False, True):
+                assert row[f"new_{n}_{partial}"] == row[f"old_{n}_{partial}"], (n, partial)
+
+
+def test_text_grams_edge_tokens(spark):
+    # trim strips only ' ', so a tab/newline at an edge is an empty token
+    df = spark.createDataFrame([("\ta  b\n",)], "text string")
+    row = df.select(
+        corpus_tokens("text").alias("t"),
+        text_grams("text", 1).alias("g1"),
+        text_grams("text", 2).alias("g2"),
+        text_grams("text", 5).alias("g5"),
+        text_grams("text", 5, partial=True).alias("p5"),
+    ).first()
+    assert row.t == row.g1 == ["", "a", "b", ""]
+    assert row.g2 == [" a", "a b", "b "]
+    assert row.g5 == []
+    assert row.p5 == [" a b "]
+
+
+@pytest.mark.parametrize("n", [0, -1])
+def test_gram_width_below_one_raises(spark, n):
+    df = _docs(spark, [(1, "a b c")])
+    with pytest.raises(ValueError, match="n-gram width"):
+        text_grams("text", n)
+    with pytest.raises(ValueError, match="n-gram width"):
+        word_ngram_counts(df, n)
+    with pytest.raises(ValueError, match="n-gram width"):
+        word_shingles(F.col("text"), n)

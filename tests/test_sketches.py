@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -313,6 +316,71 @@ def test_span_dedup_df_cap_drops_boilerplate(spark):
     )
     capped = span_duplication_stats(docs, window=8, max_window_df=10)
     assert capped.agg(F.sum("n_dup_windows")).collect()[0][0] == 0
+
+
+# Java's \s; Spark's trim strips only ' '
+_JAVA_WS = re.compile(r"[ \t\n\x0b\x0c\r]+")
+
+
+def _span_row_key(r):
+    return (r[0] is None, r[0] or 0, r[1], r[2])
+
+
+def _brute_span_stats(rows, window, max_window_df):
+    """Python reference for span_duplication_stats, with the oracle
+    SQL's semantics: distinct (id, span) pairs, a null id is one more
+    document, rows sharing an id pool their spans."""
+    spans = set()
+    for doc_id, text in rows:
+        if text is not None:
+            toks = _JAVA_WS.split(text.strip(" "))
+            spans.update(
+                (doc_id, " ".join(toks[j : j + window]))
+                for j in range(len(toks) - window + 1)
+            )
+    span_df = Counter(s for _, s in spans)
+    out = []
+    for doc_id, _ in rows:
+        mine = [s for d, s in spans if d == doc_id and doc_id is not None]
+        dup = sum(
+            1
+            for s in mine
+            if span_df[s] >= 2 and (max_window_df is None or span_df[s] <= max_window_df)
+        )
+        out.append((doc_id, len(mine), dup, dup / len(mine) if mine else 0.0))
+    return sorted(out, key=_span_row_key)
+
+
+@pytest.mark.parametrize("max_window_df", [None, 2])
+@pytest.mark.parametrize("hash_spans", [False, True])
+def test_span_dedup_edge_cases_match_brute_force(spark, hash_spans, max_window_df):
+    rows = [
+        (1, "a b c d e"),
+        (1, "x y z a b c"),  # duplicate id: "a b c" still counts once for doc 1
+        (2, "a b c q"),
+        (None, "q r s t"),  # null ids still count toward a span's df
+        (None, "x y z"),
+        (3, "\tr s t"),  # tab-led: an empty first token
+        (4, None),
+        (5, "r s"),  # shorter than the window
+        (6, "   \t\n  "),  # whitespace only
+        (7, " r  s\x0bt "),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        map(
+            tuple,
+            span_duplication_stats(
+                docs, window=3, hash_spans=hash_spans, max_window_df=max_window_df
+            ).collect(),
+        ),
+        key=_span_row_key,
+    )
+    want = _brute_span_stats(rows, 3, max_window_df)
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    assert [r[3] for r in got] == pytest.approx([r[3] for r in want], abs=6e-5)
+    with pytest.raises(ValueError, match="n-gram width"):
+        span_duplication_stats(docs, window=0)
 
 
 def test_bm25_ranking_sanity(spark):
