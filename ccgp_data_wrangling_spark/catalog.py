@@ -18,11 +18,32 @@ At cluster scale, domain tables should be written partitioned by
 ``ccgp_project_id`` — every observed access pattern filters on project
 id, sample name, or file name (SURVEY.md §4.2), so partition pruning
 on project plus file-level min/max on the keys covers the workload.
+
+How a read gets its schema: every parquet read in the package goes
+through :func:`read_parquet`, which hands Spark the schema so the
+reader launches no inference job (without one, Spark's reader reads a
+footer in a one-task cluster job on every call). If every data file's
+footer carries Spark's ``org.apache.spark.sql.parquet.row.metadata``
+key with one shared value — any table Spark wrote — that JSON is the
+schema, made nullable as Spark's reader makes it. Otherwise
+(pyarrow-written base tables, files with diverging footers) Spark infers
+the schema once. Either result is memoized in a bounded LRU keyed on the
+path, the ``(name, size, mtime_ns)`` of every data file and the confs
+that steer footer-to-schema conversion, so a rewritten file is re-read
+and a repeat read of an unchanged table costs a directory walk. The memo
+holds schemas only, never DataFrames (a shared DataFrame would break
+self-join disambiguation); it is what a metastore gives
+``spark.table()``. Remote paths and directories holding
+``_metadata``/``_common_metadata`` summary files go to Spark unchanged.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import threading
+from collections import OrderedDict
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +64,111 @@ BENCH_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# the confs Spark consults when it turns a parquet footer into a schema
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_MEMO: OrderedDict[tuple, T.StructType] = OrderedDict()
+_SCHEMA_MEMO_SIZE = 256
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read the parquet table at ``path`` with its schema handed to the
+    reader, so the read launches no schema-inference job (see the module
+    docstring for where the schema comes from)."""
+    files = _data_files(path)
+    key = schema = None
+    if files is not None:
+        key = (path, files, tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+        with _SCHEMA_MEMO_LOCK:
+            schema = _SCHEMA_MEMO.get(key)
+        if schema is None:
+            schema = _footer_schema(files)
+    read = spark.read if schema is None else spark.read.schema(schema)
+    df = read.parquet(path)
+    if key is not None:
+        with _SCHEMA_MEMO_LOCK:
+            _SCHEMA_MEMO[key] = df.schema if schema is None else schema
+            _SCHEMA_MEMO.move_to_end(key)
+            if len(_SCHEMA_MEMO) > _SCHEMA_MEMO_SIZE:
+                _SCHEMA_MEMO.popitem(last=False)
+    return df
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (``HadoopFSUtils.shouldFilterOutPathName``)."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _data_files(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """``(file, size, mtime_ns)`` of every data file Spark would list
+    under a local ``path``, sorted; None when the read must go to Spark
+    unchanged (a remote or missing path, summary files, no data files)."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    local = os.path.abspath(url.path if url.scheme else path)
+    if os.path.isfile(local):
+        found = [local]
+    else:
+        found = []
+        for dirpath, dirs, names in os.walk(local):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            for n in names:
+                if n.startswith(("_metadata", "_common_metadata")):
+                    return None
+                if not _hidden(n):
+                    found.append(os.path.join(dirpath, n))
+    out = []
+    for f in sorted(found):
+        st = os.stat(f)
+        out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out) or None
+
+
+def _footer_schema(files: tuple[tuple[str, int, int], ...]) -> T.StructType | None:
+    """The Spark schema JSON every footer carries, made nullable; None
+    unless every file holds the same one."""
+    import pyarrow.parquet as pq
+
+    values = set()
+    for f, _size, _mtime in files:
+        try:
+            kv = pq.read_metadata(f).metadata or {}
+        except (OSError, ValueError):  # not a parquet file: Spark decides
+            return None
+        values.add(kv.get(_SPARK_SCHEMA_KEY))
+        if None in values or len(values) > 1:
+            return None
+    try:
+        return _nullable(T.StructType.fromJson(json.loads(values.pop())))
+    except ValueError:
+        return None
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable
+    (Spark's ``DataType.asNullable``, which its file reader applies)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
@@ -51,7 +177,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # under externally-created sessions too) and truncate to micros
         # exactly as DuckDB does so oracle comparison agrees.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

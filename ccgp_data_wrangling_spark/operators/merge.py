@@ -23,6 +23,13 @@ pruning at the file listing), and rewrites only their directories —
 merge cost scales with the update's footprint, not the table. The
 swap is atomic on a POSIX filesystem (rename); object stores need a
 commit protocol (kept out of scope, as in vanilla-parquet Spark).
+
+Reads go through :func:`catalog.read_parquet`: every file of a table
+this module wrote carries Spark's schema in its footer, so reading the
+target back — once per op, and in :meth:`ParquetTable.read` — launches
+no Spark job. :meth:`ParquetTable.init` takes a schema for an empty
+table and writes it from a JVM-side empty frame, so creating a table
+starts no Python worker.
 """
 
 from __future__ import annotations
@@ -38,6 +45,16 @@ _ASIDE_RE = re.compile(r"\.old-[0-9a-f]{32}$")
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ccgp_data_wrangling_spark.catalog import read_parquet
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """An empty DataFrame of ``schema`` (a StructType or DDL string)
+    built on the JVM: unlike a frame made from an empty Python list it
+    has no partitions, so writing it starts no Python worker."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
 class ParquetTable:
@@ -51,10 +68,18 @@ class ParquetTable:
     # -- IO ---------------------------------------------------------------
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return read_parquet(self.spark, self.path)
 
-    def init(self, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self.path)
+    def init(self, data: DataFrame | T.StructType | str) -> None:
+        """Create (or overwrite) the table with the rows of ``data``, or,
+        when ``data`` is a schema (a StructType or DDL string), as an
+        empty table of that schema (see :func:`empty_frame`)."""
+        self._frame(data).write.mode("overwrite").parquet(self.path)
+
+    def _frame(self, data: DataFrame | T.StructType | str) -> DataFrame:
+        if isinstance(data, DataFrame):
+            return data
+        return empty_frame(self.spark, data)
 
     def _target_for(self, source: DataFrame) -> DataFrame:
         """The slice of the table an op must read to merge ``source``.
@@ -171,7 +196,10 @@ class ParquetTable:
         """MERGE: insert source rows whose key is absent; never touch
         existing rows (update_reads.py:44-56 "$setOnInsert").
         Missing target columns are filled with NULL via unionByName.
+        A key repeated in ``source`` is inserted once; which of its rows
+        is kept is unspecified.
         """
+        source = source.dropDuplicates(self.keys)
         tgt = self._target_for(source)
         new_rows = source.join(tgt.select(*self.keys), self.keys, "left_anti")
         self._swap_in(tgt.unionByName(new_rows, allowMissingColumns=True))
@@ -395,15 +423,15 @@ class PartitionedParquetTable(ParquetTable):
     # -- IO ---------------------------------------------------------------
 
     def read(self) -> DataFrame:
-        df = self.spark.read.parquet(self.path)
+        df = read_parquet(self.spark, self.path)
         for c, t in self.partition_type.items():
             df = df.withColumn(c, F.col(c).cast(t))
         return df
 
-    def init(self, df: DataFrame) -> None:
-        df.write.mode("overwrite").partitionBy(*self.partition_cols).parquet(
-            self.path
-        )
+    def init(self, data: DataFrame | T.StructType | str) -> None:
+        self._frame(data).write.mode("overwrite").partitionBy(
+            *self.partition_cols
+        ).parquet(self.path)
 
     def _target_for(self, source: DataFrame) -> DataFrame:
         tuples = [

@@ -427,9 +427,7 @@ def t3_stream_merge_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
 
     tbl = ParquetTable(spark, os.path.join(tmp, "clicks"), "event_id")
-    tbl.init(
-        spark.createDataFrame([], "event_id long, user_id long, value double")
-    )
+    tbl.init("event_id long, user_id long, value double")
     run_once()
     run_once()  # same checkpoint: fully caught up, must be a no-op
     return tbl.read()

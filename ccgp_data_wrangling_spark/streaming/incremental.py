@@ -121,24 +121,25 @@ def merge_stream(
     """Run a streaming source into a ParquetTable MERGE (T2/T3).
 
     ``mode``: ``insert_only`` (M2, discovery streams) or ``upsert``
-    (M1). Each micro-batch is deduplicated on the target key before
-    merging — a batch may contain the same key twice, and set-oriented
-    MERGE requires unique sources. With ``available_now`` the query
-    drains everything available then stops — the scheduled-cron
-    execution model (T3) with streaming checkpoints.
+    (M1); any other value raises ``ValueError`` before the query
+    starts. Each micro-batch is deduplicated on the target key before
+    merging (``insert_only`` does it itself) — a batch may contain the
+    same key twice, and set-oriented MERGE requires unique sources.
+    With ``available_now`` the query drains everything available then
+    stops — the scheduled-cron execution model (T3) with streaming
+    checkpoints.
 
     Returns the StreamingQuery (caller awaits termination).
     """
+    if mode not in ("insert_only", "upsert"):
+        raise ValueError(f"unknown merge_stream mode: {mode}")
 
     def _sink(batch: DataFrame, _epoch: int) -> None:
         b = transform(batch) if transform is not None else batch
-        b = b.dropDuplicates(target.keys)
         if mode == "insert_only":
             target.insert_only(b)
-        elif mode == "upsert":
-            target.upsert(b)
         else:
-            raise ValueError(f"unknown merge_stream mode: {mode}")
+            target.upsert(b.dropDuplicates(target.keys))
 
     writer = (
         stream.writeStream.foreachBatch(_sink)

@@ -115,7 +115,7 @@ def dash_landing_stream(
     import os
 
     if not os.path.exists(target.path):
-        target.init(spark.createDataFrame([], MP4_SAMPLE_SCHEMA))
+        target.init(MP4_SAMPLE_SCHEMA)
     raw = (
         spark.readStream.format("binaryFile")
         .schema(_BINARYFILE_SCHEMA)

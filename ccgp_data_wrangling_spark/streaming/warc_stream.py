@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ccgp_data_wrangling_spark.operators.merge import ParquetTable
+from ccgp_data_wrangling_spark.operators.merge import ParquetTable, empty_frame
 from ccgp_data_wrangling_spark.sources.warc import warc_records
 from ccgp_data_wrangling_spark.streaming.incremental import merge_stream
 
@@ -111,9 +111,8 @@ def warc_curation_stream(
     if not os.path.exists(target.path):
         target.init(
             curate_warc_records(
-                spark.createDataFrame([], WARC_RECORD_SCHEMA),
-                min_words=min_words,
-            )
+                empty_frame(spark, WARC_RECORD_SCHEMA), min_words=min_words
+            ).schema
         )
     recs = warc_archive_records(spark, archive_dir, streaming=True)
     return merge_stream(
@@ -148,7 +147,7 @@ def wds_landing_stream(
     )
 
     if not os.path.exists(target.path):
-        target.init(spark.createDataFrame([], WDS_SAMPLE_SCHEMA))
+        target.init(WDS_SAMPLE_SCHEMA)
     raw = (
         spark.readStream.format("binaryFile")
         .schema(_BINARYFILE_SCHEMA)

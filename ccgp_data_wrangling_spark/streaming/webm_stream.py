@@ -120,7 +120,7 @@ def webm_landing_stream(
     import os
 
     if not os.path.exists(target.path):
-        target.init(spark.createDataFrame([], WEBM_BLOCK_SCHEMA))
+        target.init(WEBM_BLOCK_SCHEMA)
     raw = (
         spark.readStream.format("binaryFile")
         .schema(_BINARYFILE_SCHEMA)

@@ -147,34 +147,22 @@ def test_empty_right_raises(spark):
         fuzzy_argmax_join(left, right, "l", "r")
 
 
-def _jobs(sc, group, build):
-    sc.setJobGroup(group, group)
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_x12_plan_has_no_pair_join_and_builds_in_one_job(spark):
-    """x12's build runs one Spark job besides reading its two tables'
-    parquet footers: the right-side collect. Its plan has no all-pairs
-    join; the pairs live inside the kernel."""
+    """x12's build runs exactly one Spark job, the right-side collect,
+    once its two tables' schemas are known (the first read of a
+    pyarrow-written table in a process infers it). Its plan has no
+    all-pairs join; the pairs live inside the kernel."""
     from ccgp_data_wrangling_spark.catalog import load_table
     from ccgp_data_wrangling_spark.queries.relational import x12_fuzzy_best_match
-    from tests.conftest import SF_CORRECT
+    from tests.conftest import SF_CORRECT, jobs_in_group
 
     sc = spark.sparkContext
-    _, reads = _jobs(
-        sc,
-        "test-fuzzy-x12-reads",
-        lambda: [load_table(spark, SF_CORRECT, t) for t in ("supplier", "customer")],
-    )
-    df, jobs = _jobs(
+    for t in ("supplier", "customer"):
+        load_table(spark, SF_CORRECT, t)
+    df, jobs = jobs_in_group(
         sc, "test-fuzzy-x12-build", lambda: x12_fuzzy_best_match(spark, SF_CORRECT)
     )
-    assert jobs == reads + 1
+    assert jobs == 1
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -9,6 +9,9 @@ from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.merge import ParquetTable
 
+# every table read below is checked against Spark's schema inference
+pytestmark = pytest.mark.usefixtures("read_schema_parity")
+
 
 @pytest.fixture
 def tbl(spark, tmp_path):
@@ -57,6 +60,18 @@ def test_insert_only(spark, tbl):
     assert rows["S4"] == (["d.gz"], 40, "p3")
     tbl.insert_only(src)
     assert _rows(tbl) == rows
+
+
+def test_insert_only_repeated_new_key_inserts_once(spark, tmp_path):
+    t = ParquetTable(spark, str(tmp_path / "t"), "k")
+    t.init(spark.createDataFrame([(1, "a")], "k long, v string"))
+    src = spark.createDataFrame([(2, "x"), (2, "y"), (1, "z")], "k long, v string")
+    t.insert_only(src)
+    rows = sorted(tuple(r) for r in t.read().collect())
+    assert [k for k, _ in rows] == [1, 2]
+    assert rows[0] == (1, "a") and rows[1][1] in ("x", "y")
+    t.insert_only(src)  # re-run: a no-op
+    assert sorted(tuple(r) for r in t.read().collect()) == rows
 
 
 def test_array_union_set(spark, tbl):

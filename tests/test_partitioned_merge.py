@@ -7,12 +7,16 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.merge import (
     ParquetTable,
     PartitionedParquetTable,
 )
+
+# every table read below is checked against Spark's schema inference
+pytestmark = pytest.mark.usefixtures("read_schema_parity")
 
 
 def _rows(df):

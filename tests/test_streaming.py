@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.merge import ParquetTable
@@ -116,6 +117,24 @@ def test_merge_stream_upsert(spark, tmp_path):
     q.awaitTermination(60)
     rows = {r.k: r.v for r in target.read().collect()}
     assert rows == {"a": 1, "b": 2}
+
+
+@pytest.mark.parametrize("csv", ["", "k,v\na,1\n"], ids=["empty", "rows"])
+def test_merge_stream_unknown_mode_raises_on_driver(spark, tmp_path, csv):
+    src_dir = tmp_path / "incoming"
+    src_dir.mkdir()
+    if csv:
+        (src_dir / "b.csv").write_text(csv)
+    target = ParquetTable(spark, str(tmp_path / "t"), "k")
+    target.init("k string, v long")
+    stream = (
+        spark.readStream.schema("k string, v long").option("header", True)
+        .csv(str(src_dir))
+    )
+    with pytest.raises(ValueError, match="unknown merge_stream mode: bogus"):
+        merge_stream(stream, target, checkpoint_dir=str(tmp_path / "ck"), mode="bogus")
+    assert not (tmp_path / "ck").exists()  # no query was started
+    assert target.read().count() == 0
 
 
 def test_windowed_event_counts_stream_matches_batch(spark, tmp_path):
