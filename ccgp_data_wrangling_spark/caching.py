@@ -100,9 +100,10 @@ def use_scope(scope: CacheScope):
 
     Operators called inside the block (without an explicit ``scope=``)
     persist into it instead of their rotating default, so a caller can
-    pin intermediates across repeated invocations (e.g. bench's
-    repeat-timing loop) and release them all at one deterministic
-    point. Reentrant; the innermost scope wins.
+    pin intermediates across repeated invocations (e.g. the perfbench
+    child, which gives each timed query its own scope) and release
+    them all at one deterministic point. Reentrant; the innermost
+    scope wins.
     """
     _AMBIENT.append(scope)
     try:

@@ -60,61 +60,6 @@ from ccgp_data_wrangling_spark.functions.similarity import fuzz_ratio
 _SEP_CLASS = r"[_\-.]"
 
 
-def candidate_spans(file_col: Column, max_span: int = 6) -> Column:
-    """All separator-bounded spans of ``file_col`` ≤ max_span tokens,
-    each followed by a separator in the original string; separators
-    inside a span are preserved. Returns array<string> (distinct).
-
-    Example: ``"AB_C-1.fq.gz"`` → spans over tokens [AB, C, 1, fq]
-    include ``AB``, ``AB_C``, ``AB_C-1``, ``C``, ``C-1``, ``1``, ...
-
-    Implementation: one O(n) fold computes each token's 1-based start
-    offset in the original string; every span is then a single
-    ``substring`` (separators are preserved for free). The token and
-    offset arrays are bound through a one-element transform lambda so
-    they are evaluated ONCE per row — HOF lambdas are interpreted, and
-    inlining the split/fold into each of the O(n·max_span) span
-    expressions (what projection collapse otherwise does) multiplies
-    the per-row cost by the span count.
-    """
-    tokens = F.split(file_col, _SEP_CLASS)
-    n = F.size(tokens)
-    # starts[k] = 1-based position of token k-1 (0-based k-1)
-    starts = F.aggregate(
-        F.slice(tokens, 1, F.greatest(n - 1, F.lit(0))),
-        F.array(F.lit(1)),
-        lambda acc, t: F.concat(
-            acc, F.array(F.element_at(acc, -1) + F.length(t) + 1)
-        ),
-    )
-
-    def spans_of(p: Column) -> Column:
-        toks = p["toks"]
-        st = p["st"]
-        m = F.size(toks)
-        return F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), m - 2),
-                lambda i: F.transform(
-                    F.sequence(i, F.least(i + max_span - 1, m - 2)),
-                    lambda j: F.substring(
-                        file_col,
-                        F.element_at(st, i + 1),
-                        F.element_at(st, j + 1)
-                        + F.length(F.element_at(toks, j + 1))
-                        - F.element_at(st, i + 1),
-                    ),
-                ),
-            )
-        )
-
-    prep = F.array(F.struct(tokens.alias("toks"), starts.alias("st")))
-    spans = F.flatten(F.transform(prep, spans_of))
-    return F.when(n >= 2, F.array_distinct(spans)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def id_variants(id_col: Column) -> Column:
     """Variant cascade for one id: array<struct<variant,tier>>.
 
@@ -152,33 +97,16 @@ def linkage_pairs(
     sample_key: str = "sample_name",
     file_key: str = "file_name",
     max_span: int = 6,
-    broadcast_variants: bool = True,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Candidate (sample, file) matches with tier metadata, before
     conflict resolution. One row per matched pair at the sample's
     winning (id_idx, tier), ``.gz``-filtered.
 
-    ``broadcast_variants`` (default on) broadcasts the exploded
-    (id-variant, tier) side of the span join — samples are the
-    dimension here (a few rows per sample), so the span side, which is
-    tokens×max_span larger than the file listing, is never shuffled.
-    Disable only if the sample dimension itself outgrows broadcast
-    size (tens of millions of ids), which falls back to a shuffle
-    hash join on the span strings.
-
-    The fallback join is **salted** (``salt_buckets``): span strings
-    are a natural hot key — a shared prefix across 10⁵ file names puts
-    all its copies under ONE span value, so an unsalted shuffle would
-    send them to one task. The span side gets
-    ``salt = xxhash64(file) % salt_buckets`` and the (small) variants
-    side replicates across all buckets, so the join key becomes
-    ``(variant, salt)`` and a hot span's rows spread over
-    ``salt_buckets`` tasks. Replication multiplies only the dimension
-    side — exactly the side already small enough to consider
-    broadcasting. The broadcast path needs no salting (no shuffle on
-    the span key exists there; per-task work is proportional to its
-    input split regardless of span skew).
+    The exploded (id-variant, tier) side of the span join is broadcast:
+    samples are the dimension here (a few rows per sample), so the span
+    side, which is tokens×max_span larger than the file listing, is
+    never shuffled on the span key: per-task work follows the input
+    split, however many file names share one hot span.
     """
     eligible = samples.where(F.col("minicore_sequenced") == "YES").where(
         F.col(id_col).isNotNull() & (F.lower(F.col(id_col)) != "nan")
@@ -202,9 +130,10 @@ def linkage_pairs(
 
     # file side: candidate spans via explode(sequence) + codegen'd
     # substring — 6× faster than the per-row nested-HOF form of
-    # candidate_spans (interpreted lambdas), same span set. Duplicate
-    # spans per file (identical substrings from distinct (i,j)) are
-    # harmless: tier selection is a min and pairs dedup at the end.
+    # tests/test_linkage.py:candidate_spans (interpreted lambdas), same
+    # span set. Duplicate spans per file (identical substrings from
+    # distinct (i,j)) are harmless: tier selection is a min and pairs
+    # dedup at the end.
     toks = F.split(F.col(file_key), _SEP_CLASS)
     starts = F.aggregate(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -272,19 +201,7 @@ def linkage_pairs(
         )
     )
 
-    if broadcast_variants:
-        matched = F.broadcast(variants).join(spans, "variant")
-    else:
-        spans_salted = spans.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(F.col(file_key)), F.lit(salt_buckets)).cast("int"),
-        )
-        variants_salted = variants.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-        )
-        matched = variants_salted.join(spans_salted, ["variant", "__salt"]).drop(
-            "__salt"
-        )
+    matched = F.broadcast(variants).join(spans, "variant")
 
     # per-sample winning (id_idx, tier): the cascade stops at the first
     # id/tier that matched anything — BEFORE the .gz filter

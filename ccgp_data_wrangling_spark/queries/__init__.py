@@ -44,12 +44,12 @@ def register(name: str, oracle: str | None):
 # registration order.  Keep every name that still lacks a green
 # CORRECTNESS row — plus any newly added query — inside the first 50.
 #
-# r6 rotation (tools/rotate_registry.py --write over CORRECTNESS_r01-05):
-# every previously registered query is cumulatively green, so the
-# head slots are the queries ADDED this round (first driver rows) and
-# the rest of the window holds greens ordered by OLDEST last driver
-# row — the stalest-first re-verification cycle the round-5 verdict
-# prescribed (regression freshness, not new coverage).
+# ``python tools/rotate_registry.py --write`` regenerates the list from
+# tests/driver_verdicts.json (each name's latest driver round and
+# verdict): reds, then never-verified names, then greens ordered by
+# OLDEST last driver row (stalest-first re-verification). The list
+# below was written in round 6, when the head slots were that round's
+# new queries and every earlier query was already green.
 _PRIORITY: list[str] = [
     "pdf_jpx_structured_extract",
     "doc_text_extract",

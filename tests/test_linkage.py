@@ -7,10 +7,11 @@ from __future__ import annotations
 
 from datetime import datetime
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.linkage import (
-    candidate_spans,
+    _SEP_CLASS,
     link_reads_to_samples,
     linkage_pairs,
     resolve_conflicts,
@@ -18,6 +19,63 @@ from ccgp_data_wrangling_spark.operators.linkage import (
 
 TS = datetime(2024, 1, 5, 12, 0, 0)
 TS2 = datetime(2024, 2, 5, 12, 0, 0)
+
+
+def candidate_spans(file_col: Column, max_span: int = 6) -> Column:
+    """All separator-bounded spans of ``file_col`` ≤ max_span tokens,
+    each followed by a separator in the original string; separators
+    inside a span are preserved. Returns array<string> (distinct).
+    Reference for the span set that ``linkage_pairs`` builds with
+    explode + substring.
+
+    Example: ``"AB_C-1.fq.gz"`` → spans over tokens [AB, C, 1, fq]
+    include ``AB``, ``AB_C``, ``AB_C-1``, ``C``, ``C-1``, ``1``, ...
+
+    Implementation: one O(n) fold computes each token's 1-based start
+    offset in the original string; every span is then a single
+    ``substring`` (separators are preserved for free). The token and
+    offset arrays are bound through a one-element transform lambda so
+    they are evaluated ONCE per row — HOF lambdas are interpreted, and
+    inlining the split/fold into each of the O(n·max_span) span
+    expressions (what projection collapse otherwise does) multiplies
+    the per-row cost by the span count.
+    """
+    tokens = F.split(file_col, _SEP_CLASS)
+    n = F.size(tokens)
+    # starts[k] = 1-based position of token k-1 (0-based k-1)
+    starts = F.aggregate(
+        F.slice(tokens, 1, F.greatest(n - 1, F.lit(0))),
+        F.array(F.lit(1)),
+        lambda acc, t: F.concat(
+            acc, F.array(F.element_at(acc, -1) + F.length(t) + 1)
+        ),
+    )
+
+    def spans_of(p: Column) -> Column:
+        toks = p["toks"]
+        st = p["st"]
+        m = F.size(toks)
+        return F.flatten(
+            F.transform(
+                F.sequence(F.lit(0), m - 2),
+                lambda i: F.transform(
+                    F.sequence(i, F.least(i + max_span - 1, m - 2)),
+                    lambda j: F.substring(
+                        file_col,
+                        F.element_at(st, i + 1),
+                        F.element_at(st, j + 1)
+                        + F.length(F.element_at(toks, j + 1))
+                        - F.element_at(st, i + 1),
+                    ),
+                ),
+            )
+        )
+
+    prep = F.array(F.struct(tokens.alias("toks"), starts.alias("st")))
+    spans = F.flatten(F.transform(prep, spans_of))
+    return F.when(n >= 2, F.array_distinct(spans)).otherwise(
+        F.array().cast("array<string>")
+    )
 
 
 def _samples(spark, rows):
@@ -143,54 +201,3 @@ def test_no_nan_ids(spark):
     s = _samples(spark, [("S1", "nan", "YES"), ("S2", None, "YES")])
     r = _reads(spark, ["nan_R1.fastq.gz"])
     assert linkage_pairs(s, r).collect() == []
-
-
-def test_salted_fallback_matches_broadcast_on_hot_span_corpus(spark):
-    """A planted hot span (one shared prefix across the whole file
-    listing) must not change results under the salted non-broadcast
-    fallback, and the salt must actually spread the hot key: max rows
-    per (variant, salt) shuffle key is ~1/salt_buckets of the hot
-    span's unsalted key size."""
-    n_files = 2000
-    # every file shares the 'HOTPREFIX' leading token → the span
-    # 'HOTPREFIX' (and several composites) appear in all 2000 names
-    names = [f"HOTPREFIX_S{i % 40}_L{i}_R1.fq.gz" for i in range(n_files)]
-    reads = _reads(spark, names)
-    samples = _samples(
-        spark, [(f"samp{j}", f"S{j}", "YES") for j in range(40)]
-    )
-
-    bcast = {
-        (r.sample_name, r.file_name)
-        for r in linkage_pairs(samples, reads).collect()
-    }
-    salted = {
-        (r.sample_name, r.file_name)
-        for r in linkage_pairs(
-            samples, reads, broadcast_variants=False, salt_buckets=16
-        ).collect()
-    }
-    assert salted == bcast
-    assert len(salted) == n_files  # every file links to its S-token sample
-
-    # skew bound: replay the span+salt generation and measure key widths
-    from ccgp_data_wrangling_spark.operators.linkage import candidate_spans
-
-    spans = reads.select(
-        "file_name",
-        F.explode(candidate_spans(F.col("file_name"))).alias("variant"),
-    ).withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col("file_name")), F.lit(16)).cast("int")
-    )
-    unsalted_max = (
-        spans.groupBy("variant").count().agg(F.max("count")).collect()[0][0]
-    )
-    salted_max = (
-        spans.groupBy("variant", "__salt")
-        .count()
-        .agg(F.max("count"))
-        .collect()[0][0]
-    )
-    assert unsalted_max == n_files  # the planted hot key is real
-    # xxhash64 spreads uniformly; allow 2x headroom over the ideal n/16
-    assert salted_max <= 2 * n_files / 16

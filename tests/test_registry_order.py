@@ -5,36 +5,17 @@ in iteration order, so ordering is part of the driver contract:
 every query that has never received a green driver CORRECTNESS row —
 and every newly added query — must sit inside that window.
 
-Green-ness is computed from the recorded CORRECTNESS_r*.json files
-with the same rules as tools/rotate_registry.py (a hardcoded name set
-went stale the first time a new round landed — this stays current by
-construction).
+Green-ness is read from tests/driver_verdicts.json: each query name's
+latest driver round and whether that row was green (folded once from
+the per-round driver records; tools/rotate_registry.py says how).
 """
 
-import glob
 import json
-import re
+from pathlib import Path
 
 from ccgp_data_wrangling_spark.queries import _PRIORITY, all_oracles, all_queries
 
-
-def _driver_green() -> set[str]:
-    """Names whose LATEST driver row is green (rows+schema+hash, no err)."""
-    last: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        for name, rec in json.load(open(path)).items():
-            ok = (
-                isinstance(rec, dict)
-                and not rec.get("err")
-                and rec.get("rows_match") is not False
-                and rec.get("schema_match") is not False
-                and rec.get("hash_match") is not False
-            )
-            if name not in last or rnd >= last[name][0]:
-                last[name] = (rnd, ok)
-    return {n for n, (_, ok) in last.items() if ok}
+VERDICTS = Path(__file__).with_name("driver_verdicts.json")
 
 
 def test_never_green_queries_fill_driver_window():
@@ -43,7 +24,9 @@ def test_never_green_queries_fill_driver_window():
     never-green queries: a slot spent re-checking an already-green
     query while a never-green one waits outside would waste the
     driver's budget."""
-    green = _driver_green()
+    verdicts = json.loads(VERDICTS.read_text())
+    assert verdicts, f"{VERDICTS} holds no driver verdicts"
+    green = {n for n, v in verdicts.items() if v["green"]}
     names = list(all_queries())
     window = names[:50]
     never_green = [n for n in names if n not in green]

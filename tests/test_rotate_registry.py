@@ -4,12 +4,13 @@ from __future__ import annotations
 
 import importlib.util
 import json
-import sys
+from pathlib import Path
 
 
 def _load_tool():
     spec = importlib.util.spec_from_file_location(
-        "rotate_registry", "/root/repo/tools/rotate_registry.py"
+        "rotate_registry",
+        Path(__file__).resolve().parent.parent / "tools" / "rotate_registry.py",
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -24,10 +25,10 @@ def test_priority_order_reds_then_never_then_stale_greens():
     prio = tool.compute_priority()
     assert sorted(prio) == sorted(registered)  # permutation, no loss
 
-    rounds = {}
-    for rnd, path in tool._round_files():
-        for name, rec in json.load(open(path)).items():
-            rounds[name] = (rnd, tool._is_green(rec))
+    rounds = {
+        name: (v["round"], v["green"])
+        for name, v in json.loads(tool.VERDICTS.read_text()).items()
+    }
     reds = [n for n in prio if n in rounds and not rounds[n][1]]
     greens = [n for n in prio if n in rounds and rounds[n][1]]
     nevers = [n for n in prio if n not in rounds]
@@ -40,15 +41,3 @@ def test_priority_order_reds_then_never_then_stale_greens():
     # greens ordered stalest-round-first
     green_rounds = [rounds[n][0] for n in greens]
     assert green_rounds == sorted(green_rounds)
-
-
-def test_is_green_semantics():
-    tool = _load_tool()
-    assert tool._is_green(
-        {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    )
-    assert not tool._is_green({"rows_match": False, "err": None})
-    assert not tool._is_green({"err": "boom"})
-    assert not tool._is_green("garbage")
-    # rows-only records (no oracle) count green when no error recorded
-    assert tool._is_green({"err": None, "spark_rows": 10})

@@ -5,7 +5,12 @@ Optional argv: substring filters — only queries whose name contains any
 given substring are driven (the full suite runs when no args are given,
 which is what the real driver does)."""
 import os, sys, math, time
-sys.path.insert(0, "/root/repo")
+from pathlib import Path
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
+# the Python workers import the package too, from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 import duckdb
 import __spark_entry__ as ent
 from pyspark.sql import SparkSession
@@ -46,7 +51,6 @@ if len(sys.argv) > 1:
     qs = {n: f for n, f in qs.items() if any(p in n for p in pats)}
     print(f"(filtered to {len(qs)} queries matching {pats})")
 ok = bad = 0
-results = {}
 for name, fn in qs.items():
     t0 = time.time()
     try:
@@ -54,12 +58,9 @@ for name, fn in qs.items():
         srows = [tuple(r) for r in sdf.collect()]
     except Exception as e:  # noqa: BLE001 — a crash is a red row, not a dead run
         bad += 1
-        results[name] = {"status": "error", "error": f"{type(e).__name__}: {e}"}
         print(f"  {name}: *** ERROR *** {e}")
         continue
     if name not in oracles:
-        results[name] = {"status": "rows_only", "rows": len(srows),
-                         "sec": round(time.time()-t0, 1)}
         print(f"  {name}: rows-only, {len(srows)} rows [{time.time()-t0:.1f}s]")
         continue
     rel = con.execute(oracles[name])
@@ -68,30 +69,7 @@ for name, fn in qs.items():
     match = (sorted(sdf.columns) == sorted(dcols) and len(srows) == len(drows)
              and canon(srows, sdf.columns) == canon(drows, dcols))
     ok += match; bad += (not match)
-    results[name] = {"status": "ok" if match else "mismatch",
-                     "rows": len(srows), "sec": round(time.time()-t0, 1)}
     print(f"  {name}: {'MATCH' if match else '*** MISMATCH ***'} ({len(srows)} rows) [{time.time()-t0:.1f}s]")
 print(f"\n{ok} match, {bad} mismatch of {len(qs)} queries")
 
-# committed artifact (round-7 verdict task 1): the driver checks a
-# 50-query window per round; this full-registry record, stamped with
-# the tree it ran against, is the freshness story for the rest
-import json
-out_path = os.environ.get("SPARK_GRAFT_DRIVE_OUT")
-if out_path and len(sys.argv) == 1:  # only a FULL run is worth stamping
-    sys.path.insert(0, "/root/repo/tools")
-    from treestate import head_sha, tree_dirty
-    sha = head_sha()
-    dirty = tree_dirty()
-    with open(out_path, "w") as fh:
-        json.dump({
-            "sf_dir": SF, "head": sha, "tree_dirty": dirty,
-            "n_ok": ok, "n_mismatch": bad,
-            "n_rows_only": sum(1 for r in results.values()
-                               if r["status"] == "rows_only"),
-            "n_total": len(qs),
-            "queries": results,
-        }, fh, indent=1)
-        fh.write("\n")
-    print(f"wrote {out_path} (HEAD {sha[:12]}{' DIRTY' if dirty else ''})")
 sys.exit(1 if bad else 0)

@@ -26,17 +26,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from ccgp_data_wrangling_spark.queries import all_queries
 from ccgp_data_wrangling_spark.session import get_spark
 
-# quadratic by design (stress variants of small-dimension fuzzy ops).
-# x12: uniform fixed-width ids defeat every generic exact blocking
-# scheme (length keys, q-grams, PassJoin segments all keep ~all pairs —
-# measured 61 s blocked vs 2.5 s banded cross at sf0.1), so the banded
-# broadcast nested-loop IS the right plan there. x12b's pass-1
-# candidates ARE an equi-join; the nested-loop node in its plan is the
-# exactness-fallback branch, ~empty at runtime.
+# quadratic by design, or a nested loop over a bounded build side
 CARTESIAN_OK = {
-    "x12_fuzzy_best_match",
-    "x12b_blocked_fuzzy_match",
-    "knn_top10_cosine",
     # exact all-pairs baseline by design; the production path feeds
     # LSH/IVF candidates into the same operator (tests/test_bitext.py)
     "bitext_margin_mine",
@@ -67,15 +58,11 @@ def audit_plan(name: str, plan: str) -> list[str]:
 
 
 def main() -> int:
-    import json
-    import os
-
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark(app_name="explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
     failures = 0
-    report: dict[str, dict] = {}
     for name, fn in sorted(all_queries().items()):
         if only and name not in only:
             continue
@@ -87,36 +74,14 @@ def main() -> int:
             plan = buf.getvalue()
         except Exception as exc:  # noqa: BLE001
             print(f"  {name}: ERROR {str(exc)[:120]}")
-            report[name] = {"status": "ERROR", "error": str(exc)[:300]}
             failures += 1
             continue
         warns = audit_plan(name, plan)
-        waived = name in CARTESIAN_OK
         if warns:
             failures += 1
             print(f"  {name}: WARN {', '.join(warns)}")
-            report[name] = {"status": "WARN", "warns": warns}
         else:
             print(f"  {name}: OK")
-            report[name] = {"status": "OK", "waived_cartesian": waived}
-    out = os.environ.get("SPARK_GRAFT_AUDIT_OUT")
-    if out:
-        summary = {
-            "sf_dir": sf_dir,
-            "n_queries": len(report),
-            "n_ok": sum(1 for v in report.values() if v["status"] == "OK"),
-            "n_warn": sum(
-                1 for v in report.values() if v["status"] == "WARN"
-            ),
-            "n_error": sum(
-                1 for v in report.values() if v["status"] == "ERROR"
-            ),
-            "cartesian_waivers": sorted(CARTESIAN_OK),
-            "queries": report,
-        }
-        with open(out, "w") as fh:
-            json.dump(summary, fh, indent=1)
-            fh.write("\n")
     return 1 if failures else 0
 
 

@@ -1,11 +1,18 @@
-"""Regenerate the query-registry priority list from CORRECTNESS files.
+"""Regenerate the query-registry priority list from the driver verdicts.
 
 The driver verifies only the FIRST 50 registered queries each round,
 so registration order is coverage policy: every query that has never
 received a green driver row should occupy the window before anything
-already verified. This tool recomputes that order from the recorded
-CORRECTNESS_r*.json files and prints (or rewrites) the `_PRIORITY`
-block in ccgp_data_wrangling_spark/queries/__init__.py.
+already verified. This tool recomputes that order from
+``tests/driver_verdicts.json`` and prints (or rewrites) the
+`_PRIORITY` block in ccgp_data_wrangling_spark/queries/__init__.py.
+
+``tests/driver_verdicts.json`` maps each query name to the LATEST
+driver round that checked it and whether that row was green. It was
+folded once from the per-round driver records (CORRECTNESS_r01-r15)
+with one rule: a row is green when it is a record with no ``err``
+and none of ``rows_match``, ``schema_match``, ``hash_match`` is
+false. Those records are in git history, not in the tree.
 
 Ordering produced:
 1. queries with a RED driver row and no later green (must overwrite
@@ -21,58 +28,35 @@ Usage:
 
 from __future__ import annotations
 
-import glob
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
-INIT = "ccgp_data_wrangling_spark/queries/__init__.py"
-
-
-def _round_files() -> list[tuple[int, str]]:
-    out = []
-    for p in glob.glob("CORRECTNESS_r*.json"):
-        m = re.search(r"_r(\d+)\.json$", p)
-        if m:
-            out.append((int(m.group(1)), p))
-    return sorted(out)
-
-
-def _is_green(rec: object) -> bool:
-    """A driver row counts green if no recorded check failed."""
-    if not isinstance(rec, dict):
-        return False
-    if rec.get("err"):
-        return False
-    for k in ("rows_match", "schema_match", "hash_match"):
-        if rec.get(k) is False:
-            return False
-    return True
+INIT = ROOT / "ccgp_data_wrangling_spark" / "queries" / "__init__.py"
+VERDICTS = ROOT / "tests" / "driver_verdicts.json"
 
 
 def compute_priority() -> list[str]:
     import __spark_entry__ as ent
 
     registered = list(ent.queries().keys())
-    last_verdict: dict[str, tuple[int, bool]] = {}
-    for rnd, path in _round_files():
-        data = json.load(open(path))
-        for name, rec in data.items():
-            last_verdict[name] = (rnd, _is_green(rec))
+    verdicts = json.loads(VERDICTS.read_text())
 
-    reds = [n for n in registered if n in last_verdict and not last_verdict[n][1]]
-    never = [n for n in registered if n not in last_verdict]
+    reds = [n for n in registered if n in verdicts and not verdicts[n]["green"]]
+    never = [n for n in registered if n not in verdicts]
     greens = sorted(
-        (n for n in registered if n in last_verdict and last_verdict[n][1]),
-        key=lambda n: last_verdict[n][0],
+        (n for n in registered if n in verdicts and verdicts[n]["green"]),
+        key=lambda n: verdicts[n]["round"],
     )
     return reds + never + greens
 
 
 def rewrite(priority: list[str]) -> None:
-    src = open(INIT).read()
+    src = INIT.read_text()
     body = "\n".join(f'    "{n}",' for n in priority)
     new = re.sub(
         r"_PRIORITY: list\[str\] = \[\n.*?\n\]",
@@ -83,7 +67,7 @@ def rewrite(priority: list[str]) -> None:
     )
     if new == src:
         raise SystemExit("no _PRIORITY block replaced — aborting")
-    open(INIT, "w").write(new)
+    INIT.write_text(new)
 
 
 if __name__ == "__main__":
