@@ -16,6 +16,9 @@ Design stance (SURVEY.md §7.0):
     on local[*].
 """
 
+# imported for its effect: Python workers stop re-reading pyspark.zip
+# on every task (see the module)
+from ccgp_data_wrangling_spark import _zipcache  # noqa: F401
 from ccgp_data_wrangling_spark.session import get_spark
 
 __all__ = ["get_spark"]

@@ -128,12 +128,37 @@ def linkage_pairs(
         F.col("v.tier").alias("tier"),
     )
 
-    # file side: candidate spans via explode(sequence) + codegen'd
-    # substring — 6× faster than the per-row nested-HOF form of
-    # tests/test_linkage.py:candidate_spans (interpreted lambdas), same
-    # span set. Duplicate spans per file (identical substrings from
-    # distinct (i,j)) are harmless: tier selection is a min and pairs
-    # dedup at the end.
+    spans = _file_spans(reads, file_key, max_span)
+    matched = F.broadcast(variants).join(spans, "variant")
+
+    # per-sample winning (id_idx, tier): the cascade stops at the first
+    # id/tier that matched anything — BEFORE the .gz filter
+    rank = (F.col("id_idx") * 100 + F.col("tier")).alias("rank")
+    w_sample = W.partitionBy(sample_key)
+    with_rank = matched.select(
+        sample_key, file_key, "filesize", "mdate", "id_idx", "tier", rank
+    ).withColumn("min_rank", F.min("rank").over(w_sample))
+    at_tier = with_rank.where(F.col("rank") == F.col("min_rank")).drop(
+        "rank", "min_rank"
+    )
+
+    # .gz filter AFTER tier selection (update_reads.py:147), dedup pairs
+    # (several spans of one file can equal the same variant)
+    return at_tier.where(F.col(file_key).endswith(".gz")).dropDuplicates(
+        [sample_key, file_key]
+    )
+
+
+def _file_spans(reads: DataFrame, file_key: str, max_span: int) -> DataFrame:
+    """The file side of ``linkage_pairs``: one (file, filesize, mdate,
+    variant) row per separator-bounded span of at most ``max_span``
+    tokens that a separator follows, separators inside kept."""
+    # explode(sequence) + codegen'd substring — 6× faster than the
+    # per-row nested-HOF form of tests/test_linkage.py:candidate_spans
+    # (interpreted lambdas), same span set (checked by
+    # test_file_spans_match_candidate_spans). Duplicate spans per file
+    # (identical substrings from distinct (i,j)) are harmless: tier
+    # selection is a min and pairs dedup at the end.
     toks = F.split(F.col(file_key), _SEP_CLASS)
     starts = F.aggregate(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -163,7 +188,7 @@ def linkage_pairs(
         )
         .where(F.col("__n") >= 2)
     )
-    spans = (
+    return (
         base.select(
             file_key,
             "filesize",
@@ -199,25 +224,6 @@ def linkage_pairs(
                 - F.element_at(F.col("__st"), F.col("__i") + 1),
             ).alias("variant"),
         )
-    )
-
-    matched = F.broadcast(variants).join(spans, "variant")
-
-    # per-sample winning (id_idx, tier): the cascade stops at the first
-    # id/tier that matched anything — BEFORE the .gz filter
-    rank = (F.col("id_idx") * 100 + F.col("tier")).alias("rank")
-    w_sample = W.partitionBy(sample_key)
-    with_rank = matched.select(
-        sample_key, file_key, "filesize", "mdate", "id_idx", "tier", rank
-    ).withColumn("min_rank", F.min("rank").over(w_sample))
-    at_tier = with_rank.where(F.col("rank") == F.col("min_rank")).drop(
-        "rank", "min_rank"
-    )
-
-    # .gz filter AFTER tier selection (update_reads.py:147), dedup pairs
-    # (several spans of one file can equal the same variant)
-    return at_tier.where(F.col(file_key).endswith(".gz")).dropDuplicates(
-        [sample_key, file_key]
     )
 
 

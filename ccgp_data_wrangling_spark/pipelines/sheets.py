@@ -127,7 +127,7 @@ def sra_sheet(samples: DataFrame, reads: DataFrame) -> DataFrame:
         F.col("uploaded_to_NCBI").isNull() | (F.col("uploaded_to_NCBI") != "yes")
     )
     library_id = F.substring_index(F.col("filename"), "_R1", 1)
-    out = not_uploaded.select(
+    return not_uploaded.select(
         F.col("sample_name").alias("*sample_name"),
         library_id.alias("library_ID"),
         F.concat(F.lit("Whole genome sequencing of "), F.col("organism")).alias(
@@ -139,8 +139,11 @@ def sra_sheet(samples: DataFrame, reads: DataFrame) -> DataFrame:
         "filename",
         "filename2",
         F.col("ccgp_project_id"),
+        # X8: the remaining defaults as literal columns, in one select so
+        # the plan is analysed once
+        *(
+            F.lit(default).alias(col)
+            for col, default in SRA_DEFAULTS.items()
+            if col != "instrument_model"
+        ),
     )
-    for col, default in SRA_DEFAULTS.items():
-        if col not in out.columns:
-            out = out.withColumn(col, F.lit(default))
-    return out

@@ -48,59 +48,10 @@ def register(name: str, oracle: str | None):
 # tests/driver_verdicts.json (each name's latest driver round and
 # verdict): reds, then never-verified names, then greens ordered by
 # OLDEST last driver row (stalest-first re-verification). The list
-# below was written in round 6, when the head slots were that round's
-# new queries and every earlier query was already green.
+# below is that tool's output; every query in the verdicts file is
+# green, so its head is the greens whose last driver check is oldest.
+# Re-run the tool after a driver round or a registry change.
 _PRIORITY: list[str] = [
-    "pdf_jpx_structured_extract",
-    "doc_text_extract",
-    "multimodal_flac_decode",
-    "multimodal_tiff_jpeg_planar_decode",
-    "multimodal_flac_spectral",
-    "m3_struct_tuple_union",
-    "m8_partitioned_upsert",
-    "sample_stratified_lang",
-    "pack_context_windows",
-    "chunk_documents_windowed",
-    "pii_scrub_sentinels",
-    "train_order_shuffle",
-    "contamination_ngram_overlap",
-    "domain_mixture_weighted",
-    "length_bucket_batching",
-    "x12b_blocked_fuzzy_match",
-    "r6_jan_only_products",
-    "skew_salted_agg",
-    "q4_exists_semi_join",
-    "pdf_image_extract",
-    "multimodal_mp4_fragmented_keyframes",
-    "multimodal_tiff_compressed_decode",
-    "multimodal_mp3_layer3_spectrum",
-    "q10_returned_revenue",
-    "rollup_order_profile",
-    "range_balance_band",
-    "profile_orders",
-    "percentiles_by_flag",
-    "x11b_service_geocode",
-    "s4_sheet_probe_xls",
-    "url_normalize_dedup",
-    "ngram_repeat_scrub",
-    "winsorize_quality",
-    "doc_topic_cluster",
-    "cross_lingual_ratio",
-    "anchor_text_agg",
-    "robots_policy_filter",
-    "session_dedup_window",
-    "t_session_window_native",
-    "pagerank_link_graph",
-    "jl_projection_16d",
-    "kmv_distinct_users",
-    "span_dedup_crossdoc",
-    "priority_sample_weights",
-    "zorder_cluster_stats",
-    "kmv_shard_overlap",
-    "funnel_stage_conversion",
-    "cohort_weekly_retention",
-    "event_transition_matrix",
-    "mad_outlier_flags",
     "decayed_user_value",
     "cube_event_value",
     "moving_avg_user_value",
@@ -320,6 +271,56 @@ _PRIORITY: list[str] = [
     "multimodal_frame_sample",
     "m1_upsert",
     "m3_array_union_pull",
+    "pdf_jpx_structured_extract",
+    "doc_text_extract",
+    "multimodal_flac_decode",
+    "multimodal_tiff_jpeg_planar_decode",
+    "multimodal_flac_spectral",
+    "m3_struct_tuple_union",
+    "m8_partitioned_upsert",
+    "sample_stratified_lang",
+    "pack_context_windows",
+    "chunk_documents_windowed",
+    "pii_scrub_sentinels",
+    "train_order_shuffle",
+    "contamination_ngram_overlap",
+    "domain_mixture_weighted",
+    "length_bucket_batching",
+    "x12b_blocked_fuzzy_match",
+    "r6_jan_only_products",
+    "skew_salted_agg",
+    "q4_exists_semi_join",
+    "pdf_image_extract",
+    "multimodal_mp4_fragmented_keyframes",
+    "multimodal_tiff_compressed_decode",
+    "multimodal_mp3_layer3_spectrum",
+    "q10_returned_revenue",
+    "rollup_order_profile",
+    "range_balance_band",
+    "profile_orders",
+    "percentiles_by_flag",
+    "x11b_service_geocode",
+    "s4_sheet_probe_xls",
+    "url_normalize_dedup",
+    "ngram_repeat_scrub",
+    "winsorize_quality",
+    "doc_topic_cluster",
+    "cross_lingual_ratio",
+    "anchor_text_agg",
+    "robots_policy_filter",
+    "session_dedup_window",
+    "t_session_window_native",
+    "pagerank_link_graph",
+    "jl_projection_16d",
+    "kmv_distinct_users",
+    "span_dedup_crossdoc",
+    "priority_sample_weights",
+    "zorder_cluster_stats",
+    "kmv_shard_overlap",
+    "funnel_stage_conversion",
+    "cohort_weekly_retention",
+    "event_transition_matrix",
+    "mad_outlier_flags",
 ]
 
 

@@ -4,14 +4,17 @@ from __future__ import annotations
 
 import random
 
+import pandas as pd
+
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ccgp_data_wrangling_spark.operators.fuzzy import fuzzy_argmax_join
+from ccgp_data_wrangling_spark.operators import fuzzy
+from ccgp_data_wrangling_spark.operators.fuzzy import _trie_levels, fuzzy_argmax_join
 
 
 def _brute(spark, left, right):
@@ -70,6 +73,83 @@ def test_matches_brute_force(spark, lvals, rvals, dup):
     rvals = rvals + rvals[:dup] + ["abc"]
     left, right = _frames(spark, lvals, rvals)
     assert _got(left, right) == _brute(spark, left, right)
+
+
+# right sides that share prefixes: one prefix, then 0-3 more characters
+# (so values are prefixes of other values), with duplicates, '', nulls
+# and values past one 64-bit word
+_prefix = st.sampled_from(["", "ab", "Customer#000", "é漢" * 40])
+_suffix = st.text(st.sampled_from("abc0é😀"), max_size=3)
+
+
+@given(
+    prefix=_prefix,
+    suffixes=st.lists(_suffix, min_size=1, max_size=25),
+    extra=st.lists(st.one_of(st.none(), st.just(""), _long), max_size=3),
+    lvals=st.lists(st.one_of(_short, _suffix), min_size=1, max_size=8),
+    dup=st.integers(0, 3),
+)
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+# a prefix chain: every level of the trie one node wide, with 70 right
+# values ending at 70 depths
+@example(
+    prefix="ab",
+    suffixes=["c" * k for k in range(70)],
+    extra=[None],
+    lvals=["ccc", "", "é"],
+    dup=1,
+)
+def test_matches_brute_force_shared_prefixes(spark, prefix, suffixes, extra, lvals, dup):
+    """Exact against all pairs when the right values share prefixes:
+    the case where the kernel steps one trie node for many values."""
+    rvals = [prefix + s for s in suffixes] + extra
+    rvals = rvals + rvals[:dup]
+    lvals = lvals + [prefix + s for s in lvals] + [None]
+    left, right = _frames(spark, lvals, rvals)
+    assert _got(left, right) == _brute(spark, left, right)
+
+
+@given(st.lists(st.one_of(_short, st.builds(str.__add__, _prefix, _suffix))))
+@settings(max_examples=200, deadline=None)
+def test_trie_has_one_node_per_distinct_prefix(values):
+    """Walking parents and codes spells every distinct non-empty prefix
+    exactly once, and each value ends at the node that spells it."""
+    order = sorted(set(values))
+    alphabet, levels, emit = _trie_levels(order)
+    assert sorted(emit.tolist()) == list(range(len(order)))
+    emitted = [order[i] for i in emit]
+    char = {i: c for c, i in alphabet.items()}
+    spelled, nodes = [], [""]
+    for depth, (parent, code, end_node) in enumerate(levels, 1):
+        nodes = [nodes[p] + char[int(c)] for p, c in zip(parent, code)]
+        spelled += nodes
+        assert [nodes[e] for e in end_node] == [v for v in emitted if len(v) == depth]
+    assert sorted(spelled) == sorted({v[:d] for v in order for d in range(1, len(v) + 1)})
+
+
+def test_blocks_stay_within_block_pairs(monkeypatch):
+    """A prefix chain has one-node trie levels but as many right values
+    as depths: the patterns per block follow the larger of the two, so
+    the distance matrix stays within ``_BLOCK_PAIRS`` words."""
+    monkeypatch.setattr(fuzzy, "_BLOCK_PAIRS", 256)
+    sizes, step = [], fuzzy._myers_block
+
+    def spy(patterns, alphabet, levels, lens, dtype):
+        sizes.append(len(patterns) * len(lens))
+        return step(patterns, alphabet, levels, lens, dtype)
+
+    monkeypatch.setattr(fuzzy, "_myers_block", spy)
+    op = fuzzy._best_pairs_kernel({"c" * k for k in range(1, 41)}, "l", "r")
+    lvals = ["c" * k + "x" for k in range(30)]
+    out = pd.concat(op(iter([pd.DataFrame({"l": lvals})])))
+    assert len(sizes) > 1 and max(sizes) <= 256
+    # c^k + x is one substitution from c^(k+1) and one insertion from c^k
+    for l, r, lev in out.itertuples(index=False):
+        assert lev == 1 and len(r) in (len(l) - 1, len(l)), (l, r, lev)
 
 
 def _corpus(seed, lo, hi, edits=1, gap=0, planted=16):

@@ -7,11 +7,15 @@ from __future__ import annotations
 
 from datetime import datetime
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.linkage import (
     _SEP_CLASS,
+    _file_spans,
     link_reads_to_samples,
     linkage_pairs,
     resolve_conflicts,
@@ -98,6 +102,35 @@ def test_candidate_spans_basic(spark):
     # tokens: AB C 1 fq gz → spans end before a separator; gz excluded
     assert {"AB", "AB_C", "AB_C-1", "AB_C-1.fq", "C", "C-1", "C-1.fq", "1", "1.fq", "fq"} == spans
     assert got[1][0] == []
+
+
+@st.composite
+def _file_names(draw):
+    """A name of 1-9 tokens joined by `_`, `-` or `.`; a token may be
+    empty (doubled, leading or trailing separators) or hold digits."""
+    toks = draw(st.lists(st.text(alphabet="aZ09", max_size=3), min_size=1, max_size=9))
+    seps = draw(st.lists(st.sampled_from("_-."), min_size=len(toks), max_size=len(toks)))
+    return "".join(t + s for t, s in zip(toks, seps))[:-1]
+
+
+@given(
+    names=st.lists(_file_names(), min_size=1, max_size=8, unique=True),
+    max_span=st.integers(1, 6),
+)
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_file_spans_match_candidate_spans(spark, names, max_span):
+    """linkage_pairs' file side builds exactly candidate_spans' span
+    set, file by file."""
+    reads = _reads(spark, names)
+    got = _file_spans(reads, "file_name", max_span).select("file_name", "variant")
+    ref = reads.select(
+        "file_name", F.explode(candidate_spans(F.col("file_name"), max_span)).alias("variant")
+    )
+    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in ref.collect()}
 
 
 def test_exact_tier_match(spark):

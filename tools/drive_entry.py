@@ -15,9 +15,11 @@ import duckdb
 import __spark_entry__ as ent
 from pyspark.sql import SparkSession
 
-spark = (SparkSession.builder.master("local[8]")
+# as many task slots and shuffle partitions as the host has CPUs
+N = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+spark = (SparkSession.builder.master(f"local[{N}]")
          .appName("driver-sim")
-         .config("spark.sql.shuffle.partitions", "8")
+         .config("spark.sql.shuffle.partitions", str(N))
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
          .config("spark.ui.enabled", "false")
