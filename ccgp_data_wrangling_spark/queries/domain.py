@@ -1415,45 +1415,31 @@ def sra_sheet_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ccgp_data_wrangling_spark.pipelines.sheets import sra_sheet
 
     cust = load_table(spark, sf_dir, "customer")
-    k = F.col("c_custkey")
-    name = F.col("c_name")
-    organism = F.when(k % 2 == 0, "Neotoma fuscipes").otherwise(
-        "Rana draytonii"
+
+    # sample k has k % 3 read pairs, j = 0 .. k % 3 - 1
+    per_pair = "transform(array_repeat(0, CAST(c_custkey % 3 AS INT)), (_, j) -> {})"
+    r1, r2 = (
+        f"concat(c_name, '_L', CAST(j AS STRING), '_R{n}.fastq.gz')" for n in (1, 2)
     )
-    nf = (k % 3).cast("int")
-    gz_pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), nf - 1),
-            # R2 first on purpose — sra_sheet's array_sort must fix it
-            lambda j: F.array(
-                F.concat(name, F.lit("_L"), j.cast("string"), F.lit("_R2.fastq.gz")),
-                F.concat(name, F.lit("_L"), j.cast("string"), F.lit("_R1.fastq.gz")),
-            ),
+    samples = cust.selectExpr(
+        "c_name AS sample_name",
+        "CASE WHEN c_custkey % 2 = 0 THEN 'Neotoma fuscipes' "
+        "ELSE 'Rana draytonii' END AS organism",
+        "concat('CCGP-', CAST(c_custkey % 9 AS STRING)) AS ccgp_project_id",
+        # a non-.gz distractor, then R2 before R1 on purpose:
+        # sra_sheet's filter and array_sort must fix both
+        "concat(array(concat(c_name, '_report.txt')), flatten("
+        + per_pair.format(f"array({r2}, {r1})")
+        + ")) AS files",
+    )
+    reads = cust.selectExpr(
+        "inline("
+        + per_pair.format(
+            f"named_struct('file_name', {r1}, 'instrument_model', "
+            "CASE WHEN c_custkey % 4 = 0 THEN 'Illumina HiSeq X' END, "
+            "'uploaded_to_NCBI', "
+            "CASE WHEN c_custkey % 5 = 0 AND j = 0 THEN 'yes' ELSE 'no' END)"
         )
-    )
-    distractor = F.array(F.concat(name, F.lit("_report.txt")))
-    files = F.when(nf > 0, F.concat(distractor, gz_pairs)).otherwise(distractor)
-    samples = cust.select(
-        name.alias("sample_name"),
-        organism.alias("organism"),
-        F.concat(F.lit("CCGP-"), (k % 9).cast("string")).alias("ccgp_project_id"),
-        files.alias("files"),
-    )
-    reads = (
-        cust.where(k % 3 > 0)
-        .select(name.alias("__n"), k.alias("__k"),
-                F.explode(F.sequence(F.lit(0), nf - 1)).alias("__j"))
-        .select(
-            F.concat(
-                F.col("__n"), F.lit("_L"), F.col("__j").cast("string"),
-                F.lit("_R1.fastq.gz"),
-            ).alias("file_name"),
-            F.when(F.col("__k") % 4 == 0, "Illumina HiSeq X").alias(
-                "instrument_model"
-            ),
-            F.when((F.col("__k") % 5 == 0) & (F.col("__j") == 0), "yes")
-            .otherwise("no")
-            .alias("uploaded_to_NCBI"),
-        )
+        + ")"
     )
     return sra_sheet(samples, reads)

@@ -12,12 +12,23 @@ JVM<->Python boundary between synthesis and extraction. The fused
 path is opaque to Spark's column pruning: every column of ``df``
 ships into the Python worker, so hand in a frame narrowed to what
 ``pre`` consumes.
+
+The fixture writers of the zip-based formats (DOCX, PPTX, ODT, ODS,
+ODP, EPUB, XLSX) share :func:`zip_member`/:func:`zip_package`, a
+template zip writer: each member's headers are struct-packed once
+with a fixed 1980-01-01 stamp, so a member that is the same in every
+package (a content-types or manifest part) is built once per process,
+only the per-document parts are deflated per call, and a package's
+bytes depend on its members alone, never on the clock. The readers
+keep stdlib ``zipfile``.
 """
 
 from __future__ import annotations
 
+import struct
+import zlib
 from collections.abc import Callable, Iterable, Iterator
-from typing import Any
+from typing import Any, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -91,3 +102,56 @@ def explode_blobs(
         )
 
     return map_batches(df, op, schema, (id_col, payload_col), pre)
+
+
+# APPNOTE 4.3.7 / 4.3.12 / 4.3.16: the local header, the central
+# directory record up to its local-header offset, the end record
+_LOCAL = struct.Struct("<4s5H3L2H")
+_CENTRAL = struct.Struct("<4s6H3L5HL")
+_END = struct.Struct("<4s4H2LH")
+_DOS_1980_01_01 = (0 << 9) | (1 << 5) | 1
+
+
+class ZipMember(NamedTuple):
+    """One packaged member: ``local`` is its local header, name and
+    data; ``central`` its central-directory record without the
+    offset, which :func:`zip_package` appends with the name."""
+
+    local: bytes
+    central: bytes
+    name: bytes
+
+
+def zip_member(name: str, data: str | bytes, *, deflate: bool = True) -> ZipMember:
+    """A zip member from UTF-8 text or bytes, deflated (method 8) or
+    stored (method 0), stamped 1980-01-01 00:00. No ZIP64: a member
+    or package of 4 GiB or more fails in ``struct.pack``."""
+    raw = data.encode() if isinstance(data, str) else data
+    body = zlib.compress(raw, wbits=-15) if deflate else raw
+    bname = name.encode("ascii")
+    version = 20 if deflate else 10
+    fields = (
+        0, 8 if deflate else 0, 0, _DOS_1980_01_01,
+        zlib.crc32(raw), len(body), len(raw), len(bname), 0,
+    )
+    return ZipMember(
+        _LOCAL.pack(b"PK\x03\x04", version, *fields) + bname + body,
+        _CENTRAL.pack(b"PK\x01\x02", version, version, *fields, 0, 0, 0, 0),
+        bname,
+    )
+
+
+def zip_package(members: Iterable[ZipMember]) -> bytes:
+    """The zip archive of ``members``, in the given order."""
+    parts: list[bytes] = []
+    central: list[bytes] = []
+    offset = 0
+    for m in members:
+        parts.append(m.local)
+        central.append(m.central + offset.to_bytes(4, "little") + m.name)
+        offset += len(m.local)
+    directory = b"".join(central)
+    n = len(central)
+    parts.append(directory)
+    parts.append(_END.pack(b"PK\x05\x06", 0, 0, n, n, len(directory), offset, 0))
+    return b"".join(parts)

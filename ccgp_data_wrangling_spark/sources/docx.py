@@ -10,11 +10,20 @@ spreadsheet half of OOXML. Extraction follows §17.3 of the spec:
 * a paragraph's text is its runs' ``w:t`` contents concatenated, with
   the in-run ``w:tab`` / ``w:br`` / ``w:cr`` elements rendered as TAB
   and newline (the characters a text pipeline needs);
-* only elements INSIDE runs count — a ``w:tab`` under ``w:pPr/w:tabs``
+* only children of runs count — a ``w:tab`` under ``w:pPr/w:tabs``
   is a tab-stop definition, not a character, and tracked-deletion
   text lives in ``w:delText``, which is skipped by construction;
 * table-cell paragraphs surface in document order (``w:tbl/w:tr/w:tc``
-  nests plain ``w:p`` elements).
+  nests plain ``w:p`` elements), and so do text-box paragraphs
+  (``w:r/w:pict/v:textbox/w:txbxContent/w:p``), each after its host
+  paragraph and not inside its text: a run belongs to its nearest
+  enclosing ``w:p``. The document is walked once, matching
+  precomputed qualified tags.
+
+The fixture writer :func:`build_docx` packages through
+``sources/blobs.zip_package``: the content-types and package-rels
+members are built once per process, only ``word/document.xml`` is
+deflated per document, and the bytes carry no clock.
 
 Scope (documented, not gated): only the main document part is read —
 headers, footers, footnotes and comments are separate OPC parts a
@@ -34,46 +43,71 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame
 
-from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
+from ccgp_data_wrangling_spark.sources.blobs import (
+    explode_blobs,
+    text_rows,
+    zip_member,
+    zip_package,
+)
 
 _W_NS = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
+_P, _PPR, _R, _RPR, _T, _TAB = (
+    f"{{{_W_NS}}}{t}" for t in ("p", "pPr", "r", "rPr", "t", "tab")
+)
+_BREAKS = frozenset((f"{{{_W_NS}}}br", f"{{{_W_NS}}}cr"))
 
 DOCX_PARA_SCHEMA = "doc_id long, para int, text string, n_chars int"
 
 
 def extract_docx_paragraphs(payload: bytes) -> list[str]:
     """One string per ``w:p`` in document order (§17.3.1.22),
-    including paragraphs nested in table cells. Runs concatenate
-    their ``w:t`` text; ``w:tab`` → TAB, ``w:br``/``w:cr`` → newline
-    — all matched only INSIDE ``w:r`` so tab-stop definitions and
-    non-text markup never leak into the output."""
+    including paragraphs nested in table cells and text boxes. A
+    paragraph's text is the runs whose nearest enclosing ``w:p`` it
+    is: their ``w:t`` text, ``w:tab`` → TAB, ``w:br``/``w:cr`` →
+    newline, matched only as children of a ``w:r`` so tab-stop
+    definitions and non-text markup never leak into the output."""
     try:
-        zf = zipfile.ZipFile(io.BytesIO(payload))
+        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+            xml = zf.read("word/document.xml")
     except zipfile.BadZipFile as exc:
         raise ValueError(f"not a DOCX package: {exc}") from exc
-    with zf:
-        if "word/document.xml" not in zf.namelist():
-            raise ValueError(
-                "not a DOCX package (missing word/document.xml)"
-            )
-        root = ET.fromstring(zf.read("word/document.xml"))
-    body = root.find(f"{{{_W_NS}}}body")
+    except KeyError:
+        raise ValueError(
+            "not a DOCX package (missing word/document.xml)"
+        ) from None
+    body = ET.fromstring(xml).find(f"{{{_W_NS}}}body")
     if body is None:
         raise ValueError("DOCX document.xml has no w:body")
     out: list[str] = []
-    for p in body.iter(f"{{{_W_NS}}}p"):
-        parts: list[str] = []
-        for r in p.iter(f"{{{_W_NS}}}r"):
-            for el in r.iter():
-                tag = el.tag.rsplit("}", 1)[-1]
-                if tag == "t":
-                    parts.append(el.text or "")
-                elif tag == "tab":
-                    parts.append("\t")
-                elif tag in ("br", "cr"):
-                    parts.append("\n")
-        out.append("".join(parts))
+    _collect(body, [], out)
     return out
+
+
+def _collect(el: ET.Element, parts: list[str], out: list[str]) -> None:
+    """Append ``el``'s run characters to ``parts`` (its paragraph's)
+    and, in document order, one entry to ``out`` per ``w:p`` below
+    it: a paragraph's slot is taken before its nested paragraphs'."""
+    for child in el:
+        tag = child.tag
+        if tag == _R:
+            for c in child:
+                ctag = c.tag
+                if ctag == _T:
+                    parts.append(c.text or "")
+                elif ctag == _TAB:
+                    parts.append("\t")
+                elif ctag in _BREAKS:
+                    parts.append("\n")
+                elif ctag != _RPR and len(c):
+                    _collect(c, parts, out)
+        elif tag == _P:
+            own: list[str] = []
+            slot = len(out)
+            out.append("")
+            _collect(child, own, out)
+            out[slot] = "".join(own)
+        elif tag != _PPR and len(child):
+            _collect(child, parts, out)
 
 
 def docx_documents(
@@ -118,6 +152,32 @@ def _run_xml(token: Any) -> str:
     raise ValueError(f"unknown DOCX run token {token!r}")
 
 
+# the two parts every fixture package shares, built once per process
+_DOCX_PACKAGE_PARTS = (
+    zip_member(
+        "[Content_Types].xml",
+        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+        '<Types xmlns="http://schemas.openxmlformats.org/package/2006/'
+        'content-types">'
+        '<Default Extension="rels" ContentType="application/vnd.'
+        'openxmlformats-package.relationships+xml"/>'
+        '<Default Extension="xml" ContentType="application/xml"/>'
+        '<Override PartName="/word/document.xml" ContentType="application/'
+        'vnd.openxmlformats-officedocument.wordprocessingml.document.'
+        'main+xml"/></Types>',
+    ),
+    zip_member(
+        "_rels/.rels",
+        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+        '<Relationships xmlns="http://schemas.openxmlformats.org/package/'
+        '2006/relationships">'
+        '<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/'
+        'officeDocument/2006/relationships/officeDocument" '
+        'Target="word/document.xml"/></Relationships>',
+    ),
+)
+
+
 def build_docx(paragraphs: list[Any]) -> bytes:
     """Fixture writer: a minimal conformant .docx (OPC zip with
     content types, package rels and ``word/document.xml``). Each
@@ -156,28 +216,6 @@ def build_docx(paragraphs: list[Any]) -> bytes:
         + "".join(body_parts)
         + "<w:sectPr/></w:body></w:document>"
     )
-    content_types = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Types xmlns="http://schemas.openxmlformats.org/package/2006/'
-        'content-types">'
-        '<Default Extension="rels" ContentType="application/vnd.'
-        'openxmlformats-package.relationships+xml"/>'
-        '<Default Extension="xml" ContentType="application/xml"/>'
-        '<Override PartName="/word/document.xml" ContentType="application/'
-        'vnd.openxmlformats-officedocument.wordprocessingml.document.'
-        'main+xml"/></Types>'
+    return zip_package(
+        (*_DOCX_PACKAGE_PARTS, zip_member("word/document.xml", document))
     )
-    rels = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        '<Relationships xmlns="http://schemas.openxmlformats.org/package/'
-        '2006/relationships">'
-        '<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/'
-        'officeDocument/2006/relationships/officeDocument" '
-        'Target="word/document.xml"/></Relationships>'
-    )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("[Content_Types].xml", content_types)
-        zf.writestr("_rels/.rels", rels)
-        zf.writestr("word/document.xml", document)
-    return buf.getvalue()

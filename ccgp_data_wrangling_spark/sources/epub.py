@@ -39,7 +39,12 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame
 
-from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
+from ccgp_data_wrangling_spark.sources.blobs import (
+    explode_blobs,
+    text_rows,
+    zip_member,
+    zip_package,
+)
 
 _CONTAINER_NS = "urn:oasis:names:tc:opendocument:xmlns:container"
 _OPF_NS = "http://www.idpf.org/2007/opf"
@@ -253,6 +258,21 @@ def _para_markup(entry: Any) -> str:
     raise ValueError(f"unknown EPUB fixture entry {entry!r}")
 
 
+# mimetype first and stored (OCF 3.0 §4.3), then the container
+# document: the same in every package, built once per process
+_EPUB_HEAD = (
+    zip_member("mimetype", "application/epub+zip", deflate=False),
+    zip_member(
+        "META-INF/container.xml",
+        '<?xml version="1.0" encoding="UTF-8"?>'
+        f'<container xmlns="{_CONTAINER_NS}" version="1.0">'
+        '<rootfiles><rootfile full-path="OEBPS/package.opf" '
+        'media-type="application/oebps-package+xml"/></rootfiles>'
+        "</container>",
+    ),
+)
+
+
 def build_epub(chapters: list[list[Any]]) -> bytes:
     """Fixture writer: a minimal conformant EPUB 3 (OCF zip with the
     stored-first mimetype, container.xml, package.opf whose spine
@@ -287,25 +307,13 @@ def build_epub(chapters: list[list[Any]]) -> bytes:
         f"<manifest>{items}</manifest>"
         f"<spine>{refs}</spine></package>"
     )
-    container = (
-        '<?xml version="1.0" encoding="UTF-8"?>'
-        f'<container xmlns="{_CONTAINER_NS}" version="1.0">'
-        '<rootfiles><rootfile full-path="OEBPS/package.opf" '
-        'media-type="application/oebps-package+xml"/></rootfiles>'
-        "</container>"
+    return zip_package(
+        (
+            *_EPUB_HEAD,
+            zip_member("OEBPS/package.opf", opf),
+            *(
+                zip_member(f"OEBPS/text/ch{k}.xhtml", docs[k])
+                for k in reversed(range(len(docs)))
+            ),
+        )
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr(
-            zipfile.ZipInfo("mimetype"), "application/epub+zip"
-        )
-        zf.writestr(
-            "META-INF/container.xml", container, zipfile.ZIP_DEFLATED
-        )
-        zf.writestr("OEBPS/package.opf", opf, zipfile.ZIP_DEFLATED)
-        for k in range(len(docs) - 1, -1, -1):  # reverse storage order
-            zf.writestr(
-                f"OEBPS/text/ch{k}.xhtml", docs[k],
-                zipfile.ZIP_DEFLATED,
-            )
-    return buf.getvalue()

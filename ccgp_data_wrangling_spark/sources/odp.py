@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 
 from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
 
-from ccgp_data_wrangling_spark.sources.odt import _para_text
+from ccgp_data_wrangling_spark.sources.odt import _para_text, odf_package
 
 _OFFICE_NS = "urn:oasis:names:tc:opendocument:xmlns:office:1.0"
 _TEXT_NS = "urn:oasis:names:tc:opendocument:xmlns:text:1.0"
@@ -216,23 +216,6 @@ def build_odp(slides: list[list[list[Any]]]) -> bytes:
         + "</office:presentation></office:body>"
         "</office:document-content>"
     )
-    manifest = (
-        '<?xml version="1.0" encoding="UTF-8"?>'
-        '<manifest:manifest xmlns:manifest="urn:oasis:names:tc:'
-        'opendocument:xmlns:manifest:1.0" manifest:version="1.2">'
-        '<manifest:file-entry manifest:full-path="/" manifest:media-type='
-        '"application/vnd.oasis.opendocument.presentation"/>'
-        '<manifest:file-entry manifest:full-path="content.xml" '
-        'manifest:media-type="text/xml"/></manifest:manifest>'
+    return odf_package(
+        "application/vnd.oasis.opendocument.presentation", content
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr(
-            zipfile.ZipInfo("mimetype"),
-            "application/vnd.oasis.opendocument.presentation",
-        )
-        zf.writestr(
-            "META-INF/manifest.xml", manifest, zipfile.ZIP_DEFLATED
-        )
-        zf.writestr("content.xml", content, zipfile.ZIP_DEFLATED)
-    return buf.getvalue()

@@ -29,6 +29,7 @@ surface the way sources/docx.py does for OOXML.
 
 from __future__ import annotations
 
+import functools
 import io
 import zipfile
 from typing import Any
@@ -36,7 +37,13 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame
 
-from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
+from ccgp_data_wrangling_spark.sources.blobs import (
+    ZipMember,
+    explode_blobs,
+    text_rows,
+    zip_member,
+    zip_package,
+)
 
 _OFFICE_NS = "urn:oasis:names:tc:opendocument:xmlns:office:1.0"
 _TEXT_NS = "urn:oasis:names:tc:opendocument:xmlns:text:1.0"
@@ -190,24 +197,30 @@ def build_odt(paragraphs: list[Any]) -> bytes:
         + "".join(body_parts)
         + "</office:text></office:body></office:document-content>"
     )
+    return odf_package("application/vnd.oasis.opendocument.text", content)
+
+
+@functools.cache
+def _odf_head(media_type: str) -> tuple[ZipMember, ZipMember]:
+    """The ``mimetype`` member (first and stored, ODF 1.2 Part 3
+    §3.3) and the manifest of a one-part ODF package, built once per
+    media type."""
     manifest = (
         '<?xml version="1.0" encoding="UTF-8"?>'
         '<manifest:manifest xmlns:manifest="urn:oasis:names:tc:'
         'opendocument:xmlns:manifest:1.0" manifest:version="1.2">'
         '<manifest:file-entry manifest:full-path="/" manifest:media-type='
-        '"application/vnd.oasis.opendocument.text"/>'
+        f'"{media_type}"/>'
         '<manifest:file-entry manifest:full-path="content.xml" '
         'manifest:media-type="text/xml"/></manifest:manifest>'
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        # mimetype must be first and uncompressed (ODF 1.2 Part 3 §3.3)
-        zf.writestr(
-            zipfile.ZipInfo("mimetype"),
-            "application/vnd.oasis.opendocument.text",
-        )
-        zf.writestr(
-            "META-INF/manifest.xml", manifest, zipfile.ZIP_DEFLATED
-        )
-        zf.writestr("content.xml", content, zipfile.ZIP_DEFLATED)
-    return buf.getvalue()
+    return (
+        zip_member("mimetype", media_type, deflate=False),
+        zip_member("META-INF/manifest.xml", manifest),
+    )
+
+
+def odf_package(media_type: str, content: str) -> bytes:
+    """A one-part ODF package (the ODT/ODP/ODS fixture container):
+    ``mimetype``, ``META-INF/manifest.xml``, then ``content.xml``."""
+    return zip_package((*_odf_head(media_type), zip_member("content.xml", content)))

@@ -40,7 +40,12 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame
 
-from ccgp_data_wrangling_spark.sources.blobs import explode_blobs, text_rows
+from ccgp_data_wrangling_spark.sources.blobs import (
+    explode_blobs,
+    text_rows,
+    zip_member,
+    zip_package,
+)
 
 _P_NS = "http://schemas.openxmlformats.org/presentationml/2006/main"
 _A_NS = "http://schemas.openxmlformats.org/drawingml/2006/main"
@@ -186,6 +191,26 @@ def _shape_xml(paragraphs: list[Any], name: str) -> str:
     )
 
 
+# the package rels and the decoy notes slide are the same in every
+# fixture package: built once per process
+_PPTX_PKG_RELS = zip_member(
+    "_rels/.rels",
+    '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+    f'<Relationships xmlns="{_REL_NS}">'
+    '<Relationship Id="rId1" Type="http://schemas.openxmlformats.'
+    'org/officeDocument/2006/relationships/officeDocument" '
+    'Target="ppt/presentation.xml"/></Relationships>'
+)
+_PPTX_NOTES = zip_member(
+    "ppt/notesSlides/notesSlide1.xml",
+    '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+    f'<p:notes xmlns:p="{_P_NS}" xmlns:a="{_A_NS}">'
+    "<p:cSld><p:spTree>"
+    + _shape_xml(["never text (speaker notes)"], "Notes")
+    + "</p:spTree></p:cSld></p:notes>"
+)
+
+
 def build_pptx(slides: list[Any]) -> bytes:
     """Fixture writer: a minimal conformant .pptx. Each entry is one
     slide — a list of paragraph entries (a string, or a list of run
@@ -236,13 +261,6 @@ def build_pptx(slides: list[Any]) -> bytes:
         "<p:sldIdLst>" + "".join(sld_ids) + "</p:sldIdLst>"
         "</p:presentation>"
     )
-    notes = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<p:notes xmlns:p="{_P_NS}" xmlns:a="{_A_NS}">'
-        "<p:cSld><p:spTree>"
-        + _shape_xml(["never text (speaker notes)"], "Notes")
-        + "</p:spTree></p:cSld></p:notes>"
-    )
     overrides = "".join(
         f'<Override PartName="/{part}" ContentType="application/vnd.'
         'openxmlformats-officedocument.presentationml.slide+xml"/>'
@@ -262,13 +280,6 @@ def build_pptx(slides: list[Any]) -> bytes:
         'ContentType="application/vnd.openxmlformats-officedocument.'
         'presentationml.notesSlide+xml"/>' + overrides + "</Types>"
     )
-    pkg_rels = (
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<Relationships xmlns="{_REL_NS}">'
-        '<Relationship Id="rId1" Type="http://schemas.openxmlformats.'
-        'org/officeDocument/2006/relationships/officeDocument" '
-        'Target="ppt/presentation.xml"/></Relationships>'
-    )
     pres_rels = (
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
         f'<Relationships xmlns="{_REL_NS}">'
@@ -278,13 +289,13 @@ def build_pptx(slides: list[Any]) -> bytes:
         'notesSlide" Target="notesSlides/notesSlide1.xml"/>'
         "</Relationships>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("[Content_Types].xml", content_types)
-        zf.writestr("_rels/.rels", pkg_rels)
-        zf.writestr("ppt/presentation.xml", presentation)
-        zf.writestr("ppt/_rels/presentation.xml.rels", pres_rels)
-        zf.writestr("ppt/notesSlides/notesSlide1.xml", notes)
-        for part, xml in slide_xmls:
-            zf.writestr(part, xml)
-    return buf.getvalue()
+    return zip_package(
+        (
+            zip_member("[Content_Types].xml", content_types),
+            _PPTX_PKG_RELS,
+            zip_member("ppt/presentation.xml", presentation),
+            zip_member("ppt/_rels/presentation.xml.rels", pres_rels),
+            _PPTX_NOTES,
+            *(zip_member(part, xml) for part, xml in slide_xmls),
+        )
+    )

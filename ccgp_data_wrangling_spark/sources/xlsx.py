@@ -27,6 +27,8 @@ import re
 import zipfile
 from xml.etree import ElementTree as ET
 
+from ccgp_data_wrangling_spark.sources.blobs import zip_member, zip_package
+
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = "{http://schemas.openxmlformats.org/package/2006/relationships}"
 _RID_ATTR = (
@@ -201,9 +203,10 @@ def write_xlsx(path: str, sheets: dict[str, list[list]]) -> None:
         )
         sheet_xml[name] = _SHEET_XML.format(rows=rx)
 
-    with zipfile.ZipFile(path, "w") as zf:
-        names = list(sheets)
-        zf.writestr(
+    names = list(sheets)
+    ss = "".join(f"<si><t>{_xml_escape(s)}</t></si>" for s in strings)
+    members = [
+        (
             "xl/workbook.xml",
             _WB_XML.format(
                 sheets="".join(
@@ -212,8 +215,8 @@ def write_xlsx(path: str, sheets: dict[str, list[list]]) -> None:
                     for i, n in enumerate(names)
                 )
             ),
-        )
-        zf.writestr(
+        ),
+        (
             "xl/_rels/workbook.xml.rels",
             _RELS_XML.format(
                 rels="".join(
@@ -222,12 +225,16 @@ def write_xlsx(path: str, sheets: dict[str, list[list]]) -> None:
                     for i in range(len(names))
                 )
             ),
-        )
-        for i, n in enumerate(names):
-            zf.writestr(f"xl/worksheets/sheet{i + 1}.xml", sheet_xml[n])
-        ss = "".join(f"<si><t>{_xml_escape(s)}</t></si>" for s in strings)
-        zf.writestr(
+        ),
+        *(
+            (f"xl/worksheets/sheet{i + 1}.xml", sheet_xml[n])
+            for i, n in enumerate(names)
+        ),
+        (
             "xl/sharedStrings.xml",
             '<?xml version="1.0"?><sst xmlns="http://schemas.openxmlformats.org/'
             f'spreadsheetml/2006/main">{ss}</sst>',
-        )
+        ),
+    ]
+    with open(path, "wb") as f:
+        f.write(zip_package(zip_member(n, xml, deflate=False) for n, xml in members))

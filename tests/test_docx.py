@@ -4,8 +4,13 @@ explode wrapper."""
 
 from __future__ import annotations
 
-import pytest
+from xml.sax.saxutils import escape
 
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from ccgp_data_wrangling_spark.sources.blobs import zip_member, zip_package
 from ccgp_data_wrangling_spark.sources.docx import (
     build_docx,
     docx_documents,
@@ -105,3 +110,95 @@ def test_docx_documents_bad_blob_names_its_row(spark):
         docx_documents(df).collect()
     assert "doc_id=7" in str(err.value)
     assert "not a DOCX" in str(err.value)
+
+
+def _package(document_xml: str) -> bytes:
+    return zip_package([zip_member("word/document.xml", document_xml)])
+
+
+def test_docx_text_box_paragraph_surfaces_once():
+    """A paragraph nested in a text box (w:r/w:pict/v:textbox/
+    w:txbxContent/w:p) is its own paragraph, after its host; its runs
+    are not the host's."""
+    blob = _package(
+        f'<w:document xmlns:w="{_W}" xmlns:v="urn:schemas-microsoft-com:vml">'
+        "<w:body><w:p><w:r><w:pict><v:textbox><w:txbxContent>"
+        "<w:p><w:r><w:t>inner</w:t></w:r></w:p>"
+        "</w:txbxContent></v:textbox></w:pict></w:r>"
+        "<w:r><w:t>outer</w:t></w:r></w:p></w:body></w:document>"
+    )
+    assert extract_docx_paragraphs(blob) == ["outer", "inner"]
+
+
+def _reference_paragraphs(payload: bytes) -> list[str]:
+    """Reference: the extractor before text boxes, which walked every
+    run below a paragraph and every element below a run (so it counts
+    a nested paragraph's text more than once)."""
+    import io
+    import zipfile
+    from xml.etree import ElementTree as ET
+
+    zf = zipfile.ZipFile(io.BytesIO(payload))
+    with zf:
+        root = ET.fromstring(zf.read("word/document.xml"))
+    body = root.find(f"{{{_W}}}body")
+    out: list[str] = []
+    for p in body.iter(f"{{{_W}}}p"):
+        parts: list[str] = []
+        for r in p.iter(f"{{{_W}}}r"):
+            for el in r.iter():
+                tag = el.tag.rsplit("}", 1)[-1]
+                if tag == "t":
+                    parts.append(el.text or "")
+                elif tag == "tab":
+                    parts.append("\t")
+                elif tag in ("br", "cr"):
+                    parts.append("\n")
+        out.append("".join(parts))
+    return out
+
+
+_W = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
+_TEXT = st.text(
+    st.characters(codec="utf-8", exclude_categories=("Cc", "Cs", "Cn"), include_characters="\t\n"),
+    max_size=6,
+) | st.sampled_from(["&", "<a>", "x & <y>", "'\"", "naïve", "日本語", " pad "])
+_RUN = st.lists(
+    _TEXT.map(lambda t: f'<w:t xml:space="preserve">{escape(t)}</w:t>')
+    | st.sampled_from(["<w:tab/>", "<w:br/>", "<w:cr/>", "<w:t/>", "<w:rPr><w:b/></w:rPr>"]),
+    max_size=4,
+).map(lambda cs: "<w:r>" + "".join(cs) + "</w:r>")
+_PARA = st.builds(
+    lambda ppr, runs, link: (
+        f"<w:p>{ppr}"
+        + ("<w:hyperlink>" + "".join(runs) + "</w:hyperlink>" if link else "".join(runs))
+        + "</w:p>"
+    ),
+    st.sampled_from(["", '<w:pPr><w:tabs><w:tab w:val="left" w:pos="720"/></w:tabs></w:pPr>']),
+    st.lists(_RUN, max_size=4),
+    st.booleans(),
+)
+_TABLE = st.lists(
+    st.lists(st.lists(_PARA, min_size=1, max_size=2), min_size=1, max_size=3),
+    min_size=1,
+    max_size=2,
+).map(
+    lambda rows: "<w:tbl>"
+    + "".join(
+        "<w:tr>" + "".join("<w:tc>" + "".join(c) + "</w:tc>" for c in cells) + "</w:tr>"
+        for cells in rows
+    )
+    + "</w:tbl>"
+)
+
+
+@given(st.lists(_PARA | _TABLE, max_size=6))
+@settings(max_examples=200, deadline=None)
+def test_docx_extractor_matches_reference(blocks):
+    """Without nested paragraphs, the extractor gives the reference's
+    paragraphs: tabs, breaks, table cells, XML specials, non-ASCII
+    text, empty paragraphs and tab-stop definitions."""
+    blob = _package(
+        f'<w:document xmlns:w="{_W}"><w:body>' + "".join(blocks) + "<w:sectPr/></w:body></w:document>"
+    )
+    assert extract_docx_paragraphs(blob) == _reference_paragraphs(blob)

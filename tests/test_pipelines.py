@@ -3,11 +3,16 @@
 
 from __future__ import annotations
 
-import pytest
+from collections import Counter
 
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.merge import ParquetTable
+from ccgp_data_wrangling_spark.pipelines.sheets import SRA_DEFAULTS
 from ccgp_data_wrangling_spark.pipelines import (
     biosample_sheet,
     clean_submitted,
@@ -140,6 +145,105 @@ def test_sra_sheet_pairs(spark, tables):
     # X8 defaults present
     assert by_lib["HYLA_01_L001"].library_strategy == "WGS"
     assert by_lib["HYLA_01_L001"].platform == "ILLUMINA"
+
+
+def _sra_sheet_columns(samples: DataFrame, reads: DataFrame) -> DataFrame:
+    """Reference: the SRA sheet built one Column operator at a time,
+    as ``pipelines/sheets.sra_sheet`` was before it moved to SQL
+    text."""
+    gz = F.array_sort(F.filter(F.col("files"), lambda x: x.endswith(".gz")))
+    pair_idx = F.sequence(F.lit(0), (F.size(gz) / 2).cast("int") - 1)
+    pairs = (
+        samples.where(F.col("files").isNotNull() & (F.size("files") > 0))
+        .withColumn("__gz", gz)
+        .where(F.size("__gz") >= 2)
+        .select(
+            "sample_name",
+            "organism",
+            "ccgp_project_id",
+            F.explode(
+                F.transform(
+                    pair_idx,
+                    lambda i: F.struct(
+                        F.element_at(F.col("__gz"), i * 2 + 1).alias("filename"),
+                        F.element_at(F.col("__gz"), i * 2 + 2).alias("filename2"),
+                    ),
+                )
+            ).alias("p"),
+        )
+        .select("sample_name", "organism", "ccgp_project_id", "p.*")
+    )
+    r = reads.select(
+        F.col("file_name").alias("filename"), "instrument_model", "uploaded_to_NCBI"
+    )
+    not_uploaded = pairs.join(r, "filename", "left").where(
+        F.col("uploaded_to_NCBI").isNull() | (F.col("uploaded_to_NCBI") != "yes")
+    )
+    return not_uploaded.select(
+        F.col("sample_name").alias("*sample_name"),
+        F.substring_index(F.col("filename"), "_R1", 1).alias("library_ID"),
+        F.concat(F.lit("Whole genome sequencing of "), F.col("organism")).alias("title"),
+        F.coalesce(
+            F.col("instrument_model"), F.lit(SRA_DEFAULTS["instrument_model"])
+        ).alias("instrument_model"),
+        "filename",
+        "filename2",
+        F.col("ccgp_project_id"),
+        *(
+            F.lit(default).alias(col)
+            for col, default in SRA_DEFAULTS.items()
+            if col != "instrument_model"
+        ),
+    )
+
+
+# file names: lanes L1-L3, R1 or R2, .gz or not; a sample's list is
+# drawn in any order, so R2 often comes before R1 and a .gz count can
+# be odd
+_FILE = st.builds(
+    "{}_L{}_R{}{}".format,
+    st.sampled_from(["A", "B"]),
+    st.integers(1, 3),
+    st.sampled_from([1, 2]),
+    st.sampled_from([".fastq.gz", ".fastq", ".txt", ".gz"]),
+)
+
+
+@given(
+    files=st.lists(
+        st.none() | st.lists(_FILE, max_size=6, unique=True), min_size=1, max_size=8
+    ),
+    reads=st.lists(
+        st.tuples(
+            _FILE,
+            st.none() | st.just("Illumina HiSeq X"),
+            st.sampled_from([None, "yes", "no"]),
+        ),
+        max_size=10,
+    ),
+)
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_sra_sheet_matches_column_reference(spark, files, reads):
+    """The SQL-text sra_sheet gives the Column-built sheet's rows and
+    schema: null and empty file lists, odd .gz counts, non-.gz names,
+    R2 before R1, null/yes/no upload flags and pairs with no reads
+    row (a reads row may also name an R2 or a file no sample has)."""
+    samples = spark.createDataFrame(
+        [(f"S{k}", "Rana draytonii", f"CCGP-{k}", fs) for k, fs in enumerate(files)],
+        "sample_name string, organism string, ccgp_project_id string, "
+        "files array<string>",
+    )
+    reads_df = spark.createDataFrame(
+        reads, "file_name string, instrument_model string, uploaded_to_NCBI string"
+    )
+    got = sra_sheet(samples, reads_df)
+    ref = _sra_sheet_columns(samples, reads_df)
+    assert got.schema == ref.schema
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, ref.collect()))
 
 
 def test_project_summary(spark, tables):
