@@ -99,7 +99,6 @@ def audio_clip_match(
     clips: DataFrame,
     *,
     frame: int = 256,
-    broadcast_tracks: bool = True,
     tracks_pre=None,
     clips_pre=None,
 ) -> DataFrame:
@@ -108,21 +107,21 @@ def audio_clip_match(
     per (clip, track, frame-offset), per-clip argmax with a
     deterministic (votes desc, track asc, offset asc) tie-break.
 
-    ``tracks``/``clips``: ``(id, payload)`` WAV frames. With
-    ``broadcast_tracks`` the track index rides to executors (the
-    common catalog ≪ clip-stream case); at catalog scale persist the
-    index bucketed by ``h`` instead and let the join co-locate.
+    ``tracks``/``clips``: ``(id, payload)`` WAV frames. The track
+    index is broadcast to the executors (the common catalog ≪
+    clip-stream case); at catalog scale persist the index bucketed by
+    ``h`` instead and let the join co-locate.
 
     Output: ``(clip_id, track_id, offset, votes)``, one row per clip
     that matched at least one hash.
     """
-    th = audio_constellation(tracks, frame=frame, pre=tracks_pre).select(
-        F.col("id").alias("track_id"),
-        F.col("frame_idx").alias("ti"),
-        "h",
+    th = F.broadcast(
+        audio_constellation(tracks, frame=frame, pre=tracks_pre).select(
+            F.col("id").alias("track_id"),
+            F.col("frame_idx").alias("ti"),
+            "h",
+        )
     )
-    if broadcast_tracks:
-        th = F.broadcast(th)
     ch = audio_constellation(clips, frame=frame, pre=clips_pre).select(
         F.col("id").alias("clip_id"),
         F.col("frame_idx").alias("ci"),

@@ -20,7 +20,7 @@ Scale shape: the candidate set is a parameter. The default
 brute-force cross join is the exact baseline (same role as
 knn.brute_force_topk — allowlisted, measures what the scale path
 must recover); production callers pass LSH/IVF candidates
-(knn.srp_bucket buckets joined a×b, or ivf cluster-mates), and
+(knn.srp_buckets buckets joined a×b, or ivf cluster-mates), and
 everything downstream — top-k windows per id (millions of tiny
 partitions, the scalable direction), two argmax aggregates, one
 equi-join for mutuality — is shuffle-bounded by the candidate count,

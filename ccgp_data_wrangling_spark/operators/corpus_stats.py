@@ -92,28 +92,15 @@ def word_ngram_counts(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shuffle_input: bool = False,
 ) -> DataFrame:
     """(id, gram, cnt) — in-document counts of word ``n``-grams.
 
     The explode fans each doc out to ~n_tokens rows; the groupBy is a
     map-side-combining hash aggregate on (id, gram) — the canonical
     scalable shape for text statistics.
-
-    ``shuffle_input`` repartitions the raw (id, text) rows before the
-    tokenize/explode projection, decoupling its parallelism from the
-    input layout (same pattern as operators/linkage.py span
-    generation). Off by default: the gram build (:func:`text_grams`)
-    is one linear regex pass per doc, cheap enough that for a
-    normally-partitioned corpus the extra exchange only adds latency.
-    Turn it on when the listing is a handful of dense files.
     """
-    grams = text_grams(text_col, n)
-    base = docs.select(id_col, text_col)
-    if shuffle_input:
-        base = base.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     return (
-        base.select(id_col, F.explode(grams).alias("gram"))
+        docs.select(id_col, F.explode(text_grams(text_col, n)).alias("gram"))
         .groupBy(id_col, "gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -116,7 +116,6 @@ def minhash_neardup_pairs(
     shingle_k: int = 5,
     seed: int = 42,
     max_bucket: int = 1000,
-    shuffle_input: bool = False,
     scope: CacheScope | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, exact_jaccard ≥ threshold).
@@ -126,13 +125,6 @@ def minhash_neardup_pairs(
     step makes output exact w.r.t. the shingle representation (LSH
     only controls recall), so results are deterministic and
     order-independent.
-
-    ``shuffle_input`` repartitions (id, text) ahead of the signature
-    build. Measured NEUTRAL-TO-NEGATIVE on this corpus (the persist
-    bounds the build to one pass and downstream bucket shuffles
-    dominate; A/B at sf0.1: 2.5 s raw vs 4.4 s shuffled median) —
-    reach for it only when a huge dense-file corpus makes the
-    signature stage itself the bottleneck.
     """
     rows = n_hashes // bands
     # persist the signature table: HOF lambdas are interpreted (not
@@ -143,8 +135,6 @@ def minhash_neardup_pairs(
     # likewise materialized once (it's 1000× smaller than the corpus).
     if scope is None:
         scope = active_scope("minhash_neardup_pairs")
-    if shuffle_input:
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     base = scope.persist(
         df.select(
             F.col(id_col).alias("id"),
@@ -211,7 +201,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = 10_000,
-    shuffle_input: bool = False,
     scope: CacheScope | None = None,
 ) -> DataFrame:
     """EXACT word-n-gram Jaccard near-dup pairs (no approximation).
@@ -239,8 +228,6 @@ def ngram_jaccard_pairs(
     # the interpreted shingle HOFs per branch
     if scope is None:
         scope = active_scope("ngram_jaccard_pairs")
-    if shuffle_input:
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     base = scope.persist(
         df.select(
             F.col(id_col).alias("id"),
@@ -272,97 +259,6 @@ def ngram_jaccard_pairs(
             "jaccard",
             F.col("n_shared").cast("double")
             / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    threshold: float = 0.5,
-    scope: CacheScope | None = None,
-) -> DataFrame:
-    """EXACT word-n-gram Jaccard pairs via positional prefix filtering
-    (PPJoin family — Xiao et al., WWW 2008 / Chaudhuri et al., ICDE
-    2006).
-
-    Same result set as :func:`ngram_jaccard_pairs` (with
-    ``max_df=None``), different candidate generator: order every
-    doc's grams by a global total order (document frequency
-    ascending, gram id tie-break — rarest first), index only the
-    first ``|A| - ceil(t * |A|) + 1`` grams per doc. Two sets with
-    Jaccard ≥ t must share at least one PREFIX gram under any
-    consistent order (if they shared none, the overlap is confined to
-    the ≤ ceil(t|A|)-1 / ceil(t|B|)-1 suffixes, too small to reach
-    t), so candidates come only from prefix collisions — the
-    df-ascending order makes those collisions the rarest grams, which
-    is what collapses the d² join fan-out that dominates the plain
-    inverted index. Verification computes the exact overlap with one
-    ``array_intersect`` over the persisted gram arrays per surviving
-    candidate — no second explode, no per-pair groupBy.
-
-    Scale: the df table is gram-keyed (uniform 64-bit hashes); the
-    per-doc prefix cut is a window over the doc's own grams (bounded
-    by tokens-per-doc); the candidate join fans out only on prefix
-    grams, and the verify is Jaccard-exact so the operator never
-    returns an approximation regardless of parameters.
-
-    When to use which: at t = 0.5 the prefix keeps |A|/2 + 1 grams —
-    only a 2× index cut — and this path's extra df-join + per-doc
-    window + array-carrying verify measured ~1.2× SLOWER than the
-    plain inverted index on the near-uniform benchmark corpus
-    (sf0.1: 2.0 s vs 1.7 s steady-state, identical 256 pairs). It
-    wins when the prefix is short (t ≥ 0.8 keeps ~|A|/5) and/or the
-    gram df distribution is zipfian (web text), where the plain
-    index's d² fan-out on common grams explodes; the registered
-    benchmark query therefore stays on :func:`ngram_jaccard_pairs`.
-    """
-    if scope is None:
-        scope = active_scope("ngram_jaccard_pairs_prefix")
-    base = scope.persist(
-        df.select(
-            F.col(id_col).alias("id"),
-            shingle_hashes(F.col(text_col), n).alias("grams"),
-        )
-    )
-    ex = base.select("id", F.size("grams").alias("n_grams"), F.explode("grams").alias("g"))
-    doc_freq = ex.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id").orderBy(F.asc("df"), F.asc("g"))
-    prefix_len = F.col("n_grams") - F.ceil(F.lit(threshold) * F.col("n_grams")) + 1
-    prefix = (
-        ex.join(doc_freq, "g")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= prefix_len)
-        .select("id", "g")
-    )
-
-    cands = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "g")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ga = base.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = base.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
-    return (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "n_shared", F.size(F.array_intersect("grams_a", "grams_b"))
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.size("grams_a") + F.size("grams_b") - F.col("n_shared")),
         )
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
@@ -428,7 +324,6 @@ def simhash_neardup_pairs(
     *,
     max_hamming: int = 3,
     bands: int = 4,
-    shuffle_input: bool = False,
     scope: CacheScope | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64 bits into ``bands``
@@ -441,8 +336,6 @@ def simhash_neardup_pairs(
     # expression into every chunk extraction / join branch
     if scope is None:
         scope = active_scope("simhash_neardup_pairs")
-    if shuffle_input:
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     base = scope.persist(
         df.select(
             F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sim")
@@ -492,7 +385,6 @@ def embedding_neardup_pairs(
     n_bits: int | None = None,
     seed: int = 42,
     dim: int | None = None,
-    carrier: str = "auto",
     scope: CacheScope | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ ``threshold``.
@@ -515,18 +407,16 @@ def embedding_neardup_pairs(
     Scale: bucket keys are (table, bucket_id) — a shuffle on uniform
     small keys; the exact-cosine verify touches only within-bucket
     pairs. This is the embedding analogue of MinHash-LSH for text.
-    Plane sets reach the executors via :func:`knn._resolve_carrier`:
-    expression literals while small, one Arrow matmul kernel once the
-    adaptive table count makes interpreted HOF projection the
-    bottleneck.
+    Every table's bucket comes from one Arrow matmul kernel
+    (:func:`knn.srp_buckets`). A null or wrong-length vector lands in
+    bucket 0 of every table and goes through the same exact verify; a
+    null vector's cosine is null, so it never pairs.
     """
     from ccgp_data_wrangling_spark.operators.knn import (
-        _resolve_carrier,
         _seeded_planes,
         cosine_sim,
         srp_adaptive_params,
-        srp_bucket,
-        srp_buckets_kernel,
+        srp_buckets,
     )
 
     if dim is None:
@@ -542,46 +432,21 @@ def embedding_neardup_pairs(
         n_bits = auto_bits if n_bits is None else n_bits
     tables = _seeded_planes(n_tables, n_bits, dim, seed)
     v = F.col(vec_col).cast("array<double>")
-    # persist the (id, vec[, buckets]) table: the n_tables·n_bits·dim
-    # projection arithmetic is interpreted HOF work — materialize once
-    # instead of once per join branch / chunk expression
+    # persist the (id, vec, buckets) table: it feeds both sides of the
+    # bucket self-join and both vector lookups of the verify, and
+    # without it the Arrow SRP projection would run once per branch
     if scope is None:
         scope = active_scope("embedding_neardup_pairs")
-    mode = _resolve_carrier(n_tables * n_bits * dim, carrier)
-    if mode == "kernel":
-        base = scope.persist(df.select(F.col(id_col).alias("id"), v.alias("vec")))
-        # persist the kernel OUTPUT too: banded feeds both sides of
-        # the self-join below, and without this the Arrow SRP
-        # projection would execute once per join branch
-        banded = scope.persist(
-            srp_buckets_kernel(base, tables, vec_col="vec", drop_vec=True).select(
-                "id", F.col("t").alias("table_idx"), F.col("bkt").alias("bucket")
-            )
+    base = scope.persist(
+        srp_buckets(
+            df.select(F.col(id_col).alias("id"), v.alias("vec")),
+            tables,
+            vec_col="vec",
         )
-    else:
-        if mode == "table":
-            tdf = df.sparkSession.createDataFrame(
-                [(tables,)], "__tables array<array<array<double>>>"
-            )
-            bucket_arr = F.transform(
-                F.col("__tables"),
-                lambda planes: srp_bucket(F.col("vec"), planes),
-            )
-            src = df.select(
-                F.col(id_col).alias("id"), v.alias("vec")
-            ).crossJoin(F.broadcast(tdf))
-        else:
-            bucket_arr = F.array(*[srp_bucket(v, planes) for planes in tables])
-            src = df.select(
-                F.col(id_col).alias("id"), v.alias("vec"), bucket_arr.alias("__b")
-            )
-            bucket_arr = F.col("__b")
-        base = scope.persist(
-            src.select("id", "vec", bucket_arr.alias("buckets"))
-        )
-        banded = base.select(
-            "id", F.posexplode("buckets").alias("table_idx", "bucket")
-        )
+    )
+    banded = base.select(
+        "id", F.posexplode("__buckets").alias("table_idx", "bucket")
+    )
     left = banded.select("table_idx", "bucket", F.col("id").alias("id_a"))
     right = banded.select("table_idx", "bucket", F.col("id").alias("id_b"))
     cands = (

@@ -6,10 +6,27 @@
   path: hash each vector to ``n_bits`` sign bits per table; a query
   probes only its buckets, turning a full-scan re-rank into a
   candidate re-rank.
+* IVF (inverted file) search — corpus rows assign to their nearest
+  centroid of a seeded corpus sample; a query re-ranks only the cells
+  of its ``n_probe`` nearest centroids.
 
-Dot products / norms are ``zip_with``+``aggregate`` Column
-expressions (JVM-side). Projection planes are seeded and embedded as
-nested array literals — deterministic across runs.
+Constant sets (SRP planes, centroids) reach the executors one way:
+captured as a numpy matrix in one of the two Arrow kernels below,
+:func:`srp_buckets` and :func:`nearest_centroids` — one BLAS matmul
+per batch, the FAISS-style form that holds at √n centroids. Baking
+them into the plan as expression literals costs codegen time that
+grows with the constant (seconds at 32×64 centroids), and Spark
+evaluates the array HOFs over them interpreted. dedup.py and
+semdedup.py call these kernels and nothing else for their constants.
+(:func:`jl_project` still returns literal-matrix Columns, because its
+callers compose them into their own select.)
+The exact cosine re-rank stays a ``zip_with``+``aggregate`` Column
+expression (:func:`cosine_sim`). Planes and centroid samples are
+seeded — deterministic across runs.
+
+A vector that is null or has the wrong length never fails a task:
+it lands in bucket 0 of every SRP table and gets no centroid, so IVF
+never probes it and SemDeDup never pairs it.
 
 Scale notes: corpus signatures are computed in ONE narrow scan (all
 tables at once), no shuffle; the probe filter prunes before the
@@ -22,7 +39,6 @@ and periodically rebuild signatures as vectors churn.
 from __future__ import annotations
 
 import random
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
@@ -91,51 +107,23 @@ def _seeded_planes(
     ]
 
 
-def _planes_lit(planes: list[list[float]]) -> Column:
-    return F.array(
-        *[F.array(*[F.lit(float(w)) for w in p]) for p in planes]
-    )
-
-
-def srp_bucket(vec: Column, planes: list[list[float]] | Column) -> Column:
-    """Signed-random-projection bucket id (one sign bit per plane).
-
-    ``planes`` may be a Python plane list (inlined as literals) or a
-    Column already carrying ``array<array<double>>`` — the broadcast
-    table carrier that avoids codegen blowup for large plane sets.
-
-    The sign bits and the bit-packing are ONE expression pass: packing
-    via per-plane powers inside the same transform, then a single sum
-    fold. (Referencing a bits-array subexpression once per bit would
-    let projection collapse duplicate the n_bits dot products n_bits
-    times — interpreted HOFs make that an O(n_bits²·dim) per-row cost.)
-    """
-    bits = F.transform(
-        planes if isinstance(planes, Column) else _planes_lit(planes),
-        lambda p: F.when(
-            F.aggregate(
-                F.zip_with(vec, p, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    # positional fold: first plane = most-significant bit; _py_bucket
-    # mirrors this convention for the query side
-    return F.aggregate(
-        bits, F.lit(0).cast("long"), lambda acc, b: acc * 2 + b
-    )
-
-
 def _py_bucket(query_vec: list[float], planes: list[list[float]]) -> int:
-    """Driver-side twin of :func:`srp_bucket` (same MSB-first fold)."""
+    """Driver-side twin of :func:`srp_buckets` for one table (same
+    MSB-first fold; first plane = most-significant bit)."""
     b = 0
     for plane in planes:
-        bit = 1 if sum(x * w for x, w in zip(query_vec, plane)) >= 0 else 0
+        bit = 0 if sum(x * w for x, w in zip(query_vec, plane)) < 0 else 1
         b = b * 2 + bit
     return b
+
+
+def _py_cos(a: list[float], b: list[float]) -> float:
+    """Driver-side cosine (0.0 against a zero vector), for
+    :func:`ivf_topk`'s probe ranking."""
+    dot = sum(x * y for x, y in zip(a, b))
+    na = sum(x * x for x in a) ** 0.5
+    nb = sum(x * x for x in b) ** 0.5
+    return dot / (na * nb) if na and nb else 0.0
 
 
 def cosine_sim(a: Column, b: Column) -> Column:
@@ -160,23 +148,40 @@ def _ranked_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
     return top.withColumn("rank", F.row_number().over(W.orderBy(*order)))
 
 
-def _srp_hit_kernel(
+def _valid_vectors(vecs, dim: int):
+    """``(ok, V)`` for one Arrow batch of a vector column: ``ok`` masks
+    the rows whose vector is non-null with exactly ``dim`` elements,
+    ``V`` stacks those rows as a float64 ``(ok.sum(), dim)`` matrix.
+    Each kernel applies its own rule to the other rows, so one null or
+    wrong-length vector never reaches ``np.stack`` and fails the task."""
+    import numpy as np
+
+    ok = np.fromiter(
+        (v is not None and len(v) == dim for v in vecs), bool, len(vecs)
+    )
+    if not ok.any():
+        return ok, np.empty((0, dim), dtype=np.float64)
+    return ok, np.stack([np.asarray(v, dtype=np.float64) for v in vecs[ok]])
+
+
+def srp_buckets(
     src: DataFrame,
     tables: list[list[list[float]]],
-    q_buckets: list[int],
     *,
     vec_col: str,
 ) -> DataFrame:
-    """LSH candidate filter as ONE Arrow kernel: keep the rows whose
-    SRP bucket matches the query's bucket in ANY table. One matmul
-    computes every sign bit of every table; MSB-first packing matches
-    :func:`srp_bucket` / :func:`_py_bucket`. Schema is unchanged (a
-    pure filter), so the exact-cosine re-rank downstream is the same
-    Column expression either way."""
+    """Every SRP table's bucket for each row, as ONE Arrow kernel.
+
+    Output = input columns + ``__buckets`` ``array<long>`` holding one
+    bucket per table. One matmul computes every sign bit of every
+    table; bits pack MSB-first like :func:`_py_bucket`. A null or
+    wrong-length vector gets bucket 0 in every table.
+    """
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     n_tables = len(tables)
     n_bits = len(tables[0]) if tables else 0
@@ -184,27 +189,22 @@ def _srp_hit_kernel(
         [plane for table in tables for plane in table], dtype=np.float64
     )  # (n_tables*n_bits, dim)
     weights = (2 ** np.arange(n_bits - 1, -1, -1)).astype(np.int64)
-    qb = np.asarray(q_buckets, dtype=np.int64)
     dim = P.shape[-1]
+    schema = StructType(
+        src.schema.fields + [StructField("__buckets", ArrayType(LongType()))]
+    )
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            vecs = pdf[vec_col].to_numpy()
-            # the Column carriers read a null or wrong-length vector's
-            # dot products as null, hence every bit 0: bucket 0 in
-            # every table. Mask those rows out of the matmul to match.
-            ok = np.fromiter(
-                (v is not None and len(v) == dim for v in vecs), bool, len(vecs)
-            )
+            ok, V = _valid_vectors(pdf[vec_col].to_numpy(), dim)
             bkts = np.zeros((len(pdf), n_tables), dtype=np.int64)
-            if ok.any():
-                V = np.stack([np.asarray(x, dtype=np.float64) for x in vecs[ok]])
-                # ~(dot < 0), not dot >= 0: Spark orders NaN above 0
-                bits = ~(V @ P.T < 0)
-                bkts[ok] = bits.reshape(-1, n_tables, n_bits) @ weights
-            yield pdf[(bkts == qb).any(axis=1)]
+            # ~(dot < 0), not dot >= 0: a NaN dot sets its bit, as in
+            # _py_bucket and in Spark's ordering (NaN above 0)
+            bits = ~(V @ P.T < 0)
+            bkts[ok] = bits.reshape(-1, n_tables, n_bits) @ weights
+            yield pdf.assign(__buckets=list(bkts))
 
-    return src.mapInPandas(op, schema=src.schema)
+    return src.mapInPandas(op, schema=schema)
 
 
 def ann_topk(
@@ -217,58 +217,32 @@ def ann_topk(
     n_tables: int = 8,
     n_bits: int = 12,
     seed: int = 42,
-    carrier: str = "auto",
 ) -> DataFrame:
     """Approximate top-k by cosine.
 
-    One scan computes every table's bucket for each vector; a vector
-    is a candidate if ANY table agrees with the query's bucket; exact
+    One scan computes every table's bucket for each vector
+    (:func:`srp_buckets`); a vector is a candidate if ANY table agrees
+    with the query's bucket (:func:`_py_bucket` on the driver); exact
     cosine re-ranks candidates. Recall grows with n_tables, candidate
     count shrinks with n_bits.
-
-    The plane set reaches the executors via :func:`_resolve_carrier`,
-    like dedup/semdedup: expression literals while small, one Arrow
-    matmul kernel above ``_LITERAL_BUDGET`` doubles (8·12·64 = 6144 at
-    the registered defaults — measured at sf0.1, the literal hit
-    filter costs ~1.2 s of interpreted HOF evaluation per scan where
-    the kernel filter is one sub-ms matmul per batch). The exact
-    cosine re-rank of candidates is the identical Column expression on
-    every path.
     """
     tables = _seeded_planes(n_tables, n_bits, len(query_vec), seed)
-    q_buckets = [_py_bucket(query_vec, t) for t in tables]
+    q_buckets = F.array(
+        *[F.lit(_py_bucket(query_vec, t)).cast("long") for t in tables]
+    )
     v = F.col(vec_col).cast("array<double>")
-
-    mode = _resolve_carrier(n_tables * n_bits * len(query_vec), carrier)
-    if mode == "kernel":
-        cand = _srp_hit_kernel(emb, tables, q_buckets, vec_col=vec_col)
-    elif mode == "table":
-        tdf = emb.sparkSession.createDataFrame(
-            [(tables, [int(b) for b in q_buckets])],
-            "__tables array<array<array<double>>>, __qb array<long>",
+    cand = srp_buckets(
+        emb.select(id_col, v.alias("__v")), tables, vec_col="__v"
+    ).where(
+        F.exists(
+            F.zip_with("__buckets", q_buckets, lambda b, q: b == q),
+            lambda hit: hit,
         )
-        hit = F.exists(
-            F.zip_with(
-                F.col("__tables"),
-                F.col("__qb"),
-                lambda planes, b: srp_bucket(v, planes) == b,
-            ),
-            lambda x: x,
-        )
-        cand = (
-            emb.crossJoin(F.broadcast(tdf)).where(hit).select(*emb.columns)
-        )
-    else:
-        hit = reduce(
-            lambda a, b: a | b,
-            [srp_bucket(v, planes) == qb for planes, qb in zip(tables, q_buckets)],
-        )
-        cand = emb.where(hit)
-
+    )
     qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = cand.select(
         id_col,
-        F.round(cosine_sim(v, qcol), 4).alias("cos_sim"),
+        F.round(cosine_sim(F.col("__v"), qcol), 4).alias("cos_sim"),
     )
     return _ranked_topk(scored, k, id_col)
 
@@ -293,209 +267,88 @@ def brute_force_topk(
 
 
 def _sample_centroids(
-    emb: DataFrame, id_col: str, vec_col: str, n_centroids: int, seed: int
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int,
+    seed: int | None,
 ) -> list[list[float]]:
-    """Deterministic coarse-quantizer centroids: the corpus rows
-    minimizing ``xxhash64(id, seed)`` — a seeded uniform sample with
-    no RNG state, bounded collect (n_centroids rows)."""
+    """Deterministic centroids, a bounded collect of ``n_centroids``
+    corpus rows: those minimizing ``xxhash64(id, seed)`` (a seeded
+    uniform sample with no RNG state), or the lowest ids when ``seed``
+    is None. Null vectors and vectors with a null element are skipped,
+    and so is any sampled vector whose width differs from the sample's
+    most common width, so every centroid has the width
+    :func:`nearest_centroids` compares at."""
+    from collections import Counter
+
+    key = F.col(id_col) if seed is None else F.xxhash64(id_col, F.lit(seed))
     rows = (
-        emb.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-        .withColumn("hk", F.xxhash64(F.col(id_col), F.lit(seed)))
-        .orderBy("hk")
+        emb.select(key.alias("k"), F.col(vec_col).cast("array<double>").alias("v"))
+        .where(F.forall("v", lambda x: x.isNotNull()))  # null v: dropped
+        .orderBy("k")
         .limit(n_centroids)
         .collect()
     )
-    return [[float(x) for x in r.v] for r in rows]
+    vecs = [[float(x) for x in r.v] for r in rows]
+    if not vecs:
+        return []
+    dim = Counter(map(len, vecs)).most_common(1)[0][0]
+    return [v for v in vecs if len(v) == dim]
 
 
-def _centroid_lit(centroids: list[list[float]]) -> Column:
-    """(idx, vector) struct-array literal — rides into executors inside
-    the plan, broadcast-equivalent, no shuffle. An empty centroid set
-    (empty corpus) yields a TYPED empty array so downstream
-    transform/array_max still analyze."""
-    if not centroids:
-        return F.array().cast("array<struct<idx:int, cv:array<double>>>")
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("idx"),
-                F.array(*[F.lit(float(x)) for x in c]).alias("cv"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-
-
-#: doubles above which centroid/plane carriers switch from expression
-#: literals to a broadcast one-row table. Literals bake every value
-#: into the generated code: at sf0.1 the 32x64 IVF centroid set cost
-#: ~1.3 MiB task binaries and 2.4-3.5 s of CONSTANT codegen compile —
-#: the two slowest bench entries of round 5 — and at the sqrt(n)
-#: centroid counts a 100 TB corpus needs, the literal plan stops
-#: compiling outright. A one-row broadcast keeps the same per-row
-#: arithmetic (the HOF transform is interpreted either way) with a
-#: KB-scale plan. 256 doubles ≈ the point where measured compile cost
-#: starts to beat the kernel's Python-worker round trip at sf0.1.
-_LITERAL_BUDGET = 256
-
-
-def _resolve_carrier(n_values: int, carrier: str) -> str:
-    """Pick how a centroid/plane constant reaches the executors.
-
-    ``literal``: inline expression literals — fine below
-    ``_LITERAL_BUDGET`` doubles, codegen-toxic above it.
-    ``table``: one-row broadcast frame + the same Column arithmetic —
-    KB-scale plan, demonstrates the pure-DataFrame shape, but Spark
-    evaluates array HOFs interpreted, so per-row cost is high.
-    ``kernel``: Arrow ``mapInPandas`` with the constant captured as a
-    numpy matrix — one BLAS matmul per batch, the FAISS-style form
-    that holds at √n centroids on a 100 TB corpus.
-    ``auto`` = literal when small, kernel when large.
-    """
-    if carrier not in ("auto", "literal", "table", "kernel"):
-        raise ValueError(
-            f"carrier must be auto|literal|table|kernel, got {carrier!r}"
-        )
-    if carrier == "auto":
-        return "kernel" if n_values > _LITERAL_BUDGET else "literal"
-    return carrier
-
-
-def _use_table_carrier(n_values: int, carrier: str) -> bool:
-    return _resolve_carrier(n_values, carrier) == "table"
-
-
-def _centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
-    """One-row DataFrame carrying the centroid set as data
-    (``__cents: array<struct<idx,cv>>``) — crossJoin(broadcast(...))
-    attaches it to every row with no shuffle and no codegen blowup."""
-    rows = [([(i, [float(x) for x in c]) for i, c in enumerate(centroids)],)]
-    return spark.createDataFrame(
-        rows, "__cents array<struct<idx:int, cv:array<double>>>"
-    )
-
-
-def assign_centroids_kernel(
+def nearest_centroids(
     src: DataFrame,
     centroids: list[list[float]],
+    k: int = 1,
     *,
     vec_col: str,
-    out_col: str = "__centroid",
     round_dp: int | None = None,
 ) -> DataFrame:
-    """Nearest-centroid-by-cosine assignment as ONE Arrow kernel:
-    normalize the batch, one BLAS matmul against the (pre-normalized)
-    centroid matrix, row-wise argmax (numpy argmax keeps the FIRST
-    maximum — the same lowest-index tie-break as the Column-expression
-    argmax). ``round_dp`` rounds similarities before the argmax, for
-    callers whose oracle replays a rounded comparison.
+    """The ``k`` nearest centroids by cosine, as ONE Arrow kernel.
 
-    Output = input columns + ``out_col`` int. This is the carrier that
-    survives 100 TB: at √n centroids the similarity pass is a dense
-    (batch × dim) @ (dim × n_centroids) product per Arrow batch —
-    microseconds where interpreted array HOFs take seconds — and the
-    centroid matrix ships once per executor in the task closure.
+    Output = input columns + ``__centroids`` ``array<int>`` of centroid
+    indices, nearest first; ties go to the lowest index. ``round_dp``
+    rounds the similarities before they are ranked, for callers whose
+    oracle replays a rounded comparison. One BLAS matmul per batch
+    against the pre-normalized centroid matrix. A null or
+    wrong-length vector gets null (no centroid), and so does every
+    row when ``centroids`` is empty.
     """
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
     if not centroids:  # empty corpus sample: nothing to assign to
-        return src.withColumn(out_col, F.lit(None).cast("int"))
+        return src.withColumn("__centroids", F.lit(None).cast("array<int>"))
     C = np.asarray(centroids, dtype=np.float64)
     Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-    schema = StructType(src.schema.fields + [StructField(out_col, IntegerType())])
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf):
-                V = np.stack(pdf[vec_col].to_numpy())
-                Vn = V / np.maximum(
-                    np.linalg.norm(V, axis=1, keepdims=True), 1e-300
-                )
-                sims = Vn @ Cn.T
-                if round_dp is not None:
-                    sims = np.round(sims, round_dp)
-                pdf[out_col] = np.argmax(sims, axis=1).astype("int32")
-            else:
-                pdf[out_col] = np.array([], dtype="int32")
-            yield pdf
-
-    return src.mapInPandas(op, schema=schema)
-
-
-def srp_buckets_kernel(
-    src: DataFrame,
-    tables: list[list[list[float]]],
-    *,
-    vec_col: str,
-    drop_vec: bool = False,
-) -> DataFrame:
-    """All SRP tables' buckets in ONE Arrow kernel, exploded to
-    ``(input columns [minus vec if drop_vec], t int, bkt long)`` —
-    the vectorized twin of ``posexplode(array(srp_bucket(...)))``:
-    one matmul computes every sign bit, MSB-first packing matches
-    :func:`srp_bucket` / :func:`_py_bucket` exactly.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    n_tables = len(tables)
-    n_bits = len(tables[0]) if tables else 0
-    P = np.asarray(
-        [plane for table in tables for plane in table], dtype=np.float64
-    )  # (n_tables*n_bits, dim)
-    weights = (2 ** np.arange(n_bits - 1, -1, -1)).astype(np.int64)
-
-    keep = [f for f in src.schema.fields if not (drop_vec and f.name == vec_col)]
+    dim = C.shape[1]
+    k = min(k, len(centroids))
     schema = StructType(
-        keep + [StructField("t", IntegerType()), StructField("bkt", LongType())]
+        src.schema.fields
+        + [StructField("__centroids", ArrayType(IntegerType()))]
     )
-    keep_names = [f.name for f in keep]
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pd.DataFrame(columns=keep_names + ["t", "bkt"])
-                continue
-            V = np.stack(pdf[vec_col].to_numpy())
-            bits = (V @ P.T >= 0).reshape(n, n_tables, n_bits)
-            bkts = bits @ weights  # (n, n_tables) int64
-            out = pdf[keep_names].loc[
-                np.repeat(pdf.index, n_tables)
-            ].reset_index(drop=True)
-            out["t"] = np.tile(
-                np.arange(n_tables, dtype="int32"), n
+            ok, V = _valid_vectors(pdf[vec_col].to_numpy(), dim)
+            Vn = V / np.maximum(
+                np.linalg.norm(V, axis=1, keepdims=True), 1e-300
             )
-            out["bkt"] = bkts.reshape(-1)
-            yield out
+            sims = Vn @ Cn.T
+            if round_dp is not None:
+                sims = np.round(sims, round_dp)
+            # stable sort of -sim: descending similarity, lowest index
+            # first among equals
+            top = iter(
+                np.argsort(-sims, axis=1, kind="stable")[:, :k].astype(np.int32)
+            )
+            yield pdf.assign(__centroids=[next(top) if o else None for o in ok])
 
     return src.mapInPandas(op, schema=schema)
-
-
-def _assign_centroid(v: Column, cent_lit: Column) -> Column:
-    """Nearest-centroid index by cosine, lowest-index tie-break.
-
-    argmax via array_max over (sim, -idx) structs: each centroid's
-    cosine is evaluated ONCE inside the transform (a when/otherwise
-    fold would evaluate it twice — condition + selected value).
-    """
-    best = F.array_max(
-        F.transform(
-            cent_lit,
-            lambda c: F.struct(
-                cosine_sim(v, c["cv"]).alias("sim"), (-c["idx"]).alias("nidx")
-            ),
-        )
-    )
-    return -best["nidx"]
 
 
 def ivf_topk(
@@ -512,44 +365,31 @@ def ivf_topk(
     """IVF (inverted-file) approximate top-k by cosine.
 
     Coarse quantizer: ``n_centroids`` centroids drawn deterministically
-    from the corpus itself (rows minimizing xxhash64(id, seed) — a
-    seeded uniform sample with no RNG state). Every vector is assigned
-    to its nearest centroid by cosine; a query probes the ``n_probe``
-    centroids nearest to IT and exact-cosine re-ranks only vectors
-    assigned there.
+    from the corpus itself (:func:`_sample_centroids`). Every vector is
+    assigned to its nearest centroid by cosine
+    (:func:`nearest_centroids`); a query probes the ``n_probe``
+    centroids nearest to IT (ranked on the driver, same lowest-index
+    tie-break) and exact-cosine re-ranks only vectors assigned there.
 
-    Scale: the centroid table is tiny and rides into the executors as
-    expression literals (broadcast-equivalent, no shuffle). At 100 TB
-    the assignment is precomputed once and the corpus PERSISTED
-    partitioned by ``centroid_id`` so a query's scan is partition-pruned
-    to n_probe/n_centroids of the data; here the assignment is computed
-    inline in the same scan. Assignment cost is O(n_centroids·dim) per
-    row of JVM codegen arithmetic, shuffle-free.
+    Scale: at 100 TB the assignment is precomputed once and the corpus
+    PERSISTED partitioned by ``centroid_id`` so a query's scan is
+    partition-pruned to n_probe/n_centroids of the data; here the
+    assignment is computed inline in the same scan, shuffle-free.
     """
     centroids = _sample_centroids(emb, id_col, vec_col, n_centroids, seed)
-
-    def _py_cos(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return dot / (na * nb) if na and nb else 0.0
-
     probe = sorted(
         range(len(centroids)),
         key=lambda c: (-_py_cos(query_vec, centroids[c]), c),
     )[:n_probe]
 
     v = F.col(vec_col).cast("array<double>")
-    cent_lit = _centroid_lit(centroids)
-    assigned = _assign_centroid(v, cent_lit)
-
-    cand = emb.withColumn("centroid_id", assigned).where(
-        F.col("centroid_id").isin(*probe)
-    )
+    cand = nearest_centroids(
+        emb.select(id_col, v.alias("__v")), centroids, vec_col="__v"
+    ).where(F.col("__centroids")[0].isin(*probe))
     qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = cand.select(
         id_col,
-        F.round(cosine_sim(v, qcol), 4).alias("cos_sim"),
+        F.round(cosine_sim(F.col("__v"), qcol), 4).alias("cos_sim"),
     )
     return _ranked_topk(scored, k, id_col)
 
@@ -566,7 +406,6 @@ def ivf_topk_multi(
     n_centroids: int = 32,
     n_probe: int = 8,
     seed: int = 42,
-    carrier: str = "auto",
 ) -> DataFrame:
     """Batch IVF retrieval: top-k corpus neighbors for EVERY row of a
     query DataFrame, in one distributed plan — the multi-query layout
@@ -576,13 +415,12 @@ def ivf_topk_multi(
     Shape:
 
     1. coarse quantizer = the same deterministic corpus sample as
-       ``ivf_topk`` (tiny, inlined as literals);
-    2. corpus rows assign to their nearest centroid (pure codegen
-       arithmetic, shuffle-free);
-    3. each QUERY row computes its ``n_probe`` nearest centroids as an
-       array Column (sorted (−sim, idx) structs — same ordering as the
-       single-query driver-side probe) and explodes to
-       ``(query_id, centroid)`` probe rows;
+       ``ivf_topk``;
+    2. corpus rows assign to their nearest centroid
+       (:func:`nearest_centroids` with k = 1, shuffle-free);
+    3. each QUERY row takes its ``n_probe`` nearest centroids (the
+       same kernel with k = ``n_probe``, same lowest-index tie-break)
+       and explodes to ``(query_id, centroid)`` probe rows;
     4. probes equi-join the assigned corpus on the centroid id —
        candidate volume per query is the occupancy of its probed
        cells, never |corpus|;
@@ -594,99 +432,20 @@ def ivf_topk_multi(
     ``centroid_id`` (write once), making step 4 a partition-pruned
     scan; here assignment runs inline in the same job.
 
-    ``carrier`` picks how the centroid set reaches the executors
-    (see :func:`_resolve_carrier`): expression ``literal``, broadcast
-    one-row ``table`` (same Column arithmetic, KB-scale plan), or the
-    Arrow+BLAS ``kernel`` (the form that holds at √n centroids).
-    Every carrier computes the IDENTICAL argmax/probe decisions —
-    argmax ties break to the lowest centroid index in all three.
-
     Output: ``(query_id, id, cos_sim, rank)`` with rank 1..k/query.
     """
     centroids = _sample_centroids(emb, id_col, vec_col, n_centroids, seed)
-    dim = len(centroids[0]) if centroids else 0
-    mode = _resolve_carrier(n_centroids * dim, carrier)
-
     v = F.col(vec_col).cast("array<double>")
     qv = F.col(query_vec_col).cast("array<double>")
-    if mode == "kernel":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        corpus = assign_centroids_kernel(
-            emb.select(id_col, v.alias("__v")), centroids, vec_col="__v"
-        )
-
-        C = np.asarray(centroids, dtype=np.float64)
-        Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-        q_src = queries.select(query_id_col, qv.alias("__qv"))
-        q_schema = StructType(
-            q_src.schema.fields + [StructField("__centroid", IntegerType())]
-        )
-
-        def probe_op(batches):
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    yield pd.DataFrame(
-                        columns=[query_id_col, "__qv", "__centroid"]
-                    )
-                    continue
-                V = np.stack(pdf["__qv"].to_numpy())
-                Vn = V / np.maximum(
-                    np.linalg.norm(V, axis=1, keepdims=True), 1e-300
-                )
-                # stable argsort of -sim == descending sim with the
-                # lowest-index tie-break of the Column-expression path
-                order = np.argsort(-(Vn @ Cn.T), axis=1, kind="stable")[
-                    :, :n_probe
-                ]
-                out = pdf.loc[np.repeat(pdf.index, n_probe)].reset_index(
-                    drop=True
-                )
-                out["__centroid"] = order.reshape(-1).astype("int32")
-                yield out
-
-        qp = q_src.mapInPandas(probe_op, schema=q_schema)
-    else:
-        if mode == "table":
-            cents_df = F.broadcast(_centroid_frame(emb.sparkSession, centroids))
-            cent_src = emb.crossJoin(cents_df)
-            query_src = queries.crossJoin(cents_df)
-            cent_arr = F.col("__cents")
-        else:
-            cent_src, query_src = emb, queries
-            cent_arr = _centroid_lit(centroids)
-
-        corpus = cent_src.select(
-            id_col,
-            v.alias("__v"),
-            _assign_centroid(v, cent_arr).alias("__centroid"),
-        )
-
-        # per-query probe list: ascending sort on (−sim, idx) structs
-        # == descending sim with lowest-index tie-break, keep n_probe
-        probe_arr = F.slice(
-            F.array_sort(
-                F.transform(
-                    cent_arr,
-                    lambda c: F.struct(
-                        (-cosine_sim(qv, c["cv"])).alias("nsim"),
-                        c["idx"].alias("idx"),
-                    ),
-                )
-            ),
-            1,
-            n_probe,
-        )
-        qp = query_src.select(
-            query_id_col,
-            qv.alias("__qv"),
-            F.explode(F.transform(probe_arr, lambda p: p["idx"])).alias(
-                "__centroid"
-            ),
-        )
+    corpus = nearest_centroids(
+        emb.select(id_col, v.alias("__v")), centroids, vec_col="__v"
+    ).select(id_col, "__v", F.col("__centroids")[0].alias("__centroid"))
+    qp = nearest_centroids(
+        queries.select(query_id_col, qv.alias("__qv")),
+        centroids,
+        n_probe,
+        vec_col="__qv",
+    ).select(query_id_col, "__qv", F.explode("__centroids").alias("__centroid"))
 
     scored = qp.join(corpus, "__centroid").select(
         query_id_col,

@@ -263,7 +263,6 @@ def link_reads_to_samples(
     sample_key: str = "sample_name",
     file_key: str = "file_name",
     max_span: int = 6,
-    conflicts: bool = True,
 ) -> DataFrame:
     """Full J1+J2+A5 pipeline: per-sample linked file set with
     ``filesize_sum`` and ``received`` (deterministic: min mdate,
@@ -277,8 +276,7 @@ def link_reads_to_samples(
         file_key=file_key,
         max_span=max_span,
     )
-    if conflicts:
-        pairs = resolve_conflicts(pairs, sample_key=sample_key, file_key=file_key)
+    pairs = resolve_conflicts(pairs, sample_key=sample_key, file_key=file_key)
     return pairs.groupBy(sample_key).agg(
         F.array_sort(F.collect_list(file_key)).alias("files_found"),
         F.sum("filesize").alias("filesize_sum"),

@@ -20,7 +20,10 @@ pair predicate uses cosine rounded to 6 dp, and the keep policy is
 "drop any row that duplicates a SMALLER-id row", which needs no
 iterative connected components: within a cluster, every dropped row
 names a smaller keeper, and chains terminate at the cluster's minimum
-id. The whole operator is plain DataFrame algebra (no UDFs).
+id. Cluster assignment and SRP buckets are knn.py's two Arrow matmul
+kernels (:func:`knn.nearest_centroids`, :func:`knn.srp_buckets`); the
+pair search and keep rule are DataFrame algebra. A null or
+wrong-length vector gets a null cluster: it is never paired and kept.
 
 Scale notes: the centroid set is a bounded collect (default 8 rows —
 the same bound class as knn.py's IVF seed sample; at 100 TB you'd
@@ -33,7 +36,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ccgp_data_wrangling_spark.operators.knn import cosine_sim
+from ccgp_data_wrangling_spark.operators.knn import (
+    _sample_centroids,
+    _seeded_planes,
+    cosine_sim,
+    nearest_centroids,
+    srp_buckets,
+)
 
 __all__ = ["assign_seed_clusters", "semantic_dedup", "semantic_dedup_lsh"]
 
@@ -44,65 +53,23 @@ def assign_seed_clusters(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     num_clusters: int = 8,
-    carrier: str = "auto",
 ) -> DataFrame:
     """(id, cluster, v): nearest seed centroid by cosine.
 
-    Centroids = the ``num_clusters`` lowest-id rows — deterministic on
+    Centroids = the ``num_clusters`` lowest-id rows with a vector of
+    the common width (:func:`knn._sample_centroids`) — deterministic on
     any layout. Assignment is a shuffle-free argmax over similarities
-    ROUNDED to 6 dp; ties go to the smallest cluster id. ``carrier``
-    switches the centroid set between plan literals, a one-row
-    broadcast table, and the Arrow+BLAS kernel
-    (see knn._resolve_carrier) — identical decisions in all three.
+    ROUNDED to 6 dp (:func:`knn.nearest_centroids`); ties go to the
+    smallest cluster id. A null or wrong-length vector gets a null
+    cluster.
     """
-    from ccgp_data_wrangling_spark.operators.knn import (
-        _resolve_carrier,
-        assign_centroids_kernel,
-    )
-
     v = F.col(vec_col).cast("array<double>")
-    cents = (
-        emb.select(F.col(id_col), v.alias("cv"))
-        .orderBy(id_col)
-        .limit(num_clusters)
-        .collect()
-    )
-    dim = len(cents[0].cv) if cents else 0
-    mode = _resolve_carrier(num_clusters * dim, carrier)
-    if mode == "kernel":
-        return assign_centroids_kernel(
-            emb.select(F.col(id_col).alias("id"), v.alias("v")),
-            [[float(x) for x in r.cv] for r in cents],
-            vec_col="v",
-            out_col="cluster",
-            round_dp=6,
-        ).select("id", "cluster", "v")
-    if mode == "table":
-        cdf = emb.sparkSession.createDataFrame(
-            [([[float(x) for x in r.cv] for r in cents],)],
-            "__cents array<array<double>>",
-        )
-        sims = F.transform(
-            F.col("__cents"), lambda c: F.round(cosine_sim(v, c), 6)
-        )
-        src = emb.crossJoin(F.broadcast(cdf))
-    else:
-        sims = (
-            F.array(
-                *[
-                    F.round(cosine_sim(v, F.lit(r.cv).cast("array<double>")), 6)
-                    for r in cents
-                ]
-            )
-            if cents
-            # empty corpus: typed empty array keeps the argmax analyzable
-            else F.array().cast("array<double>")
-        )
-        src = emb
-    cluster = (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-    return src.select(
-        F.col(id_col).alias("id"), cluster.alias("cluster"), v.alias("v")
-    )
+    return nearest_centroids(
+        emb.select(F.col(id_col).alias("id"), v.alias("v")),
+        _sample_centroids(emb, id_col, vec_col, num_clusters, seed=None),
+        vec_col="v",
+        round_dp=6,
+    ).select("id", F.col("__centroids")[0].alias("cluster"), "v")
 
 
 def semantic_dedup(
@@ -113,7 +80,6 @@ def semantic_dedup(
     num_clusters: int = 8,
     threshold: float = 0.999,
     max_cluster: int | None = None,
-    carrier: str = "auto",
 ) -> DataFrame:
     """(id, cluster, keep): SemDeDup keep/drop decisions.
 
@@ -134,7 +100,6 @@ def semantic_dedup(
         id_col=id_col,
         vec_col=vec_col,
         num_clusters=num_clusters,
-        carrier=carrier,
     )
     pairable = assigned
     if max_cluster is not None:
@@ -174,7 +139,6 @@ def semantic_dedup_lsh(
     n_bits: int = 8,
     seed: int = 99,
     max_bucket: int | None = None,
-    carrier: str = "auto",
 ) -> DataFrame:
     """SemDeDup with the per-cluster LSH refinement the base operator's
     scale notes promise: instead of the full O(|cluster|²) in-cluster
@@ -186,8 +150,8 @@ def semantic_dedup_lsh(
     vectors scatter across 2^n_bits buckets, collapsing the pair join
     to near-linear. Planes are seeded (deterministic on any layout).
 
-    Shape: one projection pass computes every table's bucket (pure
-    codegen arithmetic); the bucket join carries IDS ONLY (vectors
+    Shape: one Arrow kernel computes every table's bucket
+    (:func:`knn.srp_buckets`); the bucket join carries IDS ONLY (vectors
     rejoin for the exact verify — the dedup.py discipline), candidate
     pairs dedup across tables before the exact cosine filter, and the
     keep rule is identical to :func:`semantic_dedup` (drop any row
@@ -197,52 +161,15 @@ def semantic_dedup_lsh(
     ``dim`` must match the embedding width (explicit, not sniffed —
     the r2 ADVICE contract for embedding ops).
     """
-    from ccgp_data_wrangling_spark.operators.knn import (
-        _resolve_carrier,
-        _seeded_planes,
-        srp_bucket,
-        srp_buckets_kernel,
-    )
-
     assigned = assign_seed_clusters(
         emb,
         id_col=id_col,
         vec_col=vec_col,
         num_clusters=num_clusters,
-        carrier=carrier,
     )
-    tables = _seeded_planes(n_tables, n_bits, dim, seed)
-    mode = _resolve_carrier(n_tables * n_bits * dim, carrier)
-    if mode == "kernel":
-        buckets = srp_buckets_kernel(
-            assigned.select("cluster", "id", "v"),
-            tables,
-            vec_col="v",
-            drop_vec=True,
-        )
-    else:
-        if mode == "table":
-            # one-row broadcast table carries every plane set: bucket
-            # arithmetic unchanged, plan stays KB-scale instead of
-            # baking n_tables*n_bits*dim doubles into generated code
-            tdf = emb.sparkSession.createDataFrame(
-                [(tables,)], "__tables array<array<array<double>>>"
-            )
-            bucket_arr = F.transform(
-                F.col("__tables"),
-                lambda planes: srp_bucket(F.col("v"), planes),
-            )
-            bucket_src = assigned.crossJoin(F.broadcast(tdf))
-        else:
-            bucket_arr = F.array(
-                *[srp_bucket(F.col("v"), planes) for planes in tables]
-            )
-            bucket_src = assigned
-        buckets = bucket_src.select(
-            "cluster",
-            "id",
-            F.posexplode(bucket_arr).alias("t", "bkt"),
-        )
+    buckets = srp_buckets(
+        assigned, _seeded_planes(n_tables, n_bits, dim, seed), vec_col="v"
+    ).select("cluster", "id", F.posexplode("__buckets").alias("t", "bkt"))
     if max_bucket is not None:
         sizes = buckets.groupBy("cluster", "t", "bkt").agg(
             F.count(F.lit(1)).alias("__n")

@@ -427,9 +427,10 @@ SELECT query_id, vec_id, cos_sim, CAST(rank AS INT) AS rank FROM (
 def ann_ivf_multiquery_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch retrieval for 10 queries at once via ivf_topk_multi —
     the persisted-IVF-layout probe path rag_retrieve_chunks and
-    ivf_topk only documented. Scale shape: centroid literals, codegen
-    corpus assignment, (query, centroid) equi-join, per-query window
-    top-k; candidate volume per query = probed-cell occupancy."""
+    ivf_topk only documented. Scale shape: one Arrow matmul kernel
+    assigns the corpus and lists each query's probes
+    (knn.nearest_centroids), (query, centroid) equi-join, per-query
+    window top-k; candidate volume per query = probed-cell occupancy."""
     from ccgp_data_wrangling_spark.operators.knn import ivf_topk_multi
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -120,8 +120,8 @@ def test_empty_input_round5_operators(spark):
 
 
 def test_empty_input_round6_operators(spark):
-    """Round-6 operators: empty embedding corpora flow through every
-    carrier path (incl. an empty centroid sample), the Hamming join
+    """Round-6 operators: empty embedding corpora flow through both
+    Arrow kernels (incl. an empty centroid sample), the Hamming join
     and pHash components yield no pairs, WARC curation yields no
     rows, and PII redaction of an empty frame stays empty."""
     from pyspark.sql import functions as F
@@ -133,8 +133,11 @@ def test_empty_input_round6_operators(spark):
         hamming_neardup_pairs,
     )
     from ccgp_data_wrangling_spark.operators.knn import (
-        assign_centroids_kernel,
+        ann_topk,
+        ivf_topk,
         ivf_topk_multi,
+        nearest_centroids,
+        srp_buckets,
     )
     from ccgp_data_wrangling_spark.operators.privacy import pii_redact
     from ccgp_data_wrangling_spark.operators.semdedup import (
@@ -151,14 +154,11 @@ def test_empty_input_round6_operators(spark):
     assert semantic_dedup(emb).collect() == []
     assert semantic_dedup_lsh(emb, dim=4).collect() == []
     assert ivf_topk_multi(emb, q, 3).collect() == []
-    assert (
-        assign_centroids_kernel(
-            emb.select("vec_id", F.col("embedding").alias("__v")),
-            [],
-            vec_col="__v",
-        ).collect()
-        == []
-    )
+    assert ivf_topk(emb, [1.0, 0.0, 0.0, 0.0], 3).collect() == []
+    assert ann_topk(emb, [1.0, 0.0, 0.0, 0.0], 3).collect() == []
+    assert nearest_centroids(emb, [], vec_col="embedding").collect() == []
+    assert nearest_centroids(emb, [[1.0, 0.0]], 2, vec_col="embedding").collect() == []
+    assert srp_buckets(emb, [[[1.0, 0.0]]], vec_col="embedding").collect() == []
 
     fp = spark.createDataFrame([], "id long, bits long")
     pairs = hamming_neardup_pairs(fp, "id", "bits")

@@ -173,43 +173,63 @@ def test_ann_natural_corpus_recall(spark):
     assert ivf_recall >= 0.5
 
 
-def test_ann_topk_carriers_agree(spark):
-    """ann_topk returns the identical ranked rows whichever carrier
-    ships the plane set (literal Columns, one-row broadcast table, or
-    the Arrow matmul kernel) — the registered defaults (8x12x64 =
-    6144 doubles) auto-select the kernel, so pin it against the
-    literal reference the oracle was built on."""
+def _ref_ann_topk(rows, qv, k, tables):
+    """Pure-Python ann_topk: candidates share a _py_bucket with the
+    query in some table (a null or wrong-length vector is in bucket 0
+    of every table), exact cosine rounded to 4 dp (null for such a
+    vector), ranked by cosine descending, nulls last, then id."""
+    from ccgp_data_wrangling_spark.operators.knn import _py_bucket, _py_cos
+
+    q_buckets = [_py_bucket(qv, t) for t in tables]
+    scored = []
+    for i, v in rows:
+        ok = v is not None and len(v) == len(qv)
+        buckets = [_py_bucket(v, t) if ok else 0 for t in tables]
+        if any(b == q for b, q in zip(buckets, q_buckets)):
+            scored.append((i, round(_py_cos(v, qv), 4) if ok else None))
+    scored.sort(key=lambda r: (r[1] is None, -(r[1] or 0.0), r[0]))
+    return [(i, c, rank) for rank, (i, c) in enumerate(scored[:k], 1)]
+
+
+def _assert_rows_match(got, want):
+    """Same ids and ranks; cosines equal up to one 4-dp rounding step
+    (Spark rounds half-up, Python half-even)."""
+    assert [(r[0], r[2]) for r in got] == [(r[0], r[2]) for r in want]
+    for g, w in zip(got, want):
+        assert (g[1] is None) == (w[1] is None)
+        if w[1] is not None:
+            assert g[1] == pytest.approx(w[1], abs=1.01e-4)
+
+
+def test_ann_topk_matches_python_reference(spark):
+    """ann_topk (registered defaults, 8 tables x 12 bits at width 64)
+    returns the reference's ranked rows on the natural corpus plus a
+    planted copy of the query, which must rank first."""
     from ccgp_data_wrangling_spark.catalog import load_table
-    from ccgp_data_wrangling_spark.operators.knn import ann_topk
+    from ccgp_data_wrangling_spark.operators.knn import _seeded_planes, ann_topk
     from tests.conftest import SF_SMOKE
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     qrow = emb.where(F.col("vec_id") == 0).select("embedding").head()
     qv = [float(x) for x in qrow[0]]
-    corpus = emb.where(F.col("vec_id") != 0)
+    rows = [
+        (r.vec_id, [float(x) for x in r.embedding])
+        for r in emb.where(F.col("vec_id") != 0).collect()
+    ] + [(10**6, list(qv))]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def rows(carrier):
-        return sorted(
-            map(
-                tuple,
-                ann_topk(
-                    corpus, qv, 5, n_tables=8, n_bits=12, carrier=carrier
-                ).collect(),
-            )
-        )
-
-    ref = rows("literal")
-    assert ref  # natural corpus: >=1 random bucket collision survives
-    assert rows("kernel") == ref
-    assert rows("table") == ref
-    assert rows("auto") == ref  # 6144 doubles -> kernel
+    got = [tuple(r) for r in ann_topk(corpus, qv, 5, n_tables=8, n_bits=12).collect()]
+    want = _ref_ann_topk(rows, qv, 5, _seeded_planes(8, 12, len(qv), 42))
+    assert len(want) > 1  # >= 1 random bucket collision besides the copy
+    assert want[0][:2] == (10**6, 1.0)
+    _assert_rows_match(got, want)
 
 
-def test_ann_topk_carriers_agree_on_null_and_ragged_vectors(spark):
-    """Null, empty, short and long vectors: the Column carriers read
-    their dot products as null, so every bit is 0 and each lands in
-    bucket 0 of every table, kept only when the query hits a bucket 0.
-    The kernel must keep and drop the same rows, not fail the task."""
+def test_ann_topk_null_and_ragged_vectors_match_reference(spark):
+    """Null, empty, short and long vectors land in bucket 0 of every
+    table, so they are kept only when the query hits a bucket 0, with
+    a null cosine at the tail of the ranking; the kernel must keep and
+    drop the same rows as the reference, not fail the task."""
     import random
 
     from ccgp_data_wrangling_spark.operators.knn import (
@@ -231,19 +251,94 @@ def test_ann_topk_carriers_agree_on_null_and_ragged_vectors(spark):
     picks = [queries[hits_zero.index(True)], queries[hits_zero.index(False)]]
 
     for qv, keeps_bad in zip(picks, (True, False)):
-        outs = {
-            c: sorted(
-                map(
-                    tuple,
-                    ann_topk(
-                        emb, qv, 40, n_tables=n_tables, n_bits=n_bits, carrier=c
-                    ).collect(),
-                )
-            )
-            for c in ("literal", "table", "kernel")
-        }
-        assert outs["kernel"] == outs["literal"] == outs["table"]
-        assert any(r[0] >= 90 for r in outs["literal"]) == keeps_bad
+        got = [
+            tuple(r)
+            for r in ann_topk(
+                emb, qv, 40, n_tables=n_tables, n_bits=n_bits
+            ).collect()
+        ]
+        want = _ref_ann_topk(rows, qv, 40, tables)
+        _assert_rows_match(got, want)
+        assert any(r[0] >= 90 for r in got) == keeps_bad
+
+
+_small_vec = st.lists(st.integers(-3, 3), min_size=1, max_size=8)
+
+
+@st.composite
+def _kernel_case(draw):
+    """Small-integer planes, centroids and vectors, so numpy's matmul
+    and the sequential Python sums are exact and a dot of exactly 0 is
+    common; duplicate centroids pin the lowest-index tie-break."""
+    dim = draw(st.integers(1, 8))
+    n_bits = draw(st.integers(1, 4))
+    vec = st.lists(st.integers(-3, 3), min_size=dim, max_size=dim)
+    tables = draw(
+        st.lists(
+            st.lists(vec, min_size=n_bits, max_size=n_bits),
+            min_size=1,
+            max_size=3,
+        )
+    )
+    cents = draw(st.lists(vec.filter(any), min_size=1, max_size=5))
+    cents += draw(st.lists(st.sampled_from(cents), max_size=3))
+    k = draw(st.integers(1, len(cents)))
+    vecs = draw(
+        st.lists(
+            st.one_of(vec, st.none(), st.just([]), _small_vec),
+            min_size=1,
+            max_size=12,
+        )
+    )
+    return dim, tables, cents, k, vecs
+
+
+@given(_kernel_case())
+@settings(SETTINGS, max_examples=20)
+def test_embedding_kernels_match_python_reference(spark, case):
+    """srp_buckets equals _py_bucket per table (bucket 0 everywhere
+    for a null or wrong-length vector), and nearest_centroids returns
+    k centroids whose exact cosines are the k largest, nearest first,
+    with an identical centroid of lower index always ahead (no
+    centroid for a null or wrong-length vector)."""
+    from fractions import Fraction
+
+    from ccgp_data_wrangling_spark.operators.knn import (
+        _py_bucket,
+        nearest_centroids,
+        srp_buckets,
+    )
+
+    dim, tables, cents, k, vecs = case
+    df = spark.createDataFrame(
+        [(i, v and [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "i int, v array<double>",
+    ).repartition(2)
+    out = {
+        r["i"]: (r["__buckets"], r["__centroids"])
+        for r in nearest_centroids(
+            srp_buckets(df, tables, vec_col="v"), cents, k, vec_col="v"
+        ).collect()
+    }
+    assert sorted(out) == list(range(len(vecs)))
+
+    def cos_key(v, c):
+        # exact, order-preserving stand-in for cos(v, c): sign(dot) *
+        # dot^2 / |c|^2 (|v| is common to every centroid); 0 for v = 0
+        dot = sum(x * y for x, y in zip(v, c))
+        return Fraction(dot * abs(dot), sum(y * y for y in c))
+
+    for i, v in enumerate(vecs):
+        buckets, nearest = out[i]
+        if v is None or len(v) != dim:
+            assert buckets == [0] * len(tables) and nearest is None
+            continue
+        assert buckets == [_py_bucket(v, t) for t in tables]
+        keys = sorted((cos_key(v, c) for c in cents), reverse=True)
+        assert [cos_key(v, cents[j]) for j in nearest] == keys[:k]
+        for pos, j in enumerate(nearest):
+            twins = [i2 for i2 in range(j) if cents[i2] == cents[j]]
+            assert all(t in nearest[:pos] for t in twins)
 
 
 # ---------------------------------------------------------------------------
@@ -365,15 +460,13 @@ def test_ivf_multiquery_planted_probe_inclusion(spark):
     the near-copy's assigned centroid lands in its query's probe set
     for the fixed (seed=42, n_centroids=32, n_probe=8) parameters —
     an empirical fact of this corpus, not a structural guarantee.
-    Assert it with the plan's own JVM arithmetic (same _assign_centroid
-    / probe-sort expressions ivf_topk_multi compiles), so any future
+    Assert it with the kernel calls ivf_topk_multi makes (same
+    nearest_centroids assignment and probe lists), so any future
     seed/parameter change that breaks the oracle fails HERE first."""
     from ccgp_data_wrangling_spark.catalog import load_table
     from ccgp_data_wrangling_spark.operators.knn import (
-        _assign_centroid,
-        _centroid_lit,
         _sample_centroids,
-        cosine_sim,
+        nearest_centroids,
     )
 
     PLANT_BASE = 2_000_000  # queries/llm_scale.py _PLANT_BASE
@@ -400,34 +493,17 @@ def test_ivf_multiquery_planted_probe_inclusion(spark):
         .unionByName(planted.select("vec_id", "embedding"))
     )
     centroids = _sample_centroids(corpus, "vec_id", "embedding", 32, 42)
-    cent_lit = _centroid_lit(centroids)
 
-    qv = F.col("qvec")
-    probe_arr = F.transform(
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    cent_lit,
-                    lambda c: F.struct(
-                        (-cosine_sim(qv, c["cv"])).alias("nsim"),
-                        c["idx"].alias("idx"),
-                    ),
-                )
-            ),
-            1,
-            8,
-        ),
-        lambda p: p["idx"],
+    probes = nearest_centroids(qdf, centroids, 8, vec_col="qvec").select(
+        "query_id", F.col("__centroids").alias("probes")
     )
-    probes = qdf.select("query_id", probe_arr.alias("probes"))
-    assigned = planted.select(
-        "query_id",
-        "vec_id",
-        _assign_centroid(F.col("embedding"), cent_lit).alias("centroid"),
+    assigned = nearest_centroids(planted, centroids, vec_col="embedding").select(
+        "query_id", "vec_id", F.col("__centroids")[0].alias("centroid")
     )
     rows = assigned.join(probes, "query_id").collect()
     assert len(rows) == 20
     for r in rows:
+        assert len(r.probes) == 8
         assert r.centroid in r.probes, (
             f"planted vec {r.vec_id} assigned to centroid {r.centroid} "
             f"outside query {r.query_id}'s probe set {r.probes}"

@@ -151,60 +151,114 @@ def test_max_cluster_guard_skips_degenerate_cluster(spark):
     assert uncapped[3] is False and uncapped[7] is False
 
 
-def test_all_three_carriers_identical_decisions(spark):
-    """literal / broadcast-table / Arrow-kernel carriers must produce
-    IDENTICAL clusters and keep decisions (same rounded-argmax, same
-    tie-breaks) — on semdedup, semdedup-LSH, and multi-query IVF."""
-    import math
+def _ref_semdedup(rows, centroids, threshold, pair_ok=lambda a, b: True):
+    """Pure-Python SemDeDup: cluster = argmax of cosine rounded to 6 dp
+    (lowest index on ties, null for a null or wrong-length vector);
+    drop b if a same-cluster a < b that ``pair_ok`` admits has rounded
+    cosine >= threshold."""
+    from ccgp_data_wrangling_spark.operators.knn import _py_cos
+
+    dim = len(centroids[0])
+    cluster = {}
+    for i, v in rows:
+        if v is None or len(v) != dim:
+            cluster[i] = None
+            continue
+        sims = [round(_py_cos(v, c), 6) for c in centroids]
+        cluster[i] = sims.index(max(sims))
+    vec = dict(rows)
+    dropped = {
+        b
+        for a, _ in rows
+        for b, _ in rows
+        if a < b
+        and cluster[a] is not None
+        and cluster[a] == cluster[b]
+        and pair_ok(a, b)
+        and round(_py_cos(vec[a], vec[b]), 6) >= threshold
+    }
+    return sorted((i, cluster[i], i not in dropped) for i, _ in rows)
+
+
+def test_kernel_decisions_match_python_reference(spark):
+    """semantic_dedup, semantic_dedup_lsh and ivf_topk_multi give the
+    pure-Python reference's clusters, keep decisions and ranked rows
+    (rounded-argmax and lowest-index tie-breaks, _py_bucket buckets):
+    planted near-copies are dropped, and a null or wrong-length vector
+    gets a null cluster, is kept, and is never retrieved."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from ccgp_data_wrangling_spark.operators.knn import ivf_topk_multi
+    from ccgp_data_wrangling_spark.operators.knn import (
+        _py_bucket,
+        _py_cos,
+        _sample_centroids,
+        _seeded_planes,
+        ivf_topk_multi,
+    )
     from ccgp_data_wrangling_spark.operators.semdedup import (
         semantic_dedup,
         semantic_dedup_lsh,
     )
 
     rng = random.Random(5)
-    rows = []
-    for i in range(80):
-        v = [rng.gauss(0, 1) for _ in range(16)]
-        rows.append((i, v))
+    rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(80)]
     # planted near-copies of ids 0-4
     for i in range(5):
         v = list(rows[i][1])
         v[0] += 0.001
         rows.append((500 + i, v))
+    rows += [(900, None), (901, [1.0] * 15), (902, [])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    seeds = [v for _, v in rows[:4]]
 
-    outs = {}
-    for carrier in ("literal", "table", "kernel"):
-        sd = sorted(
-            (r.id, r.cluster, r.keep)
-            for r in semantic_dedup(
-                emb, num_clusters=4, threshold=0.999, carrier=carrier
-            ).collect()
-        )
-        lsh = sorted(
-            (r.id, r.cluster, r.keep)
-            for r in semantic_dedup_lsh(
-                emb, dim=16, num_clusters=4, threshold=0.999,
-                n_tables=2, n_bits=6, carrier=carrier,
-            ).collect()
-        )
-        q = emb.where(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qvec"),
-        )
-        ivf = sorted(
-            (r.query_id, r.vec_id, r.cos_sim, r.rank)
-            for r in ivf_topk_multi(
-                emb, q, 5, n_centroids=6, n_probe=3, carrier=carrier
-            ).collect()
-        )
-        outs[carrier] = (sd, lsh, ivf)
-        assert any(not k for _, _, k in sd)  # planted copies dropped
+    sd = sorted(
+        (r.id, r.cluster, r.keep)
+        for r in semantic_dedup(emb, num_clusters=4, threshold=0.999).collect()
+    )
+    assert sd == _ref_semdedup(rows, seeds, 0.999)
+    assert {i for i, _, keep in sd if not keep} == {500, 501, 502, 503, 504}
+    assert [r for r in sd if r[0] >= 900] == [
+        (900, None, True), (901, None, True), (902, None, True)
+    ]
 
-    assert outs["literal"] == outs["table"] == outs["kernel"]
-    _ = math
+    tables = _seeded_planes(2, 6, 16, 99)
+    bucket = {
+        i: [_py_bucket(v, t) if v is not None and len(v) == 16 else 0 for t in tables]
+        for i, v in rows
+    }
+    lsh = sorted(
+        (r.id, r.cluster, r.keep)
+        for r in semantic_dedup_lsh(
+            emb, dim=16, num_clusters=4, threshold=0.999, n_tables=2, n_bits=6
+        ).collect()
+    )
+    assert lsh == _ref_semdedup(
+        rows,
+        seeds,
+        0.999,
+        lambda a, b: any(x == y for x, y in zip(bucket[a], bucket[b])),
+    )
+
+    q = emb.where((F.col("vec_id") < 3) | (F.col("vec_id") >= 900)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    ivf = sorted(
+        (r.query_id, r.vec_id, r.cos_sim, r.rank)
+        for r in ivf_topk_multi(emb, q, 5, n_centroids=6, n_probe=3).collect()
+    )
+    cents = _sample_centroids(emb, "vec_id", "embedding", 6, 42)
+
+    def nearest(v):
+        return sorted(range(len(cents)), key=lambda c: (-_py_cos(v, cents[c]), c))
+
+    valid = [(i, v) for i, v in rows if v is not None and len(v) == 16]
+    cell = {i: nearest(v)[0] for i, v in valid}
+    want = []
+    for qid, qv in valid[:3]:
+        probes = nearest(qv)[:3]
+        scored = sorted(
+            (-round(_py_cos(v, qv), 4), i) for i, v in valid if cell[i] in probes
+        )
+        want += [(qid, i, -c, r) for r, (c, i) in enumerate(scored[:5], 1)]
+    assert ivf == sorted(want)
+    assert {(qid, 500 + qid) for qid in range(3)} <= {(r[0], r[1]) for r in ivf}
