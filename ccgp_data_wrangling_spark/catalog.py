@@ -188,12 +188,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in BENCH_TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every benchmark table as a temp view for spark.sql."""
-    for t in BENCH_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 # ---------------------------------------------------------------------------
 # Domain schemas (SURVEY.md §1, FIXTURES.md)
 # ---------------------------------------------------------------------------

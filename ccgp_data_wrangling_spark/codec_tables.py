@@ -104,11 +104,6 @@ def mp3_synthesis_window():
     return load_codec_tables().get("mp3_window")
 
 
-def t81_qm_table():
-    """The loaded QM-coder state table rows, or None."""
-    return load_codec_tables().get("t81_qm")
-
-
 # ---------------------------------------------------------------------------
 # Validation
 # ---------------------------------------------------------------------------

@@ -74,7 +74,11 @@ def margin_mine(
     cos_s = F.round(cosine_sim(F.col("va"), F.col("vb")) * 10000, 0).cast(
         "long"
     )
-    scored = pairs.select("a_id", "b_id", cos_s.alias("cos_s"))
+    # a null cosine (a null, ragged or all-zero vector) is no pair: it
+    # would otherwise win every min_by argmax below and hide real pairs
+    scored = pairs.select("a_id", "b_id", cos_s.alias("cos_s")).where(
+        F.col("cos_s").isNotNull()
+    )
 
     wa = Window.partitionBy("a_id").orderBy(
         F.col("cos_s").desc(), F.col("b_id")
@@ -101,17 +105,20 @@ def margin_mine(
         .withColumn(
             "margin",
             F.round(
-                F.col("cos_s")
-                / (
+                F.try_divide(
+                    F.col("cos_s"),
                     0.5
                     * (
                         F.col("sum_a") / F.col("n_a")
                         + F.col("sum_b") / F.col("n_b")
-                    )
+                    ),
                 ),
                 6,
             ),
         )
+        # neighbourhood means that cancel (e.g. orthogonal vectors)
+        # leave no margin, and so no pair
+        .where(F.col("margin").isNotNull())
         .select("a_id", "b_id", "margin")
     )
     # mutual best by margin: two argmax aggregates (map-side

@@ -126,7 +126,6 @@ def minhash_neardup_pairs(
     only controls recall), so results are deterministic and
     order-independent.
     """
-    rows = n_hashes // bands
     # persist the signature table: HOF lambdas are interpreted (not
     # codegen'd), and without a materialization boundary Catalyst's
     # projection collapse would INLINE the signature expression into
@@ -136,30 +135,12 @@ def minhash_neardup_pairs(
     if scope is None:
         scope = active_scope("minhash_neardup_pairs")
     base = scope.persist(
-        df.select(
-            F.col(id_col).alias("id"),
-            shingle_hashes(F.col(text_col), shingle_k).alias("sh"),
-        ).withColumn("sig", minhash_signature(F.col("sh"), n_hashes, seed))
+        minhash_index(
+            df, id_col, text_col, n_hashes=n_hashes, shingle_k=shingle_k, seed=seed
+        )
     )
-
-    band_hashes = F.array(
-        *[F.hash(F.slice(F.col("sig"), b * rows + 1, rows)) for b in range(bands)]
-    )
-    # banding carries IDS ONLY — the sh arrays are re-attached after
-    # candidate dedup so wide rows never ride the bucket/dedup shuffles
-    banded = base.select(
-        "id",
-        F.posexplode(band_hashes).alias("band_idx", "band_hash"),
-    )
-
     # guard: drop pathological buckets (skew control at scale)
-    bucket_sizes = banded.groupBy("band_idx", "band_hash").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    banded = banded.join(
-        bucket_sizes.where(F.col("n") <= max_bucket).select("band_idx", "band_hash"),
-        ["band_idx", "band_hash"],
-    )
+    banded = _cap_buckets(_band_table(base, n_hashes, bands), max_bucket)
 
     left = banded.select("band_idx", "band_hash", F.col("id").alias("id_a"))
     right = banded.select("band_idx", "band_hash", F.col("id").alias("id_b"))
@@ -169,18 +150,38 @@ def minhash_neardup_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
+    return _jaccard_verify(cands, base, threshold)
 
-    sh_a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    verify = cands.join(sh_a, "id_a").join(sh_b, "id_b")
 
+def _jaccard_verify(cands: DataFrame, sigs: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` for the candidate pairs whose exact
+    shingle-set Jaccard is ≥ ``threshold`` (reported to 4 dp).
+    Banding carries IDS ONLY: the ``sh`` arrays of ``sigs`` (a
+    :func:`minhash_index` frame) are attached after candidate dedup,
+    so wide rows never ride the bucket/dedup shuffles."""
+    sh_a = sigs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sh_b = sigs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     return (
-        verify.withColumn("jaccard", inter.cast("double") / union)
+        cands.join(sh_a, "id_a")
+        .join(sh_b, "id_b")
+        .withColumn("jaccard", inter.cast("double") / union)
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
     )
+
+
+def _cap_buckets(banded: DataFrame, max_n: int | None) -> DataFrame:
+    """Drop the rows of an ``(id, <bucket key>...)`` band table whose
+    bucket holds more than ``max_n`` ids (None keeps every bucket):
+    the hot-bucket cap every banded dedup carries, which trades
+    recall, never correctness."""
+    if max_n is None:
+        return banded
+    keys = [c for c in banded.columns if c != "id"]
+    sizes = banded.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+    return banded.join(sizes.where(F.col("__n") <= max_n).drop("__n"), keys)
 
 
 # ---------------------------------------------------------------------------
@@ -410,7 +411,9 @@ def embedding_neardup_pairs(
     Every table's bucket comes from one Arrow matmul kernel
     (:func:`knn.srp_buckets`). A null or wrong-length vector lands in
     bucket 0 of every table and goes through the same exact verify; a
-    null vector's cosine is null, so it never pairs.
+    null or all-zero vector's cosine is null, so it never pairs.
+    Without ``dim`` the width is sniffed from the first non-null
+    vector; an input with none returns no pairs.
     """
     from ccgp_data_wrangling_spark.operators.knn import (
         _seeded_planes,
@@ -423,7 +426,14 @@ def embedding_neardup_pairs(
         # the array element count isn't in the schema; sniffing it costs
         # one single-row job and makes the operator eager — callers that
         # know their embedding width should pass ``dim`` explicitly
-        dim = len(df.select(vec_col).head()[0])
+        first = df.select(vec_col).where(F.col(vec_col).isNotNull()).head()
+        if first is None:  # no vector at all: no pair
+            return df.select(
+                F.col(id_col).alias("id_a"),
+                F.col(id_col).alias("id_b"),
+                F.lit(None).cast("double").alias("cos_sim"),
+            ).where(F.lit(False))
+        dim = len(first[0])
     if n_tables is None or n_bits is None:
         auto_tables, auto_bits = srp_adaptive_params(
             df.select(id_col).count(), threshold
@@ -562,15 +572,7 @@ def minhash_neardup_incremental(
     old_bands = _band_table(old_sig, n_hashes, bands)
 
     # skew guard on the index side: drop buckets that would fan out
-    bucket_sizes = old_bands.groupBy("band_idx", "band_hash").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    old_bands = old_bands.join(
-        bucket_sizes.where(F.col("n") <= max_bucket).select(
-            "band_idx", "band_hash"
-        ),
-        ["band_idx", "band_hash"],
-    )
+    old_bands = _cap_buckets(old_bands, max_bucket)
 
     cands = (
         new_bands.select(
@@ -898,6 +900,34 @@ def hamming_neardup_pairs(
     Raises when ``max_hamming >= n_bands`` — banding completeness
     would be lost silently otherwise.
     """
+    n_bands, band_width = _hamming_layout(max_hamming, n_bands, band_width)
+    src = df.select(F.col(id_col).alias("id"), F.col(bits_col).alias("fp"))
+    bands = _cap_buckets(_hamming_bands(src, n_bands, band_width), max_band)
+    cand = (
+        bands.select("band", "bval", F.col("id").alias("id_a"))
+        .join(
+            bands.select("band", "bval", F.col("id").alias("id_b")),
+            ["band", "bval"],
+        )
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    return _hamming_verify(cand, src, max_hamming)
+
+
+def _hamming_layout(
+    max_hamming: int, n_bands: int | None = None, band_width: int | None = None
+) -> tuple[int, int]:
+    """``(n_bands, band_width)`` of a complete Hamming banding.
+
+    Without an explicit layout: the minimum complete band count
+    (``max_hamming + 1``) at the maximum width (``64 // n_bands``), see
+    :func:`hamming_neardup_pairs`. Raises ``ValueError`` when only one
+    of ``n_bands``/``band_width`` is given, when ``max_hamming >=
+    n_bands`` (banding completeness would be lost silently), or when
+    the bands run past bit 63.
+    """
     if (n_bands is None) != (band_width is None):
         raise ValueError("give both n_bands and band_width, or neither")
     if n_bands is None:
@@ -914,38 +944,30 @@ def hamming_neardup_pairs(
             f"n_bands*band_width = {n_bands * band_width} exceeds the "
             "64-bit fingerprint width — bands past bit 63 are degenerate"
         )
+    return n_bands, band_width
+
+
+def _hamming_bands(fps: DataFrame, n_bands: int, band_width: int) -> DataFrame:
+    """Explode an ``(id, fp)`` frame into ``(id, band, bval)``:
+    ``n_bands`` contiguous ``band_width``-bit bands, low bits first."""
     mask = (1 << band_width) - 1
-    src = df.select(F.col(id_col).alias("id"), F.col(bits_col).alias("bits"))
     band_vals = F.array(
         *[
-            F.shiftright(F.col("bits"), i * band_width).bitwiseAND(F.lit(mask))
+            F.shiftright(F.col("fp"), i * band_width).bitwiseAND(F.lit(mask))
             for i in range(n_bands)
         ]
     )
-    bands = src.select(
-        "id", F.posexplode(band_vals).alias("band", "bval")
-    )
-    if max_band is not None:
-        sizes = bands.groupBy("band", "bval").agg(
-            F.count(F.lit(1)).alias("__n")
-        )
-        bands = bands.join(
-            sizes.where(F.col("__n") <= max_band).drop("__n"), ["band", "bval"]
-        )
-    cand = (
-        bands.select("band", "bval", F.col("id").alias("id_a"))
-        .join(
-            bands.select("band", "bval", F.col("id").alias("id_b")),
-            ["band", "bval"],
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    a = src.select(F.col("id").alias("id_a"), F.col("bits").alias("__ba"))
-    b = src.select(F.col("id").alias("id_b"), F.col("bits").alias("__bb"))
+    return fps.select("id", F.posexplode(band_vals).alias("band", "bval"))
+
+
+def _hamming_verify(cands: DataFrame, fps: DataFrame, max_hamming: int) -> DataFrame:
+    """``(id_a, id_b, hamming)`` for the candidate pairs within
+    ``max_hamming`` bits: one ``bit_count(a ^ b)`` per pair, with the
+    fingerprints of the ``(id, fp)`` frame ``fps`` attached by id."""
+    a = fps.select(F.col("id").alias("id_a"), F.col("fp").alias("__ba"))
+    b = fps.select(F.col("id").alias("id_b"), F.col("fp").alias("__bb"))
     return (
-        cand.join(a, "id_a")
+        cands.join(a, "id_a")
         .join(b, "id_b")
         .select(
             "id_a",

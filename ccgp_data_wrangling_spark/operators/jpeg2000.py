@@ -755,14 +755,6 @@ class _PkBitReader:
 # ---------------------------------------------------------------------------
 
 
-def _mirror(i: int, n: int) -> int:
-    if n == 1:
-        return 0
-    p = 2 * (n - 1)
-    i = abs(i) % p
-    return i if i < n else p - i
-
-
 def _nsum_rows(y: np.ndarray) -> np.ndarray:
     """Per-row mirrored neighbour sums: out[:, k] =
     y[:, mirror(k-1)] + y[:, mirror(k+1)] — the ±1-tap whole-sample
@@ -800,14 +792,6 @@ def _isr_rows(y: np.ndarray) -> np.ndarray:
     ns = _nsum_rows(x)
     x[:, 1::2] += ns[:, 1::2] >> 1
     return x
-
-
-def _fsd_1d(x: np.ndarray) -> np.ndarray:
-    return _fsd_rows(x[None, :])[0]
-
-
-def _isr_1d(y: np.ndarray) -> np.ndarray:
-    return _isr_rows(y[None, :])[0]
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,8 @@ seeded — deterministic across runs.
 
 A vector that is null or has the wrong length never fails a task:
 it lands in bucket 0 of every SRP table and gets no centroid, so IVF
-never probes it and SemDeDup never pairs it.
+never probes it and SemDeDup never pairs it. An all-zero vector has a
+null cosine, like a null one.
 
 Scale notes: corpus signatures are computed in ONE narrow scan (all
 tables at once), no shuffle; the probe filter prunes before the
@@ -127,12 +128,16 @@ def _py_cos(a: list[float], b: list[float]) -> float:
 
 
 def cosine_sim(a: Column, b: Column) -> Column:
+    """Cosine of two array columns; null when either is null or has a
+    zero norm (``try_divide``: under ANSI mode a plain ``/`` would fail
+    the job on one all-zero vector). A null cosine ranks after every
+    real one and never passes a threshold."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
+    return F.try_divide(dot, na * nb)
 
 
 def _ranked_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:

@@ -39,6 +39,7 @@ import os
 import re
 import shutil
 import uuid
+from collections.abc import Callable
 from functools import reduce
 
 _ASIDE_RE = re.compile(r"\.old-[0-9a-f]{32}$")
@@ -75,6 +76,24 @@ class ParquetTable:
         when ``data`` is a schema (a StructType or DDL string), as an
         empty table of that schema (see :func:`empty_frame`)."""
         self._frame(data).write.mode("overwrite").parquet(self.path)
+
+    def exists(self) -> bool:
+        return os.path.isdir(self.path)
+
+    def fold(
+        self, part: DataFrame, merge: Callable[[DataFrame, DataFrame], DataFrame]
+    ) -> None:
+        """Fold ``part`` into the table: create the table from ``part``
+        when it is absent, otherwise swap in ``merge(table, part)``.
+
+        The streaming states' one write path: ``merge`` reads the live
+        table, so the swap materializes to a tmp dir first (see
+        :meth:`_swap_in`) rather than overwriting in place.
+        """
+        if self.exists():
+            self._swap_in(merge(self.read(), part))
+        else:
+            self.init(part)
 
     def _frame(self, data: DataFrame | T.StructType | str) -> DataFrame:
         if isinstance(data, DataFrame):

@@ -400,7 +400,7 @@ FROM events WHERE event_type = 'click'
 
 @register("t3_stream_merge_availablenow", _T3_SQL)
 def t3_stream_merge_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ccgp_data_wrangling_spark.streaming.incremental import merge_stream
+    from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
@@ -415,14 +415,14 @@ def t3_stream_merge_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_id long, user_id long, event_type string, value double"
             ).parquet(src_dir)
         )
-        q = merge_stream(
+        q = fold_stream(
             stream,
-            tbl,
-            checkpoint_dir=os.path.join(tmp, "ckpt"),
-            mode="insert_only",
-            transform=lambda b: b.where(F.col("event_type") == "click").select(
-                "event_id", "user_id", F.round("value", 2).alias("value")
+            lambda b: tbl.insert_only(
+                b.where(F.col("event_type") == "click").select(
+                    "event_id", "user_id", F.round("value", 2).alias("value")
+                )
             ),
+            checkpoint_dir=os.path.join(tmp, "ckpt"),
         )
         q.awaitTermination()
 

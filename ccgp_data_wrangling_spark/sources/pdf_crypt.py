@@ -180,12 +180,6 @@ def _expand_key(key: bytes) -> list[list[int]]:
     return w
 
 
-def _add_round_key(state: list[int], w: list[list[int]], rnd: int) -> None:
-    for c in range(4):
-        for r in range(4):
-            state[4 * c + r] ^= w[4 * rnd + c][r]
-
-
 # 32-bit T-tables (SubBytes + ShiftRows + MixColumns folded into four
 # lookups per column) — the classic software formulation from the
 # FIPS-197 matrix rows (2,1,1,3) rotated; built at import from the

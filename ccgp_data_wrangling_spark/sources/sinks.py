@@ -5,7 +5,8 @@
   NCBI submission are ONE file by contract, so the writer coalesces.
   For big result sets use ``write_partitioned`` instead — the
   single-file contract is a report-sink property, not an engine limit.
-* K3 append sink — ``update_gsheet.py:25``: plain append write.
+* K3 append sink — ``update_gsheet.py:25``: a plain
+  ``df.write.mode("append").parquet(path)``, which needs no wrapper.
 * K6 text/log sink — ``update_reads_by_lane.py:179-341``: line
   reports.
 * K5 Google-Sheet export — driver-side shim over a collected (small)
@@ -42,11 +43,6 @@ def write_single_tsv(df: DataFrame, path: str, *, sep: str = "\t") -> None:
     part = glob.glob(os.path.join(tmp, "part-*"))[0]
     os.replace(part, path)
     shutil.rmtree(tmp, ignore_errors=True)
-
-
-def append_rows(df: DataFrame, path: str) -> None:
-    """K3: append sink (snapshot/audit tables, update_gsheet.py:25)."""
-    df.write.mode("append").parquet(path)
 
 
 def write_text_report(lines: DataFrame, path: str) -> None:

@@ -2,7 +2,7 @@
 
 from ccgp_data_wrangling_spark.streaming.incremental import (
     LedgerIngest,
-    merge_stream,
+    fold_stream,
 )
 
-__all__ = ["LedgerIngest", "merge_stream"]
+__all__ = ["LedgerIngest", "fold_stream"]

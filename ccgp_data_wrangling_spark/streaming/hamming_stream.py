@@ -1,17 +1,21 @@
 """Incremental Hamming near-dup over bit fingerprints — the streaming
 twin of ``dedup.hamming_neardup_pairs`` and the image-side companion
-of ``neardup_stream`` (MinHash): new fingerprints (pHash of freshly
-crawled images, audio fingerprints, simhashes) fold into a persisted
-state, and each batch discovers exactly the near-dup pairs that
-involve at least one NEW fingerprint.
+of the MinHash state (streaming/neardup_stream.py): new fingerprints
+(pHash of freshly crawled images, audio fingerprints, simhashes) fold
+into a persisted state, and each batch discovers exactly the near-dup
+pairs that involve at least one NEW fingerprint.
 
-Join discipline per batch: candidates = bands(delta) ⨝
-bands(state ∪ delta) — pigeonhole-complete for
-``max_hamming < n_bands`` like the batch operator, delta-sized on the
-left, never state × state. Verify is one ``bit_count(xor)`` per
-candidate. Replay-safe: ids already in state are dropped before
-folding, so re-processing a batch is a no-op (the KMV-class
-idempotency the streaming layer standardizes on).
+Join discipline per batch (the shared
+:class:`~.neardup_stream.BandedDeltaState` fold): candidates =
+bands(delta) ⨝ bands(state ∪ delta) — pigeonhole-complete for
+``max_hamming < n_bands`` like the batch operator, whose band layout,
+bands and verify it reuses; delta-sized on the left, never state ×
+state. Verify is one ``bit_count(xor)`` per candidate. Replay-safe:
+ids already in state are dropped before folding, so re-processing a
+batch is a no-op (the KMV-class idempotency the streaming layer
+standardizes on). Drive it with
+``streaming.incremental.fold_stream(stream, state.fold,
+checkpoint_dir=...)``.
 
 State = one (id, fingerprint) row per document ever seen — 16 bytes
 each, the minimum any incremental dedup can keep — plus the
@@ -20,18 +24,27 @@ append-only discovered-pairs ledger.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ccgp_data_wrangling_spark.operators.merge import ParquetTable
+from ccgp_data_wrangling_spark.operators.dedup import (
+    _hamming_bands,
+    _hamming_layout,
+    _hamming_verify,
+)
+from ccgp_data_wrangling_spark.streaming.neardup_stream import BandedDeltaState
 
-__all__ = ["HammingDedupState", "hamming_neardup_stream"]
+__all__ = ["HammingDedupState"]
 
 
-class HammingDedupState:
-    """Persisted fingerprint state + discovered-pairs ledger."""
+class HammingDedupState(BandedDeltaState):
+    """Persisted ``(id, fp)`` fingerprint state + discovered-pairs
+    ledger ``(id_a, id_b, hamming)``. The band layout is derived and
+    validated as in ``dedup.hamming_neardup_pairs``; ``max_band`` is
+    its hot-bucket cap."""
+
+    _state_name = "fps"
+    _pairs_schema = "id_a long, id_b long, hamming int"
 
     def __init__(
         self,
@@ -43,140 +56,20 @@ class HammingDedupState:
         band_width: int | None = None,
         max_band: int | None = None,
     ):
-        if (n_bands is None) != (band_width is None):
-            raise ValueError(
-                "give both n_bands and band_width, or neither"
-            )
-        if n_bands is None:
-            # widest complete layout, like dedup.hamming_neardup_pairs:
-            # narrow bands go quadratic with corpus size (see the
-            # batch operator's docstring / round-7 scaling fit)
-            n_bands = max_hamming + 1
-            band_width = 64 // n_bands
-        if max_hamming >= n_bands:
-            raise ValueError("completeness requires max_hamming < n_bands")
-        if n_bands * band_width > 64:
-            raise ValueError("bands past bit 63 are degenerate")
-        self.spark = spark
-        self.max_hamming = max_hamming
-        self.n_bands = n_bands
-        self.band_width = band_width
-        self.max_band = max_band
-        self._fps = ParquetTable(spark, os.path.join(path, "fps"), key="id")
-        self._pairs = ParquetTable(
-            spark, os.path.join(path, "pairs"), key=["id_a", "id_b"]
+        self.n_bands, self.band_width = _hamming_layout(
+            max_hamming, n_bands, band_width
         )
-
-    # -- state IO ---------------------------------------------------------
-
-    def _fps_exist(self) -> bool:
-        return os.path.isdir(self._fps.path)
+        super().__init__(spark, path, max_bucket=max_band)
+        self.max_hamming = max_hamming
 
     def fingerprints(self) -> DataFrame:
-        return self._fps.read()
-
-    def pairs(self) -> DataFrame:
-        if not os.path.isdir(self._pairs.path):
-            return self.spark.createDataFrame(
-                [], "id_a long, id_b long, hamming int"
-            )
-        return self._pairs.read()
-
-    # -- the fold ---------------------------------------------------------
-
-    def _bands(self, fps: DataFrame) -> DataFrame:
-        mask = (1 << self.band_width) - 1
-        vals = F.array(
-            *[
-                F.shiftright(F.col("fp"), i * self.band_width).bitwiseAND(
-                    F.lit(mask)
-                )
-                for i in range(self.n_bands)
-            ]
-        )
-        return fps.select("id", F.posexplode(vals).alias("band", "bval"))
+        return self._state.read()
 
     def fold(self, batch: DataFrame, id_col: str = "id", fp_col: str = "fp") -> None:
-        new = batch.select(
-            F.col(id_col).alias("id"), F.col(fp_col).alias("fp")
+        self._fold_delta(
+            batch.select(F.col(id_col).alias("id"), F.col(fp_col).alias("fp")),
+            bands=lambda fps: _hamming_bands(fps, self.n_bands, self.band_width),
+            verify=lambda cands, corpus: _hamming_verify(
+                cands, corpus, self.max_hamming
+            ),
         )
-        if self._fps_exist():
-            state = self.fingerprints()
-            new = new.join(state.select("id"), "id", "left_anti")
-        else:
-            state = None
-        new = new.localCheckpoint(eager=True)
-        if not new.take(1):
-            return
-        corpus = new if state is None else state.unionByName(new)
-        corpus = corpus.localCheckpoint(eager=True)
-
-        banded_all = self._bands(corpus)
-        if self.max_band is not None:
-            sizes = banded_all.groupBy("band", "bval").agg(
-                F.count(F.lit(1)).alias("__n")
-            )
-            banded_all = banded_all.join(
-                sizes.where(F.col("__n") <= self.max_band).drop("__n"),
-                ["band", "bval"],
-            )
-        cands = (
-            self._bands(new)
-            .select("band", "bval", F.col("id").alias("id_new"))
-            .join(banded_all, ["band", "bval"])
-            .where(F.col("id_new") != F.col("id"))
-            .select(
-                F.least("id_new", "id").alias("id_a"),
-                F.greatest("id_new", "id").alias("id_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        fa = corpus.select(F.col("id").alias("id_a"), F.col("fp").alias("__fa"))
-        fb = corpus.select(F.col("id").alias("id_b"), F.col("fp").alias("__fb"))
-        found = (
-            cands.join(fa, "id_a")
-            .join(fb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.bit_count(F.col("__fa").bitwiseXOR(F.col("__fb")))
-                .cast("int")
-                .alias("hamming"),
-            )
-            .where(F.col("hamming") <= self.max_hamming)
-            .localCheckpoint(eager=True)
-        )
-
-        if os.path.isdir(self._pairs.path):
-            self._pairs._swap_in(self.pairs().unionByName(found))
-        else:
-            self._pairs.init(found)
-        if state is None:
-            self._fps.init(new)
-        else:
-            self._fps._swap_in(state.unionByName(new))
-
-
-def hamming_neardup_stream(
-    stream: DataFrame,
-    state: HammingDedupState,
-    *,
-    checkpoint_dir: str,
-    id_col: str = "id",
-    fp_col: str = "fp",
-    available_now: bool = True,
-):
-    """Drive a fingerprint stream into the state fold via foreachBatch
-    (AvailableNow = the cron-cadence model). Returns the query."""
-
-    def _sink(batch: DataFrame, _epoch: int) -> None:
-        state.fold(batch, id_col, fp_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -8,10 +8,12 @@
 * T2 insert-only discovery — reference ``update_reads.py:44-56``:
   new object-store listings land with ``WHEN NOT MATCHED INSERT``
   semantics; re-running is a no-op (idempotent by M2).
-* Streaming bridge — ``merge_stream`` runs any readStream source into
-  a :class:`ParquetTable` MERGE inside ``foreachBatch``; with
-  ``Trigger.AvailableNow`` it is exactly the reference's daily-cron
+* Streaming bridge — ``fold_stream`` runs any readStream source into
+  a per-batch fold (a :class:`ParquetTable` MERGE, or a sketch or
+  near-dup state) inside ``foreachBatch`` under
+  ``Trigger.AvailableNow``: exactly the reference's daily-cron
   incremental batch (T3), with checkpointed exactly-once progress.
+  It is the engine's only streaming sink.
 
 Scale notes: the ledger is keyed metadata (one row per file), always
 tiny next to the data; its anti-join broadcasts. Each micro-batch
@@ -26,6 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ccgp_data_wrangling_spark.functions.temporal import ensure_ltz
 from ccgp_data_wrangling_spark.operators.merge import ParquetTable
@@ -109,46 +112,30 @@ class LedgerIngest:
         )
 
 
-def merge_stream(
-    stream: DataFrame,
-    target: ParquetTable,
-    *,
-    checkpoint_dir: str,
-    mode: str = "insert_only",
-    available_now: bool = True,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-):
-    """Run a streaming source into a ParquetTable MERGE (T2/T3).
+def fold_stream(
+    stream: DataFrame, fold: Callable[[DataFrame], object], *, checkpoint_dir: str
+) -> StreamingQuery:
+    """Drain ``stream`` through ``fold`` (T2/T3): every micro-batch is
+    passed to ``fold`` inside ``foreachBatch``, and
+    ``Trigger.AvailableNow`` processes everything available, then
+    stops — the reference's daily-cron cadence (T3), with the
+    checkpoint giving exactly-once progress across runs.
 
-    ``mode``: ``insert_only`` (M2, discovery streams) or ``upsert``
-    (M1); any other value raises ``ValueError`` before the query
-    starts. Each micro-batch is deduplicated on the target key before
-    merging (``insert_only`` does it itself) — a batch may contain the
-    same key twice, and set-oriented MERGE requires unique sources.
-    With ``available_now`` the query drains everything available then
-    stops — the scheduled-cron execution model (T3) with streaming
-    checkpoints.
+    ``fold`` is any per-batch write: an insert-only MERGE
+    (``target.insert_only``, idempotent by M2), an upsert
+    (``lambda b: target.upsert(b.dropDuplicates(target.keys))`` — a
+    batch may hold a key twice and set-oriented MERGE needs unique
+    sources), or a sketch/near-dup state's ``fold``.
 
     Returns the StreamingQuery (caller awaits termination).
     """
-    if mode not in ("insert_only", "upsert"):
-        raise ValueError(f"unknown merge_stream mode: {mode}")
-
-    def _sink(batch: DataFrame, _epoch: int) -> None:
-        b = transform(batch) if transform is not None else batch
-        if mode == "insert_only":
-            target.insert_only(b)
-        else:
-            target.upsert(b.dropDuplicates(target.keys))
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
+    return (
+        stream.writeStream.foreachBatch(lambda batch, _epoch: fold(batch))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_event_counts(

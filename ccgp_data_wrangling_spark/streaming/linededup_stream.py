@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.corpus_stats import corpus_tokens
-from ccgp_data_wrangling_spark.operators.merge import ParquetTable
+from ccgp_data_wrangling_spark.operators.merge import ParquetTable, empty_frame
 
 __all__ = ["LineDedupState"]
 
@@ -47,14 +47,9 @@ class LineDedupState:
             spark, os.path.join(path, "owners"), key="line_key"
         )
 
-    def _owners_exist(self) -> bool:
-        return os.path.isdir(self._owners.path)
-
     def owners(self) -> DataFrame:
-        if not self._owners_exist():
-            return self.spark.createDataFrame(
-                [], "line_key long, id long, pos int"
-            )
+        if not self._owners.exists():
+            return empty_frame(self.spark, "line_key long, id long, pos int")
         return self._owners.read()
 
     def _lines(self, batch: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -126,7 +121,7 @@ class LineDedupState:
             )
         ).select("id", "pos", "line")
 
-        if self._owners_exist():
+        if self._owners.exists():
             # insert-only: owners are immutable; the left_anti above
             # guarantees no key collision, so a plain append suffices
             new_owners.select("line_key", "id", "pos").write.mode(

@@ -17,6 +17,13 @@ than the text) is exactly the state that makes the delta form cheap:
   the delta first, so a re-delivered micro-batch finds an empty delta
   and changes nothing (idempotent under foreachBatch epoch replay).
 
+Drive it from a document stream with
+``streaming.incremental.fold_stream(stream, lambda b: state.fold(b,
+"id", "text"), checkpoint_dir=...)``. The delta fold itself
+(:class:`BandedDeltaState`) is shared with the Hamming state
+(streaming/hamming_stream.py); the signatures, bands and verify are
+the batch operators' own (operators/dedup.py).
+
 State size is O(corpus signatures), not O(corpus); each fold's cost
 is O(delta × collision rate), not O(corpus²).
 """
@@ -24,20 +31,100 @@ is O(delta × collision rate), not O(corpus²).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ccgp_data_wrangling_spark.operators.dedup import (
-    minhash_signature,
-    shingle_hashes,
+    _band_table,
+    _cap_buckets,
+    _jaccard_verify,
+    minhash_index,
 )
-from ccgp_data_wrangling_spark.operators.merge import ParquetTable
+from ccgp_data_wrangling_spark.operators.merge import ParquetTable, empty_frame
 
-__all__ = ["MinHashDedupState", "neardup_stream"]
+__all__ = ["BandedDeltaState", "MinHashDedupState"]
 
 
-class MinHashDedupState:
-    """Persisted signature state + discovered-pairs ledger."""
+class BandedDeltaState:
+    """Persisted ``(id, ...)`` state + append-only discovered-pairs
+    ledger, grown one delta at a time by banded candidate search.
+    A subclass names its state table (``_state_name``) and ledger
+    schema (``_pairs_schema``)."""
+
+    _state_name: str
+    _pairs_schema: str
+
+    def __init__(self, spark: SparkSession, path: str, *, max_bucket: int | None):
+        self.spark = spark
+        self.max_bucket = max_bucket
+        self._state = ParquetTable(
+            spark, os.path.join(path, self._state_name), key="id"
+        )
+        self._pairs = ParquetTable(
+            spark, os.path.join(path, "pairs"), key=["id_a", "id_b"]
+        )
+
+    def pairs(self) -> DataFrame:
+        if not self._pairs.exists():
+            return empty_frame(self.spark, self._pairs_schema)
+        return self._pairs.read()
+
+    def _fold_delta(
+        self,
+        new: DataFrame,
+        bands: Callable[[DataFrame], DataFrame],
+        verify: Callable[[DataFrame, DataFrame], DataFrame],
+    ) -> None:
+        """Fold the ``(id, ...)`` delta ``new``. ``bands`` maps an
+        ``(id, ...)`` frame to ``(id, <bucket key>...)`` rows;
+        ``verify`` maps candidate ``(id_a, id_b)`` pairs and the corpus
+        to the confirmed pairs, in the ledger schema. Candidates are
+        bands(delta) ⨝ bands(state ∪ delta), never state × state."""
+        if self._state.exists():
+            # replay safety: drop ids the state already holds
+            new = new.join(self._state.read().select("id"), "id", "left_anti")
+        # localCheckpoint: the delta is reused by the band join, the
+        # verify re-attach, and the state merge — and it must be
+        # materialized BEFORE the state swap below invalidates the
+        # state parquet it was anti-joined against
+        new = new.localCheckpoint(eager=True)
+        if not new.take(1):
+            return
+        corpus = new
+        if self._state.exists():
+            corpus = self._state.read().unionByName(new)
+        corpus = corpus.localCheckpoint(eager=True)
+
+        banded_all = _cap_buckets(bands(corpus), self.max_bucket)
+        keys = [c for c in banded_all.columns if c != "id"]
+        cands = (
+            bands(new)
+            .select(*keys, F.col("id").alias("id_new"))
+            .join(banded_all, keys)
+            .where(F.col("id_new") != F.col("id"))
+            .select(
+                F.least("id_new", "id").alias("id_a"),
+                F.greatest("id_new", "id").alias("id_b"),
+            )
+            .dropDuplicates(["id_a", "id_b"])
+        )
+        found = verify(cands, corpus).localCheckpoint(eager=True)
+
+        def append(old: DataFrame, part: DataFrame) -> DataFrame:
+            return old.unionByName(part)
+
+        self._pairs.fold(found, append)
+        self._state.fold(new, append)
+
+
+class MinHashDedupState(BandedDeltaState):
+    """Persisted ``(id, sh, sig)`` signature state (a
+    :func:`~..operators.dedup.minhash_index` frame) + discovered-pairs
+    ledger ``(id_a, id_b, jaccard)``."""
+
+    _state_name = "sigs"
+    _pairs_schema = "id_a long, id_b long, jaccard double"
 
     def __init__(
         self,
@@ -51,142 +138,28 @@ class MinHashDedupState:
         seed: int = 42,
         max_bucket: int = 1000,
     ):
-        self.spark = spark
+        super().__init__(spark, path, max_bucket=max_bucket)
         self.threshold = threshold
         self.n_hashes = n_hashes
         self.bands = bands
         self.shingle_k = shingle_k
         self.seed = seed
-        self.max_bucket = max_bucket
-        self._sigs = ParquetTable(spark, os.path.join(path, "sigs"), key="id")
-        self._pairs = ParquetTable(
-            spark, os.path.join(path, "pairs"), key=["id_a", "id_b"]
-        )
-
-    # -- state IO ---------------------------------------------------------
-
-    def _sigs_exist(self) -> bool:
-        return os.path.isdir(self._sigs.path)
 
     def signatures(self) -> DataFrame:
-        return self._sigs.read()
-
-    def pairs(self) -> DataFrame:
-        if not os.path.isdir(self._pairs.path):
-            return self.spark.createDataFrame(
-                [], "id_a long, id_b long, jaccard double"
-            )
-        return self._pairs.read()
-
-    # -- the fold ---------------------------------------------------------
-
-    def _sig_table(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        return docs.select(
-            F.col(id_col).alias("id"),
-            shingle_hashes(F.col(text_col), self.shingle_k).alias("sh"),
-        ).withColumn(
-            "sig", minhash_signature(F.col("sh"), self.n_hashes, self.seed)
-        )
-
-    def _banded(self, sigs: DataFrame) -> DataFrame:
-        rows = self.n_hashes // self.bands
-        band_hashes = F.array(
-            *[
-                F.hash(F.slice(F.col("sig"), b * rows + 1, rows))
-                for b in range(self.bands)
-            ]
-        )
-        return sigs.select(
-            "id", F.posexplode(band_hashes).alias("band_idx", "band_hash")
-        )
+        return self._state.read()
 
     def fold(self, batch: DataFrame, id_col: str, text_col: str) -> None:
-        new = self._sig_table(batch, id_col, text_col)
-        if self._sigs_exist():
-            state = self.signatures()
-            # replay safety: drop ids the state already holds
-            new = new.join(state.select("id"), "id", "left_anti")
-        else:
-            state = None
-
-        # localCheckpoint: the delta is reused by the band join, the
-        # verify re-attach, and the state merge — and it must be
-        # materialized BEFORE the sig swap below invalidates the
-        # state parquet it was anti-joined against
-        new = new.localCheckpoint(eager=True)
-        if not new.take(1):
-            return
-
-        corpus = new if state is None else state.unionByName(new)
-        corpus = corpus.localCheckpoint(eager=True)
-
-        banded_new = self._banded(new)
-        banded_all = self._banded(corpus)
-        buckets = banded_all.groupBy("band_idx", "band_hash").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        banded_all = banded_all.join(
-            buckets.where(F.col("n") <= self.max_bucket).select(
-                "band_idx", "band_hash"
+        self._fold_delta(
+            minhash_index(
+                batch,
+                id_col,
+                text_col,
+                n_hashes=self.n_hashes,
+                shingle_k=self.shingle_k,
+                seed=self.seed,
             ),
-            ["band_idx", "band_hash"],
+            bands=lambda sigs: _band_table(sigs, self.n_hashes, self.bands),
+            verify=lambda cands, corpus: _jaccard_verify(
+                cands, corpus, self.threshold
+            ),
         )
-        cands = (
-            banded_new.select(
-                "band_idx", "band_hash", F.col("id").alias("id_new")
-            )
-            .join(banded_all, ["band_idx", "band_hash"])
-            .where(F.col("id_new") != F.col("id"))
-            .select(
-                F.least("id_new", "id").alias("id_a"),
-                F.greatest("id_new", "id").alias("id_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-
-        sh_a = corpus.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-        sh_b = corpus.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size(F.array_union("sh_a", "sh_b"))
-        found = (
-            cands.join(sh_a, "id_a")
-            .join(sh_b, "id_b")
-            .withColumn("jaccard", inter.cast("double") / union)
-            .where(F.col("jaccard") >= self.threshold)
-            .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-            .localCheckpoint(eager=True)
-        )
-
-        if os.path.isdir(self._pairs.path):
-            self._pairs._swap_in(self.pairs().unionByName(found))
-        else:
-            self._pairs.init(found)
-
-        if state is None:
-            self._sigs.init(new)
-        else:
-            self._sigs._swap_in(state.unionByName(new))
-
-
-def neardup_stream(
-    stream: DataFrame,
-    state: MinHashDedupState,
-    id_col: str,
-    text_col: str,
-    *,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Maintain incremental near-dup state from a document stream."""
-
-    def _sink(batch: DataFrame, _epoch: int) -> None:
-        state.fold(batch, id_col, text_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

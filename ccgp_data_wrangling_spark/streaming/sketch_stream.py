@@ -8,14 +8,18 @@ nightly full rescan and an O(groups × k) parquet file updated per
 batch.
 
 Spark's built-in streaming aggregations can't express KMV (the
-combine is "union arrays, keep k smallest", not a sum), so the fold
-runs in ``foreachBatch``: batch → :func:`~..operators.sketches.
-kmv_partial` → :func:`~..operators.sketches.kmv_merge` with the state
-table → copy-on-write swap (ParquetTable's tmp-write + atomic rename,
-operators/merge.py). foreachBatch gives exactly-once per epoch via
-the checkpoint; replaying a batch after a crash re-merges the same
-hash set — KMV merge is idempotent (set union), so the state is
-correct either way.
+combine is "union arrays, keep k smallest", not a sum), so each
+state's ``fold`` runs per micro-batch: drive it with
+``streaming.incremental.fold_stream(stream, lambda b: state.fold(b,
+...), checkpoint_dir=...)``. A fold is batch → partial (e.g.
+:func:`~..operators.sketches.kmv_partial`) →
+:meth:`~..operators.merge.ParquetTable.fold`, which creates the state
+table from the first partial and afterwards swaps in the sketch's
+merge of state and partial (copy-on-write: tmp-write + atomic
+rename). foreachBatch gives exactly-once per epoch via the
+checkpoint; replaying a batch after a crash re-merges the same hash
+set — KMV merge is idempotent (set union), so the state is correct
+either way.
 """
 
 from __future__ import annotations
@@ -36,21 +40,18 @@ from ccgp_data_wrangling_spark.operators.sketches import (
     kmv_merge,
     kmv_partial,
     kmv_readout,
+    vhist_merge,
+    vhist_partial,
+    vhist_quantiles,
 )
 
 __all__ = [
     "KMVStreamState",
-    "kmv_stream",
     "CMSStreamState",
-    "cms_stream",
     "HLLStreamState",
-    "hll_stream",
     "DriftStreamState",
-    "drift_stream",
     "VHistStreamState",
-    "vhist_stream",
     "TopKStreamState",
-    "topk_stream",
 ]
 
 
@@ -58,27 +59,18 @@ class KMVStreamState:
     """Persisted ``(g, kmin)`` KMV state at ``path``."""
 
     def __init__(self, spark: SparkSession, path: str, *, k: int = 64):
-        self.spark = spark
-        self.path = path
         self.k = k
         self._table = ParquetTable(spark, path, key="g")
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path)
 
     def read(self) -> DataFrame:
         return self._table.read()
 
     def fold(self, batch: DataFrame, group_col: str, value_col: str) -> None:
         """Merge one batch of raw rows into the state (create if new)."""
-        part = kmv_partial(batch, group_col, value_col, k=self.k)
-        if not self.exists():
-            self._table.init(part)
-            return
-        merged = kmv_merge([self.read(), part], k=self.k)
-        # copy-on-write: the merge reads the live state, so materialize
-        # to a tmp dir and swap rather than overwriting in place
-        self._table._swap_in(merged)
+        self._table.fold(
+            kmv_partial(batch, group_col, value_col, k=self.k),
+            lambda state, part: kmv_merge([state, part], k=self.k),
+        )
 
     def estimate(self, group_col: str) -> DataFrame:
         return kmv_readout(self.read(), group_col, k=self.k)
@@ -97,79 +89,20 @@ class CMSStreamState:
     def __init__(
         self, spark: SparkSession, path: str, *, depth: int = 4, width: int = 256
     ):
-        self.spark = spark
-        self.path = path
         self.depth = depth
         self.width = width
         self._table = ParquetTable(spark, path, key=["row", "col"])
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path)
 
     def read(self) -> DataFrame:
         return self._table.read()
 
     def fold(self, batch: DataFrame, item_col: str, weight_col: str) -> None:
-        part = cms_sketch(
-            batch, item_col, weight_col, depth=self.depth, width=self.width
+        self._table.fold(
+            cms_sketch(
+                batch, item_col, weight_col, depth=self.depth, width=self.width
+            ),
+            lambda state, part: cms_merge([state, part]),
         )
-        if not self.exists():
-            self._table.init(part)
-            return
-        self._table._swap_in(cms_merge([self.read(), part]))
-
-
-def cms_stream(
-    stream: DataFrame,
-    state: CMSStreamState,
-    item_col: str,
-    weight_col: str,
-    *,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Maintain a count-min sketch from a streaming DataFrame."""
-
-    def _sink(batch: DataFrame, _epoch: int) -> None:
-        state.fold(batch, item_col, weight_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def kmv_stream(
-    stream: DataFrame,
-    state: KMVStreamState,
-    group_col: str,
-    value_col: str,
-    *,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Maintain ``state`` from a streaming DataFrame.
-
-    ``availableNow`` drains the backlog and stops — the T3 cron
-    cadence (streaming/incremental.merge_stream); pass ``False`` for
-    a continuously-running query.
-    """
-
-    def _sink(batch: DataFrame, _epoch: int) -> None:
-        state.fold(batch, group_col, value_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 class HLLStreamState:
@@ -182,49 +115,19 @@ class HLLStreamState:
     """
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
         self._table = ParquetTable(spark, path, key=["g", "register"])
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path)
 
     def read(self) -> DataFrame:
         return self._table.read()
 
     def fold(self, batch: DataFrame, group_col: str, value_col: str) -> None:
-        part = hll_partial(batch, group_col, value_col)
-        if not self.exists():
-            self._table.init(part)
-            return
-        self._table._swap_in(hll_merge([self.read(), part]))
+        self._table.fold(
+            hll_partial(batch, group_col, value_col),
+            lambda state, part: hll_merge([state, part]),
+        )
 
     def estimate(self, group_col: str) -> DataFrame:
         return hll_readout(self.read(), group_col)
-
-
-def hll_stream(
-    stream: DataFrame,
-    state: HLLStreamState,
-    group_col: str,
-    value_col: str,
-    *,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Maintain a HyperLogLog register table from a streaming frame."""
-
-    def _sink(batch: DataFrame, _epoch: int) -> None:
-        state.fold(batch, group_col, value_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 class DriftStreamState:
@@ -240,8 +143,6 @@ class DriftStreamState:
     """
 
     def __init__(self, spark: SparkSession, path: str, *, n_bins: int = 10):
-        self.spark = spark
-        self.path = path
         self.n_bins = n_bins
         self._ref = ParquetTable(spark, os.path.join(path, "ref"), key=["g", "bin"])
         self._cmp = ParquetTable(spark, os.path.join(path, "cmp"), key=["g", "bin"])
@@ -258,26 +159,19 @@ class DriftStreamState:
         )
 
     def fold(self, batch: DataFrame, *, group_col: str, value_col: str) -> None:
-        from pyspark.sql import functions as F
-
         from ccgp_data_wrangling_spark.operators.drift import bin_counts
 
-        part = bin_counts(
-            batch,
-            self._ref.read().select("g", "bounds"),
-            group_col=group_col,
-            value_col=value_col,
-        )
-        if not os.path.isdir(self._cmp.path):
-            self._cmp.init(part)
-            return
-        merged = (
-            self._cmp.read()
-            .unionByName(part)
+        self._cmp.fold(
+            bin_counts(
+                batch,
+                self._ref.read().select("g", "bounds"),
+                group_col=group_col,
+                value_col=value_col,
+            ),
+            lambda state, part: state.unionByName(part)
             .groupBy("g", "bin")
-            .agg(F.sum("c").alias("c"))
+            .agg(F.sum("c").alias("c")),
         )
-        self._cmp._swap_in(merged)
 
     def psi(self) -> DataFrame:
         from ccgp_data_wrangling_spark.operators.drift import psi_readout
@@ -285,30 +179,6 @@ class DriftStreamState:
         return psi_readout(
             self._ref.read(), self._cmp.read(), n_bins=self.n_bins
         )
-
-
-def drift_stream(
-    stream: DataFrame,
-    state: DriftStreamState,
-    *,
-    group_col: str,
-    value_col: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Maintain a PSI drift monitor from a streaming frame."""
-
-    def _sink(batch: DataFrame, _epoch: int) -> None:
-        state.fold(batch, group_col=group_col, value_col=value_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 class VHistStreamState:
@@ -321,59 +191,20 @@ class VHistStreamState:
     """
 
     def __init__(self, spark: SparkSession, path: str, *, scale: int = 100):
-        self.spark = spark
-        self.path = path
         self.scale = scale
         self._table = ParquetTable(spark, path, key=["g", "v_s"])
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path)
 
     def read(self) -> DataFrame:
         return self._table.read()
 
     def fold(self, batch: DataFrame, group_col: str, value_col: str) -> None:
-        from ccgp_data_wrangling_spark.operators.sketches import (
-            vhist_merge,
-            vhist_partial,
+        self._table.fold(
+            vhist_partial(batch, group_col, value_col, scale=self.scale),
+            lambda state, part: vhist_merge([state, part]),
         )
-
-        part = vhist_partial(batch, group_col, value_col, scale=self.scale)
-        if not self.exists():
-            self._table.init(part)
-            return
-        self._table._swap_in(vhist_merge([self.read(), part]))
 
     def quantiles(self, group_col: str, qs=(0.5, 0.9, 0.99)) -> DataFrame:
-        from ccgp_data_wrangling_spark.operators.sketches import (
-            vhist_quantiles,
-        )
-
         return vhist_quantiles(self.read(), group_col, qs, scale=self.scale)
-
-
-def vhist_stream(
-    stream: DataFrame,
-    state: VHistStreamState,
-    group_col: str,
-    value_col: str,
-    *,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Maintain a value-keyed histogram digest from a streaming frame."""
-
-    def _sink(batch: DataFrame, _epoch: int) -> None:
-        state.fold(batch, group_col, value_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 class TopKStreamState:
@@ -408,17 +239,12 @@ class TopKStreamState:
         query_id_col: str = "query_id",
         query_vec_col: str = "qvec",
     ):
-        self.spark = spark
-        self.path = path
         self.k = k
         self.queries = queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vec_col).cast("array<double>").alias("__qv"),
         )
         self._table = ParquetTable(spark, path, key=["query_id", "id"])
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path)
 
     def read(self) -> DataFrame:
         return self._table.read()
@@ -433,20 +259,23 @@ class TopKStreamState:
                 cosine_sim(F.col(vec_col).cast("array<double>"), F.col("__qv")), 4
             ).alias("score"),
         )
-        if self.exists():
-            scored = self.read().unionByName(scored).dropDuplicates(
-                ["query_id", "id"]
-            )
         w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("id"))
-        new_state = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= self.k)
-            .drop("__rn")
+
+        def best_k(df: DataFrame) -> DataFrame:
+            return (
+                df.withColumn("__rn", F.row_number().over(w))
+                .where(F.col("__rn") <= self.k)
+                .drop("__rn")
+            )
+
+        # the first write is the batch's own k best; later ones re-rank
+        # the stored top-k with every scored row of the batch
+        self._table.fold(
+            best_k(scored),
+            lambda state, _part: best_k(
+                state.unionByName(scored).dropDuplicates(["query_id", "id"])
+            ),
         )
-        if not os.path.isdir(self.path):
-            self._table.init(new_state)
-        else:
-            self._table._swap_in(new_state)
 
     def topk(self) -> DataFrame:
         """(query_id, id, score, rank) — the live per-query top-k."""
@@ -454,25 +283,3 @@ class TopKStreamState:
         return self.read().withColumn("rank", F.row_number().over(w))
 
 
-def topk_stream(
-    stream: DataFrame,
-    state: TopKStreamState,
-    id_col: str,
-    vec_col: str,
-    *,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Maintain per-query retrieval top-k from a streaming corpus."""
-
-    def _sink(batch: DataFrame, _epoch: int) -> None:
-        state.fold(batch, id_col, vec_col)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.merge import ParquetTable
-from ccgp_data_wrangling_spark.streaming.incremental import merge_stream
+from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
 
 __all__ = ["dash_segment_rows", "dash_landing_stream", "MP4_SAMPLE_SCHEMA"]
 
@@ -103,18 +103,14 @@ def dash_landing_stream(
     target: ParquetTable,
     *,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Drain new ``.m4s`` segments into ``target`` (keyed
     ``(track, chunk, sample)``): discovery → per-segment sample
-    expansion → insert-only MERGE. With ``available_now`` this is the
-    cron-cadence execution model (T3); re-runs are no-ops (the
-    checkpoint skips seen files, the MERGE skips seen keys). A
-    missing target bootstraps with the empty sample schema. Returns
-    the StreamingQuery."""
-    import os
-
-    if not os.path.exists(target.path):
+    expansion → insert-only MERGE, in the cron-cadence execution model
+    (T3); re-runs are no-ops (the checkpoint skips seen files, the
+    MERGE skips seen keys). A missing target bootstraps with the empty
+    sample schema. Returns the StreamingQuery."""
+    if not target.exists():
         target.init(MP4_SAMPLE_SCHEMA)
     raw = (
         spark.readStream.format("binaryFile")
@@ -123,10 +119,8 @@ def dash_landing_stream(
         .load(segment_dir)
     )
     segs = raw.select(F.col("content").alias("payload"))
-    return merge_stream(
+    return fold_stream(
         dash_segment_rows(segs, init),
-        target,
+        target.insert_only,
         checkpoint_dir=checkpoint_dir,
-        mode="insert_only",
-        available_now=available_now,
     )

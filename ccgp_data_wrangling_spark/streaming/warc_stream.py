@@ -15,7 +15,7 @@ Pieces, all reused:
 * curation = :func:`curate_warc_records`, one shared Column-expression
   stage applied identically in batch and stream (what makes the
   stream ≡ batch test meaningful);
-* sink = ``merge_stream`` insert-only MERGE keyed on the text
+* sink = ``fold_stream`` into an insert-only MERGE keyed on the text
   fingerprint — cross-batch exact dedup with NO watermark state: the
   only state is the checkpoint's file list and the output table
   itself (bounded by distinct curated documents).
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.merge import ParquetTable, empty_frame
 from ccgp_data_wrangling_spark.sources.warc import warc_records
-from ccgp_data_wrangling_spark.streaming.incremental import merge_stream
+from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
 
 __all__ = [
     "curate_warc_records",
@@ -95,33 +95,26 @@ def warc_curation_stream(
     *,
     checkpoint_dir: str,
     min_words: int = 3,
-    available_now: bool = True,
 ):
     """Drain new WARC archives into ``target`` (keyed on
     ``fingerprint``): discovery → explode → curate → insert-only
-    MERGE. With ``available_now`` this is the cron-cadence execution
-    model (T3); re-runs are no-ops (checkpoint skips seen files, the
-    MERGE skips seen fingerprints). A missing target is bootstrapped
-    with the empty curated schema, so a fresh landing directory needs
-    no manual init. Returns the StreamingQuery."""
-    import os
-
+    MERGE, in the cron-cadence execution model (T3); re-runs are
+    no-ops (checkpoint skips seen files, the MERGE skips seen
+    fingerprints). A missing target is bootstrapped with the empty
+    curated schema, so a fresh landing directory needs no manual init.
+    Returns the StreamingQuery."""
     from ccgp_data_wrangling_spark.sources.warc import WARC_RECORD_SCHEMA
 
-    if not os.path.exists(target.path):
+    if not target.exists():
         target.init(
             curate_warc_records(
                 empty_frame(spark, WARC_RECORD_SCHEMA), min_words=min_words
             ).schema
         )
-    recs = warc_archive_records(spark, archive_dir, streaming=True)
-    return merge_stream(
-        recs,
-        target,
+    return fold_stream(
+        warc_archive_records(spark, archive_dir, streaming=True),
+        lambda b: target.insert_only(curate_warc_records(b, min_words=min_words)),
         checkpoint_dir=checkpoint_dir,
-        mode="insert_only",
-        available_now=available_now,
-        transform=lambda b: curate_warc_records(b, min_words=min_words),
     )
 
 
@@ -131,7 +124,6 @@ def wds_landing_stream(
     target: ParquetTable,
     *,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """WebDataset landing directory → sample table: the tar-shard
     twin of :func:`warc_curation_stream`. New ``*.tar`` shards drain
@@ -139,14 +131,12 @@ def wds_landing_stream(
     keyed on ``(shard_id, sample_key)``; parts stay
     ``map<string, binary>`` for downstream kernels. Checkpoint = the
     processed-shard ledger; re-drains are no-ops."""
-    import os
-
     from ccgp_data_wrangling_spark.sources.webdataset import (
         WDS_SAMPLE_SCHEMA,
         wds_samples,
     )
 
-    if not os.path.exists(target.path):
+    if not target.exists():
         target.init(WDS_SAMPLE_SCHEMA)
     raw = (
         spark.readStream.format("binaryFile")
@@ -158,10 +148,8 @@ def wds_landing_stream(
         F.xxhash64("path").alias("shard_id"),
         F.col("content").alias("payload"),
     )
-    return merge_stream(
+    return fold_stream(
         wds_samples(shards, id_col="shard_id"),
-        target,
+        target.insert_only,
         checkpoint_dir=checkpoint_dir,
-        mode="insert_only",
-        available_now=available_now,
     )

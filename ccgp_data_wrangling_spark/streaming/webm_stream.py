@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.merge import ParquetTable
-from ccgp_data_wrangling_spark.streaming.incremental import merge_stream
+from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
 
 __all__ = ["webm_chunk_rows", "webm_landing_stream", "WEBM_BLOCK_SCHEMA"]
 
@@ -108,18 +108,14 @@ def webm_landing_stream(
     target: ParquetTable,
     *,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Drain new ``.webm`` cluster chunks into ``target`` (keyed
     ``(track, cluster_ts, block)``): discovery → per-cluster block
-    expansion → insert-only MERGE. With ``available_now`` this is the
-    cron-cadence execution model (T3); re-runs are no-ops (the
-    checkpoint skips seen files, the MERGE skips seen keys). A
-    missing target bootstraps with the empty block schema. Returns
-    the StreamingQuery."""
-    import os
-
-    if not os.path.exists(target.path):
+    expansion → insert-only MERGE, in the cron-cadence execution model
+    (T3); re-runs are no-ops (the checkpoint skips seen files, the
+    MERGE skips seen keys). A missing target bootstraps with the empty
+    block schema. Returns the StreamingQuery."""
+    if not target.exists():
         target.init(WEBM_BLOCK_SCHEMA)
     raw = (
         spark.readStream.format("binaryFile")
@@ -128,10 +124,8 @@ def webm_landing_stream(
         .load(chunk_dir)
     )
     chunks = raw.select(F.col("content").alias("payload"))
-    return merge_stream(
+    return fold_stream(
         webm_chunk_rows(chunks, init),
-        target,
+        target.insert_only,
         checkpoint_dir=checkpoint_dir,
-        mode="insert_only",
-        available_now=available_now,
     )

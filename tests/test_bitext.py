@@ -72,3 +72,22 @@ def test_layout_independent(spark):
         map(tuple, margin_mine(a.repartition(7), b.repartition(5), "id", "vec", k=2, tau=1.0).collect())
     )
     assert r1 == r7
+
+
+def test_degenerate_vectors_never_fail_or_pair(spark):
+    """An all-zero vector (null cosine) and a pair whose neighbourhood
+    means cancel (zero margin denominator) used to fail the job under
+    ANSI mode; now they yield no pair and leave the others alone."""
+    a, b = _mk_sides(spark)
+    zero = [0.0] * 16
+    a = a.unionByName(spark.createDataFrame([(3, zero)], a.schema))
+    b = b.unionByName(spark.createDataFrame([(103, zero)], b.schema))
+    out = {
+        (r["a_id"], r["b_id"])
+        for r in margin_mine(a, b, "id", "vec", k=2, tau=1.4).collect()
+    }
+    assert out == {(0, 100), (1, 101)}
+
+    ortho_a = spark.createDataFrame([(1, [1.0, 0.0])], "id long, vec array<double>")
+    ortho_b = spark.createDataFrame([(10, [0.0, 1.0])], "id long, vec array<double>")
+    assert margin_mine(ortho_a, ortho_b, "id", "vec", tau=0.0).collect() == []

@@ -79,10 +79,8 @@ def test_drift_stream_matches_batch_split(spark, tmp_path):
     """Streamed micro-batch folds reproduce the one-shot psi_drift
     numbers over the same data split."""
     from ccgp_data_wrangling_spark.operators.drift import psi_drift
-    from ccgp_data_wrangling_spark.streaming.sketch_stream import (
-        DriftStreamState,
-        drift_stream,
-    )
+    from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
+    from ccgp_data_wrangling_spark.streaming.sketch_stream import DriftStreamState
 
     rows = [
         ("a", float(i % 50), f"2024-01-{(i % 27) + 1:02d} 00:00:00")
@@ -118,8 +116,9 @@ def test_drift_stream_matches_batch_split(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = drift_stream(
-        stream, state, group_col="g", value_col="v",
+    q = fold_stream(
+        stream,
+        lambda b: state.fold(b, group_col="g", value_col="v"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)

@@ -6,11 +6,12 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from ccgp_data_wrangling_spark.operators.dedup import hamming_neardup_pairs
-from ccgp_data_wrangling_spark.streaming.hamming_stream import (
-    HammingDedupState,
-    hamming_neardup_stream,
-)
+from ccgp_data_wrangling_spark.streaming.hamming_stream import HammingDedupState
+from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
+from tests.conftest import jobs_in_group
 
 
 def _corpus():
@@ -69,9 +70,7 @@ def test_streaming_drain(spark, tmp_path):
         .parquet(str(src))
     )
     state = HammingDedupState(spark, str(tmp_path / "state"), max_hamming=3)
-    q = hamming_neardup_stream(
-        stream, state, checkpoint_dir=str(tmp_path / "ckpt")
-    )
+    q = fold_stream(stream, state.fold, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     df_all = spark.createDataFrame(rows, "id long, fp long")
     want = sorted(
@@ -84,3 +83,34 @@ def test_streaming_drain(spark, tmp_path):
         (r.id_a, r.id_b, r.hamming) for r in state.pairs().collect()
     )
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        dict(max_hamming=3, n_bands=8),  # width missing
+        dict(max_hamming=3, band_width=8),  # band count missing
+        dict(max_hamming=4, n_bands=4, band_width=16),  # incomplete
+        dict(max_hamming=3, n_bands=8, band_width=9),  # past bit 63
+    ],
+    ids=["no_width", "no_bands", "incomplete", "past_bit_63"],
+)
+def test_state_and_batch_reject_the_same_bad_layouts(spark, tmp_path, layout):
+    """The streaming state and the batch operator share one layout
+    check: each bad layout raises the same ValueError on the driver,
+    before any Spark job."""
+    df = spark.createDataFrame([(1, 5)], "id long, fp long")
+
+    def build():
+        with pytest.raises(ValueError) as state_err:
+            HammingDedupState(spark, str(tmp_path / "state"), **layout)
+        with pytest.raises(ValueError) as batch_err:
+            hamming_neardup_pairs(df, "id", "fp", **layout)
+        return str(state_err.value), str(batch_err.value)
+
+    (state_msg, batch_msg), n_jobs = jobs_in_group(
+        spark.sparkContext, "hamming_layout_check", build
+    )
+    assert state_msg == batch_msg
+    assert n_jobs == 0
+    assert not (tmp_path / "state").exists()

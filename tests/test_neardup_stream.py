@@ -5,10 +5,8 @@ operator's answer on the whole corpus."""
 from __future__ import annotations
 
 from ccgp_data_wrangling_spark.operators.dedup import minhash_neardup_pairs
-from ccgp_data_wrangling_spark.streaming.neardup_stream import (
-    MinHashDedupState,
-    neardup_stream,
-)
+from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
+from ccgp_data_wrangling_spark.streaming.neardup_stream import MinHashDedupState
 
 
 def _corpus(spark):
@@ -46,11 +44,9 @@ def test_incremental_pairs_match_batch(spark, tmp_path):
     state = MinHashDedupState(
         spark, str(tmp_path / "state"), threshold=0.6, max_bucket=10_000
     )
-    q = neardup_stream(
+    q = fold_stream(
         _stream_in_chunks(spark, tmp_path, rows),
-        state,
-        "doc_id",
-        "text",
+        lambda b: state.fold(b, "doc_id", "text"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
@@ -76,11 +72,9 @@ def test_incremental_replay_is_idempotent(spark, tmp_path):
     state = MinHashDedupState(
         spark, str(tmp_path / "state"), threshold=0.6, max_bucket=10_000
     )
-    q = neardup_stream(
+    q = fold_stream(
         _stream_in_chunks(spark, tmp_path, rows, n_chunks=2),
-        state,
-        "doc_id",
-        "text",
+        lambda b: state.fold(b, "doc_id", "text"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
@@ -89,11 +83,9 @@ def test_incremental_replay_is_idempotent(spark, tmp_path):
     # feed the SAME rows again from a fresh stream dir (new files, so
     # the checkpoint does not skip them): every id is already in the
     # state, so the fold must be a no-op
-    q2 = neardup_stream(
+    q2 = fold_stream(
         _stream_in_chunks(spark, tmp_path / "again", rows, n_chunks=2),
-        state,
-        "doc_id",
-        "text",
+        lambda b: state.fold(b, "doc_id", "text"),
         checkpoint_dir=str(tmp_path / "ckpt2"),
     )
     q2.awaitTermination(180)

@@ -262,6 +262,44 @@ def test_ann_topk_null_and_ragged_vectors_match_reference(spark):
         assert any(r[0] >= 90 for r in got) == keeps_bad
 
 
+def test_zero_vector_has_null_cosine_in_brute_force_topk(spark):
+    """An all-zero vector's cosine is null (no ANSI DIVIDE_BY_ZERO that
+    fails the job): it ranks after every real cosine, like a null
+    vector, so a top-k with room for the real rows never holds it."""
+    from ccgp_data_wrangling_spark.operators.knn import brute_force_topk
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [3.0, 4.0]), (4, None)],
+        "vec_id long, embedding array<double>",
+    )
+    got = [tuple(r) for r in brute_force_topk(emb, [1.0, 0.0], 4).collect()]
+    assert got[:2] == [(1, 1.0, 1), (3, 0.6, 2)]
+    assert sorted((r[0], r[1]) for r in got[2:]) == [(2, None), (4, None)]
+    top2 = [r.vec_id for r in brute_force_topk(emb, [1.0, 0.0], 2).collect()]
+    assert top2 == [1, 3]
+
+
+def test_embedding_neardup_pairs_sniffs_first_non_null_vector(spark):
+    """Without ``dim`` the width comes from the first NON-NULL vector: a
+    null first row used to fail on the driver with a TypeError. The
+    pairs equal the ``dim=2`` run's; an all-null input has no pairs."""
+    from ccgp_data_wrangling_spark.operators.dedup import embedding_neardup_pairs
+
+    df = spark.createDataFrame(
+        [(1, None), (2, [1.0, 0.0]), (3, [1.0, 0.0])],
+        "id long, vec array<double>",
+    )
+    got = [tuple(r) for r in embedding_neardup_pairs(df, "id", "vec").collect()]
+    assert got == [(2, 3, 1.0)]
+    with_dim = embedding_neardup_pairs(df, "id", "vec", dim=2).collect()
+    assert got == [tuple(r) for r in with_dim]
+
+    nulls = df.where(F.col("id") == 1)
+    out = embedding_neardup_pairs(nulls, "id", "vec")
+    assert out.columns == ["id_a", "id_b", "cos_sim"]
+    assert out.collect() == []
+
+
 _small_vec = st.lists(st.integers(-3, 3), min_size=1, max_size=8)
 
 

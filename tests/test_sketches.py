@@ -105,10 +105,8 @@ def test_kmv_stream_matches_batch(spark, tmp_path):
     """Micro-batched KMV folds must equal the one-shot batch sketch,
     including after a second run over the same checkpoint (idempotent
     replay)."""
-    from ccgp_data_wrangling_spark.streaming.sketch_stream import (
-        KMVStreamState,
-        kmv_stream,
-    )
+    from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
+    from ccgp_data_wrangling_spark.streaming.sketch_stream import KMVStreamState
 
     src = tmp_path / "src"
     rows = [(f"type{i % 3}", i % 500) for i in range(2000)]
@@ -126,8 +124,10 @@ def test_kmv_stream_matches_batch(spark, tmp_path):
         .parquet(str(src))
     )
     state = KMVStreamState(spark, str(tmp_path / "state"), k=16)
-    q = kmv_stream(
-        stream, state, "g", "v", checkpoint_dir=str(tmp_path / "ckpt")
+    q = fold_stream(
+        stream,
+        lambda b: state.fold(b, "g", "v"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
 
@@ -141,8 +141,10 @@ def test_kmv_stream_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q2 = kmv_stream(
-        stream2, state, "g", "v", checkpoint_dir=str(tmp_path / "ckpt")
+    q2 = fold_stream(
+        stream2,
+        lambda b: state.fold(b, "g", "v"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q2.awaitTermination(120)
     assert sorted(map(tuple, state.estimate("g").collect())) == want
@@ -194,10 +196,8 @@ def test_kmv_set_overlap_disjoint_and_identical(spark):
 
 def test_cms_stream_matches_batch(spark, tmp_path):
     """Micro-batched cell-sum folds must equal the one-shot sketch."""
-    from ccgp_data_wrangling_spark.streaming.sketch_stream import (
-        CMSStreamState,
-        cms_stream,
-    )
+    from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
+    from ccgp_data_wrangling_spark.streaming.sketch_stream import CMSStreamState
 
     src = tmp_path / "src"
     rows = [(f"tok{i % 40}", (i % 5) + 1) for i in range(900)]
@@ -212,8 +212,10 @@ def test_cms_stream_matches_batch(spark, tmp_path):
         .parquet(str(src))
     )
     state = CMSStreamState(spark, str(tmp_path / "state"))
-    q = cms_stream(
-        stream, state, "token", "w", checkpoint_dir=str(tmp_path / "ckpt")
+    q = fold_stream(
+        stream,
+        lambda b: state.fold(b, "token", "w"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
 
@@ -556,10 +558,8 @@ def test_minhash_incremental_boundary_only(spark):
 def test_hll_stream_matches_batch(spark, tmp_path):
     """Micro-batched HLL register folds == one-shot batch sketch."""
     from ccgp_data_wrangling_spark.operators.sketches import hll_distinct
-    from ccgp_data_wrangling_spark.streaming.sketch_stream import (
-        HLLStreamState,
-        hll_stream,
-    )
+    from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
+    from ccgp_data_wrangling_spark.streaming.sketch_stream import HLLStreamState
 
     src = tmp_path / "src"
     rows = [(f"type{i % 3}", i % 700) for i in range(2100)]
@@ -575,8 +575,10 @@ def test_hll_stream_matches_batch(spark, tmp_path):
         .parquet(str(src))
     )
     state = HLLStreamState(spark, str(tmp_path / "state"))
-    q = hll_stream(
-        stream, state, "g", "v", checkpoint_dir=str(tmp_path / "ckpt")
+    q = fold_stream(
+        stream,
+        lambda b: state.fold(b, "g", "v"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
 
@@ -616,10 +618,8 @@ def test_vhist_stream_matches_batch(spark, tmp_path):
         vhist_partial,
         vhist_quantiles,
     )
-    from ccgp_data_wrangling_spark.streaming.sketch_stream import (
-        VHistStreamState,
-        vhist_stream,
-    )
+    from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
+    from ccgp_data_wrangling_spark.streaming.sketch_stream import VHistStreamState
 
     src = tmp_path / "src"
     rows = [("t", float(i % 250) / 7) for i in range(2100)]
@@ -635,8 +635,10 @@ def test_vhist_stream_matches_batch(spark, tmp_path):
         .parquet(str(src))
     )
     state = VHistStreamState(spark, str(tmp_path / "state"))
-    q = vhist_stream(
-        stream, state, "g", "v", checkpoint_dir=str(tmp_path / "ckpt")
+    q = fold_stream(
+        stream,
+        lambda b: state.fold(b, "g", "v"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     got = sorted(map(tuple, state.quantiles("g").collect()))
@@ -673,10 +675,8 @@ def test_topk_stream_matches_batch(spark, tmp_path):
     import random
 
     from ccgp_data_wrangling_spark.operators.knn import brute_force_topk
-    from ccgp_data_wrangling_spark.streaming.sketch_stream import (
-        TopKStreamState,
-        topk_stream,
-    )
+    from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
+    from ccgp_data_wrangling_spark.streaming.sketch_stream import TopKStreamState
 
     rng = random.Random(23)
     rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(120)]
@@ -698,8 +698,9 @@ def test_topk_stream_matches_batch(spark, tmp_path):
         .parquet(str(src))
     )
     state = TopKStreamState(spark, str(tmp_path / "tk_state"), queries, k=5)
-    q = topk_stream(
-        stream, state, "vec_id", "embedding",
+    q = fold_stream(
+        stream,
+        lambda b: state.fold(b, "vec_id", "embedding"),
         checkpoint_dir=str(tmp_path / "tk_ckpt"),
     )
     q.awaitTermination(120)
@@ -718,3 +719,47 @@ def test_topk_stream_matches_batch(spark, tmp_path):
     )
     state.fold(chunk0, "vec_id", "embedding")
     assert sorted(map(tuple, state.read().collect())) == before
+
+
+def test_topk_stream_survives_zero_vector(spark, tmp_path):
+    """An all-zero corpus vector scores a null cosine instead of
+    failing the drain (ANSI DIVIDE_BY_ZERO), and never enters a
+    per-query top-k that real vectors fill: the drained state equals
+    the one-shot brute-force top-k."""
+    import random
+
+    from ccgp_data_wrangling_spark.operators.knn import brute_force_topk
+    from ccgp_data_wrangling_spark.streaming.incremental import fold_stream
+    from ccgp_data_wrangling_spark.streaming.sketch_stream import TopKStreamState
+
+    rng = random.Random(5)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(4)]) for i in range(20)]
+    rows.insert(7, (99, [0.0] * 4))
+    schema = "vec_id long, embedding array<double>"
+    queries = spark.createDataFrame(
+        [(100 + j, [rng.gauss(0, 1) for _ in range(4)]) for j in range(2)],
+        "query_id long, qvec array<double>",
+    )
+    src = tmp_path / "corpus"
+    for chunk in (rows[:10], rows[10:]):
+        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    state = TopKStreamState(spark, str(tmp_path / "state"), queries, k=3)
+    fold_stream(
+        stream,
+        lambda b: state.fold(b, "vec_id", "embedding"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    ).awaitTermination(120)
+
+    got = {(r.query_id, r.rank): (r.id, r.score) for r in state.topk().collect()}
+    assert len(got) == 6 and all(i != 99 for i, _ in got.values())
+    full = spark.createDataFrame(rows, schema)
+    for qrow in queries.collect():
+        for e in brute_force_topk(full, list(qrow.qvec), 3).collect():
+            assert got[(qrow.query_id, e.rank)] == (e.vec_id, e.cos_sim)

@@ -1,15 +1,15 @@
-"""T1 ledger ingest + T2 streaming MERGE (idempotency included)."""
+"""T1 ledger ingest + T2 streaming MERGE through ``fold_stream``
+(idempotency included)."""
 
 from __future__ import annotations
 
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from ccgp_data_wrangling_spark.operators.merge import ParquetTable
 from ccgp_data_wrangling_spark.sources import read_submitted_sheet
-from ccgp_data_wrangling_spark.streaming import LedgerIngest, merge_stream
+from ccgp_data_wrangling_spark.streaming import LedgerIngest, fold_stream
 
 
 def _ledger(spark, tmp_path) -> ParquetTable:
@@ -76,8 +76,8 @@ def test_merge_stream_insert_only_idempotent(spark, tmp_path):
         .option("header", True)
         .csv(str(src_dir))
     )
-    q = merge_stream(
-        stream, target, checkpoint_dir=str(tmp_path / "ckpt"), mode="insert_only"
+    q = fold_stream(
+        stream, target.insert_only, checkpoint_dir=str(tmp_path / "ckpt")
     )
     q.awaitTermination(60)
 
@@ -93,8 +93,8 @@ def test_merge_stream_insert_only_idempotent(spark, tmp_path):
         .option("header", True)
         .csv(str(src_dir))
     )
-    q2 = merge_stream(
-        stream2, target, checkpoint_dir=str(tmp_path / "ckpt"), mode="insert_only"
+    q2 = fold_stream(
+        stream2, target.insert_only, checkpoint_dir=str(tmp_path / "ckpt")
     )
     q2.awaitTermination(60)
     rows = {r.file_name: r.filesize for r in target.read().collect()}
@@ -111,30 +111,15 @@ def test_merge_stream_upsert(spark, tmp_path):
         spark.readStream.schema("k string, v long").option("header", True)
         .csv(str(src_dir))
     )
-    q = merge_stream(
-        stream, target, checkpoint_dir=str(tmp_path / "ck"), mode="upsert"
+    q = fold_stream(
+        stream,
+        # a batch may hold a key twice; set-oriented MERGE needs unique keys
+        lambda b: target.upsert(b.dropDuplicates(target.keys)),
+        checkpoint_dir=str(tmp_path / "ck"),
     )
     q.awaitTermination(60)
     rows = {r.k: r.v for r in target.read().collect()}
     assert rows == {"a": 1, "b": 2}
-
-
-@pytest.mark.parametrize("csv", ["", "k,v\na,1\n"], ids=["empty", "rows"])
-def test_merge_stream_unknown_mode_raises_on_driver(spark, tmp_path, csv):
-    src_dir = tmp_path / "incoming"
-    src_dir.mkdir()
-    if csv:
-        (src_dir / "b.csv").write_text(csv)
-    target = ParquetTable(spark, str(tmp_path / "t"), "k")
-    target.init("k string, v long")
-    stream = (
-        spark.readStream.schema("k string, v long").option("header", True)
-        .csv(str(src_dir))
-    )
-    with pytest.raises(ValueError, match="unknown merge_stream mode: bogus"):
-        merge_stream(stream, target, checkpoint_dir=str(tmp_path / "ck"), mode="bogus")
-    assert not (tmp_path / "ck").exists()  # no query was started
-    assert target.read().count() == 0
 
 
 def test_windowed_event_counts_stream_matches_batch(spark, tmp_path):
