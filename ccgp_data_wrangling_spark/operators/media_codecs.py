@@ -3605,13 +3605,36 @@ def audio_fingerprint64(payload: bytes, *, n_peaks: int = 8) -> int:
 # the 8×8 low-frequency block, threshold each AC coefficient against
 # the block median → a 63-bit fingerprint that survives re-encoding
 # and resizing (what byte-level hashing cannot do for images).
+#
+# Every sum in the block is correctly rounded (math.fsum over IEEE
+# products) and the DCT table comes from math.cos, so no BLAS kernel
+# or SIMD dispatch picked per CPU enters the hash: identical pixels
+# give one hash on every platform. A coefficient that TIES with the
+# median in exact arithmetic still sets its bit by rounding, not by
+# image content. Images that differ only by a constant brightness
+# share every AC coefficient, and on the 16×16 ramp 7c + 3i + 5j
+# 55 of the 63 coefficients sit exactly on the median (24 with an
+# added ⌊ij/3⌋ term). Such bits are fixed, but a re-encode flips them
+# freely; fixtures that need a margin between classes pick classes
+# whose coefficients all sit well away from the median.
 # ---------------------------------------------------------------------------
 
 _DCT_T32 = np.zeros((32, 32))
 for _u in range(32):
     _c32 = (1.0 / 32.0) ** 0.5 if _u == 0 else (2.0 / 32.0) ** 0.5
     for _x in range(32):
-        _DCT_T32[_u, _x] = _c32 * np.cos((2 * _x + 1) * _u * np.pi / 64.0)
+        _DCT_T32[_u, _x] = _c32 * math.cos((2 * _x + 1) * _u * math.pi / 64.0)
+
+
+def _dct_low8(small: np.ndarray) -> np.ndarray:
+    """8×8 low-frequency block of the orthonormal 2-D DCT of a 32×32
+    float64 array: ``T[:8] @ small @ T[:8].T`` with every sum
+    correctly rounded, so the result depends on the inputs alone."""
+    t8 = _DCT_T32[:8]
+    cols = (t8[:, :, None] * small[None, :, :]).transpose(0, 2, 1)
+    half = np.array([[math.fsum(p) for p in r] for r in cols.tolist()])
+    prods = half[:, None, :] * t8[None, :, :]
+    return np.array([[math.fsum(p) for p in r] for r in prods.tolist()])
 
 
 def phash64(px: np.ndarray) -> int:
@@ -3621,7 +3644,10 @@ def phash64(px: np.ndarray) -> int:
     resize_netpbm), BT.601 luma for color inputs, orthonormal 2-D DCT,
     8×8 low-frequency block, DC dropped, bit i set iff coefficient i
     exceeds the 63-coefficient median. Identical pixels → identical
-    hash on any platform (pure float64 arithmetic, no RNG)."""
+    hash on every platform: the block's sums are correctly rounded
+    (no BLAS), and there is no RNG. A bit whose coefficient ties with
+    the median in exact arithmetic comes from that rounding, not from
+    the image (see the section comment above)."""
     if px.ndim == 3 and px.shape[2] >= 3:
         g = (
             0.299 * px[..., 0].astype(np.float64)
@@ -3634,8 +3660,7 @@ def phash64(px: np.ndarray) -> int:
     rows = (np.arange(32) * h0) // 32
     cols = (np.arange(32) * w0) // 32
     small = g[rows][:, cols]
-    dct = _DCT_T32 @ small @ _DCT_T32.T
-    coeffs = dct[:8, :8].reshape(-1)[1:]  # drop DC
+    coeffs = _dct_low8(small).reshape(-1)[1:]  # drop DC
     med = float(np.median(coeffs))
     bits = 0
     for i, c in enumerate(coeffs):

@@ -1699,8 +1699,9 @@ def multimodal_wav_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Perceptual-hash image dedup through the driver gate: PGM payloads
 # whose pixel content depends ONLY on event_id % 30 (30 deterministic
 # gradient/moire patterns), so images of the same class are
-# pixel-identical and share a pHash, and the 30 class hashes are
-# pairwise distinct for these fixed patterns (asserted by
+# pixel-identical and share a pHash. The filter event_id % 20 = 7
+# reaches only classes 7, 17 and 27 (the values event_id % 30 can
+# then take); all 30 class hashes are pairwise distinct (asserted by
 # test_media_codecs — a kernel change that collides classes fails
 # there first). Duplicate groups are therefore a pure closed form of
 # event_id arithmetic: rep = min id of the class, size = class count.
@@ -1868,8 +1869,8 @@ def fingerprint_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bands, provably complete) → connected components → canonical-min
 # keep rule (operators/components.neardup_clusters' policy).
 #
-# Closed-form oracle: ten pattern classes chosen so their REAL pHashes
-# are pairwise ≥ 20 bits apart (regression-guarded in
+# Closed-form oracle: ten pattern classes whose pHashes are pairwise
+# ≥ 20 bits apart IN EXACT ARITHMETIC (regression-guarded in
 # test_media_codecs); per class the rows are a base image, a 2×
 # nearest-upscale (pHash-invariant, bit-identical), and arithmetic
 # "re-encode drift" twins at XOR distance 1-3. Intra-class rows all
@@ -1880,8 +1881,14 @@ def fingerprint_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every fingerprint from real pixel decodes.
 # ---------------------------------------------------------------------------
 
-#: pattern classes with pairwise pHash Hamming distance >= 20
-_PHASH_ND_CLASSES = [0, 1, 2, 3, 4, 5, 7, 9, 10, 12]
+#: pattern classes c of 7c + 3i + 5j + ⌊ij·(c mod 5)/3⌋ (16×16, mod 256)
+#: chosen from a 50-digit evaluation of phash64's DCT: in every class
+#: each AC coefficient but the median itself sits ≥ 0.26 from the
+#: median (rounding noise is ~1e-13), so no platform's rounding moves
+#: a bit, and the exact hashes are pairwise ≥ 20 bits apart. Brightness
+#: twins (0/5/10/15, 1/6) and classes with a coefficient on the median
+#: (7) are left out: their separating bits are rounding, not content.
+_PHASH_ND_CLASSES = [2, 3, 4, 9, 12, 14, 22, 26, 27, 28]
 
 _PHASH_ND_SQL = """
 SELECT event_id AS id,
